@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.lenient import lenient_cast as _lcast
+from .session import local_frame
 
 TIME_COLUMN = "__time"
 
@@ -323,7 +324,7 @@ class Catalog:
             if is_df_lookup(name):
                 return _lookup_frame(self.spark, name)
         m = self.lookup_map(name)
-        return self.spark.createDataFrame(list(m.items()), schema="k string, v string")
+        return local_frame(self.spark, list(m.items()), "k string, v string")
 
 
 def _promote(a, b):

@@ -20,6 +20,7 @@ from pyspark.sql import types as T
 
 from incubator_druid_spark.catalog import Catalog, TIME_COLUMN
 from incubator_druid_spark.plans.translator import prepare_frame
+from incubator_druid_spark.session import local_frame
 
 
 def time_boundary(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
@@ -125,7 +126,7 @@ def segment_metadata(query: dict, spark: SparkSession, catalog: Catalog) -> Data
     schema = ("column string, type string, hasMultipleValues boolean, "
               "cardinality long, minValue string, maxValue string, "
               "nullCount long, numRows long")
-    out = spark.createDataFrame(rows, schema=schema)
+    out = local_frame(spark, rows, schema)
 
     if analysis & {"rollup", "aggregators", "queryGranularity"}:
         # SegmentMetadataQuery.java:58-67 AnalysisTypes ROLLUP / AGGREGATORS /

@@ -8,14 +8,17 @@ map-side, one shuffle on the bucket key, merge in the same plan.
 Zero-filling: Druid emits a row for every granularity bucket in the query
 intervals even when no rows landed there (unless context skipEmptyBuckets).
 Empty buckets hold aggregator identity values (count → 0, sums → NULL in
-SQL-compatible mode).  We generate the bucket spine driver-side from the
-intervals (bucket count is bounded by interval/granularity, not data size —
-safe at any data scale) and left-join the aggregate onto it.  One nuance vs
-the reference: Druid additionally clips the spine to the datasource's
-EXISTING segment range (its timeline metadata is free; equivalent range
-discovery here would cost a scan), so an interval reaching past the data
-yields extra — individually correct — empty buckets; skipEmptyBuckets
-restores exact parity for such queries.
+SQL-compatible mode).  The bucket spine is enumerated driver-side by
+``Granularity.spine()``, the one enumeration (time zone, calendar periods and
+origin are exact; the bucket count is bounded by interval/granularity, not by
+data size).  It enters the plan as a local relation (``session.local_frame``:
+an Arrow table of epoch millis, planned as a LocalTableScan that runs with no
+Python worker) and the aggregate is left-joined onto it.  Like Druid's
+broker, the spine is clipped to the datasource's segment timeline: parquet
+footer statistics give [minTime, maxTime], and segment days come from the
+`__bucket` partition listing (itself a local relation) or a distinct-days
+scan.  Nothing is built when zero-fill cannot add a bucket
+(skipEmptyBuckets, or no filter at day-or-coarser granularity).
 """
 
 from __future__ import annotations
@@ -31,6 +34,7 @@ from incubator_druid_spark.model.intervals import (interval_predicate,
 from incubator_druid_spark.operators.aggregations import (compile_aggregations,
                                                           compile_post_aggregations)
 from incubator_druid_spark.plans.translator import prepare_frame
+from incubator_druid_spark.session import local_frame
 
 _ZERO_FILL_AGGS = {"count", "longSum", "doubleSum", "floatSum", "cardinality",
                    "hyperUnique"}
@@ -128,15 +132,22 @@ def _zero_fill(out: DataFrame, query: dict, gran, spark: SparkSession,
                catalog) -> DataFrame:
     if query.get("context", {}).get("skipEmptyBuckets"):
         return out
+    p = gran.period
+    day_or_coarser = p is not None and (p.is_calendar
+                                        or p.millis >= 86_400_000)
+    filtered = query.get("filter") is not None
+    if not filtered and day_or_coarser:
+        # no dim filter → the aggregated buckets and the segment timeline see
+        # the SAME rows, so every covered day-or-coarser bucket is already
+        # present: zero-fill is a no-op
+        return out
     ivs = parse_intervals(query.get("intervals"))
     if not ivs:
         return out  # unbounded → cannot enumerate buckets
-    spine_ms: list[int] = []
-    for start, end in ivs:
-        spine_ms.extend(gran.spine(start, end))
+    spine_ms = sorted({m for start, end in ivs
+                       for m in gran.spine(start, end)})
     if not spine_ms or len(spine_ms) > 500_000:
         return out
-    spine_ms = sorted(set(spine_ms))
     # exact timeline condensation at the OUTER edges: Druid's last segment
     # carries the data's true extent, so hour buckets of a partially-filled
     # final day don't zero-fill past maxTime (testTimeseriesQueryZeroFilling
@@ -145,8 +156,9 @@ def _zero_fill(out: DataFrame, query: dict, gran, spark: SparkSession,
     # unavailable footers (remote store, stats missing) keep the coarser
     # partition/day coverage.
     from incubator_druid_spark.plans.datasource import resolve_datasource
-    src0 = resolve_datasource(query["dataSource"], spark, catalog)
-    extent = _footer_time_extent(src0)
+    src = resolve_datasource(query["dataSource"], spark, catalog)
+    files = _relation_files(src)
+    extent = _footer_time_extent(src, files)
     if extent is not None:
         mn, mx = extent
         lo = 0
@@ -158,8 +170,8 @@ def _zero_fill(out: DataFrame, query: dict, gran, spark: SparkSession,
         spine_ms = [m for m in spine_ms[lo:] if m <= mx]
         if not spine_ms:
             return out
-    spine = spark.createDataFrame([(m,) for m in spine_ms], "ms long") \
-        .select(F.timestamp_millis(F.col("ms")).alias(TIME_COLUMN))
+    spine = local_frame(spark, [(m,) for m in spine_ms],
+                        f"{TIME_COLUMN} timestamp")
     # Druid only produces buckets where SEGMENTS exist: the broker condenses
     # query intervals to the segment timeline before zero-filling, so a
     # 1970-2020 query over 2011 data returns only 2011 buckets
@@ -174,23 +186,13 @@ def _zero_fill(out: DataFrame, query: dict, gran, spark: SparkSession,
     # interval-pruned only.  Lazy broadcast semi-join keeps translate()
     # action-free; the distinct-days set is #days-sized, the analogue of
     # Druid's in-memory segment timeline.
-    p = gran.period
-    day_or_coarser = p is not None and (p.is_calendar
-                                        or p.millis >= 86_400_000)
-    if query.get("filter") is None:
-        # no dim filter → the aggregated buckets and the segment timeline
-        # see the SAME rows, so coverage derives from `out` without a second
-        # source scan: at day-or-coarser granularity every covered bucket is
-        # already present (zero-fill is a no-op), and for sub-day buckets
-        # the day set is the distinct days of the present buckets.
-        if day_or_coarser:
-            return out
+    if not filtered:
+        # no dim filter → sub-day coverage is the distinct days of the
+        # present buckets, without a second source scan
         seg_days = out.select(F.date_trunc("day", F.col(TIME_COLUMN))
                               .alias("__seg_day")).distinct()
     else:
-        from incubator_druid_spark.plans.datasource import resolve_datasource
-        src = resolve_datasource(query["dataSource"], spark, catalog)
-        seg_days = _bucket_partition_days(src, ivs, spark)
+        seg_days = _bucket_partition_days(src, files, ivs, spark)
         if seg_days is None:
             # non-bucketed source: fall back to a distinct-days scan of the
             # interval-pruned source (reads only the __time column)
@@ -205,7 +207,9 @@ def _zero_fill(out: DataFrame, query: dict, gran, spark: SparkSession,
         cond = (F.date_trunc("day", F.col(TIME_COLUMN))
                 == F.col("__seg_day"))
     spine = spine.join(F.broadcast(seg_days), cond, "left_semi")
-    joined = F.broadcast(spine).join(out, on=TIME_COLUMN, how="left")
+    # no hint: the spine is the preserved side (Spark cannot build it) and
+    # AQE broadcasts `out` from its exact post-aggregation size
+    joined = spine.join(out, on=TIME_COLUMN, how="left")
     # aggregator identity values for empty buckets
     fills = []
     for spec in query.get("aggregations") or []:
@@ -244,22 +248,31 @@ def _zero_fill(out: DataFrame, query: dict, gran, spark: SparkSession,
     return joined.select(TIME_COLUMN, *fills)
 
 
-def _footer_time_extent(src: DataFrame) -> tuple[int, int] | None:
-    """[min, max] of __time in epoch millis from parquet FOOTER row-group
-    statistics — driver-side metadata only, the analogue of reading segment
-    descriptors off Druid's timeline (DataSegment interval bounds).  Returns
-    None (caller keeps day-grain coverage) for join/union frames, non-local
-    or non-parquet storage, too many files, or absent/odd-typed stats."""
-    import datetime
+def _relation_files(src: DataFrame) -> list[str] | None:
+    """The input files of a SINGLE-relation frame, or None.  A join/union
+    frame's inputFiles() mixes every input's files, so neither its footer
+    extent nor its partition listing is the datasource's segment timeline."""
     import re
 
     try:
         plan = src._jdf.queryExecution().analyzed().toString()
         if re.search(r"(?m)^\s*[:+-]*\s*(?:Join|Union)\b", plan):
             return None
-        files = src.inputFiles()
+        return src.inputFiles()
     except Exception:  # pragma: no cover - non-file-backed frame
         return None
+
+
+def _footer_time_extent(src: DataFrame,
+                        files: list[str] | None) -> tuple[int, int] | None:
+    """[min, max] of __time in epoch millis from parquet FOOTER row-group
+    statistics — driver-side metadata only, the analogue of reading segment
+    descriptors off Druid's timeline (DataSegment interval bounds).  Returns
+    None (caller keeps day-grain coverage) for join/union frames (``files``
+    None), non-local or non-parquet storage, too many files, or
+    absent/odd-typed stats."""
+    import datetime
+
     if not files or len(files) > 4096 or "__time" not in src.columns:
         return None
     # memoize per file LIST: segment files are immutable (writes create
@@ -315,29 +328,20 @@ def _footer_time_extent(src: DataFrame) -> tuple[int, int] | None:
 _EXTENT_CACHE: dict = {}
 
 
-def _bucket_partition_days(src: DataFrame, ivs, spark) -> DataFrame | None:
+def _bucket_partition_days(src: DataFrame, files: list[str] | None, ivs,
+                           spark) -> DataFrame | None:
     """Segment-day coverage from the `__bucket` PARTITION LISTING — file
     metadata only, zero data read (the 100-TB analogue of Druid's in-memory
     segment timeline in CachingClusteredClient).  Tables written by
     sources/ingest partition by __bucket (yyyy-MM-dd'T'HH of the floored
     segment granularity), so the directory names enumerate exactly the
-    segments that exist.  Returns a tiny driver-built (__seg_day) frame, or
-    None when the source isn't __bucket-partitioned / isn't file-backed
-    (caller falls back to a distinct-days scan)."""
+    segments that exist.  Returns a tiny local (__seg_day) frame, or None
+    when the source isn't __bucket-partitioned / isn't a single file-backed
+    relation (caller falls back to a distinct-days scan)."""
     import datetime
     import re
 
-    if "__bucket" not in src.columns:
-        return None
-    try:
-        # a join/union-derived frame's inputFiles() mixes every input's
-        # files — coverage would be mis-attributed; only a single-relation
-        # frame's partition listing IS its segment timeline
-        plan = src._jdf.queryExecution().analyzed().toString()
-        if re.search(r"(?m)^\s*[:+-]*\s*(?:Join|Union)\b", plan):
-            return None
-        files = src.inputFiles()
-    except Exception:
+    if "__bucket" not in src.columns or not files:
         return None
     vals = set()
     for f in files:
@@ -346,12 +350,11 @@ def _bucket_partition_days(src: DataFrame, ivs, spark) -> DataFrame | None:
             vals.add(m.group(1))
     if not vals:
         return None
-    utc = datetime.timezone.utc
     hours = set()
     for v in vals:
         try:
             hours.add(datetime.datetime.strptime(v, "%Y-%m-%dT%H")
-                      .replace(tzinfo=utc))
+                      .replace(tzinfo=datetime.timezone.utc))
         except ValueError:
             return None  # unexpected layout — let the scan path decide
     # segment span: hour-partitioned tables (any nonzero hour component)
@@ -365,13 +368,9 @@ def _bucket_partition_days(src: DataFrame, ivs, spark) -> DataFrame | None:
     hour_ms, day_ms = 3_600_000, 86_400_000
     span_ms = hour_ms if any(h.hour for h in hours) else day_ms
     days = set()
-    for h in sorted(hours):
+    for h in hours:
         ms = int(h.timestamp() * 1000)
         if any(s < ms + span_ms and ms < e for s, e in ivs):
-            # tz-AWARE: a naive datetime would be converted through the
-            # OS-local zone by createDataFrame (time.mktime), shifting the
-            # seg-day spine off UTC on non-UTC hosts and emptying the
-            # semi-join
-            days.add(datetime.datetime(h.year, h.month, h.day, tzinfo=utc))
-    pruned = [(d,) for d in sorted(days)]
-    return spark.createDataFrame(pruned, "__seg_day timestamp")
+            days.add(ms - ms % day_ms)
+    return local_frame(spark, [(d,) for d in sorted(days)],
+                       "__seg_day timestamp")

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from incubator_druid_spark.catalog import Catalog
+from incubator_druid_spark.session import local_frame
 
 
 def resolve_datasource(spec, spark, catalog: Catalog) -> DataFrame:
@@ -94,7 +95,8 @@ def resolve_datasource(spec, spark, catalog: Catalog) -> DataFrame:
                 # floats arrive as Python floats even for LONG columns in
                 # JSON — coerce row values to the declared type
                 import pyspark.sql.types as T
-                schema = T._parse_datatype_string(", ".join(fields))
+                ddl = ", ".join(fields)
+                schema = T._parse_datatype_string(ddl)
                 conv = []
                 for r in rows:
                     conv.append(tuple(
@@ -106,7 +108,8 @@ def resolve_datasource(spec, spark, catalog: Catalog) -> DataFrame:
                         else str(v) if isinstance(f.dataType, T.StringType)
                         else v
                         for v, f in zip(r, schema.fields)))
-                return spark.createDataFrame(conv, schema=schema)
+                return local_frame(spark, conv, ddl)
+        # no declared types (or a COMPLEX/ARRAY one): Spark infers them
         return spark.createDataFrame(rows, schema=cols)
     if t == "globalTable":
         # query/GlobalTableDataSource.java — broadcast-replicated table

@@ -8,6 +8,9 @@ Design notes (100 TB target):
 - shuffle.partitions defaults to cores locally; on a real cluster this is
   overridden (AQE coalesces down, so oversizing is safe).
 - Arrow enabled for the few pandas-UDF paths (sketch interop, multimodal).
+- Driver-built frames (zero-fill spine, lookups, metadata rows, inline
+  datasources, SQL system views) go through ``local_frame``: an Arrow table
+  planned as a LocalRelation, scanned with no Python worker.
 - Session timezone pinned to UTC: Druid is UTC-millis end to end
   (core/.../java/util/common/granularity/ — all granularities default UTC),
   and the DuckDB oracle compares UTC-naive timestamps.
@@ -17,7 +20,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "incubator-druid-spark", master: str | None = None,
@@ -74,3 +77,32 @@ def get_spark(app_name: str = "incubator-druid-spark", master: str | None = None
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A small driver-built frame as a Catalyst ``LocalRelation``.
+
+    A Python list given to ``createDataFrame`` ships through a pickled
+    ``PythonRDD``, so every task that scans the frame forks a Python
+    worker.  An Arrow table plans a ``LocalTableScan`` that runs in the JVM
+    alone.  ``rows`` is a sequence of tuples in ``schema`` (a DDL string)
+    order.  ``timestamp`` columns take epoch millis and become timestamps
+    JVM-side via ``timestamp_millis``, so the host time zone never enters."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    fields = T._parse_datatype_string(schema).fields
+    wire = T.StructType([
+        T.StructField(f.name, T.LongType())
+        if isinstance(f.dataType, T.TimestampType) else f for f in fields])
+    cols = list(zip(*rows)) or [()] * len(fields)
+    table = pa.table([pa.array(c, type=to_arrow_type(f.dataType))
+                      for c, f in zip(cols, wire.fields)],
+                     names=wire.fieldNames())
+    df = spark.createDataFrame(table, schema=wire)
+    times = {f.name: F.timestamp_millis(
+                 F.col("`" + f.name.replace("`", "``") + "`"))
+             for f in fields if isinstance(f.dataType, T.TimestampType)}
+    return df.withColumns(times) if times else df

@@ -28,6 +28,7 @@ import re
 from pyspark.sql import SparkSession
 
 from incubator_druid_spark.catalog import Catalog
+from incubator_druid_spark.session import local_frame
 
 # common ISO periods → fixed millis (calendar periods handled via date_trunc)
 _FIXED = {
@@ -456,16 +457,15 @@ def _register_metadata_views_inner(spark: SparkSession,
 
     tables = [("druid", "druid", n, "TABLE") for n in catalog.names()]
     tables += [("druid", "view", v, "VIEW") for v in sorted(_SQL_VIEWS)]
-    spark.createDataFrame(
-        tables or [("druid", "druid", "", "TABLE")],
+    local_frame(
+        spark, tables,
         "TABLE_CATALOG string, TABLE_SCHEMA string, TABLE_NAME string, "
         "TABLE_TYPE string") \
-        .filter("TABLE_NAME != ''") \
         .createOrReplaceTempView("information_schema_tables")
 
     # INFORMATION_SCHEMA.SCHEMATA (InformationSchema.java SCHEMATA_SIGNATURE)
-    spark.createDataFrame(
-        [("druid", s) for s in
+    local_frame(
+        spark, [("druid", s) for s in
          ("lookup", "view", "druid", "sys", "INFORMATION_SCHEMA")],
         "CATALOG_NAME string, SCHEMA_NAME string") \
         .createOrReplaceTempView("information_schema_schemata")
@@ -506,18 +506,16 @@ def _register_metadata_views_inner(spark: SparkSession,
             dt = _druid_type(f.dataType)
             cols.append(("druid", "view", vname, f.name, i, dt,
                          "YES" if f.nullable else "NO", _jdbc_type(dt)))
-    spark.createDataFrame(
-        cols or [("", "", "", "", 0, "", "", 0)],
+    local_frame(
+        spark, cols,
         "TABLE_CATALOG string, TABLE_SCHEMA string, TABLE_NAME string, "
         "COLUMN_NAME string, ORDINAL_POSITION int, DATA_TYPE string, "
         "IS_NULLABLE string, JDBC_TYPE int") \
-        .filter("TABLE_NAME != ''") \
         .createOrReplaceTempView("information_schema_columns")
-    spark.createDataFrame(
-        segs or [("", "", "", 0, 0, 0)],
+    local_frame(
+        spark, segs,
         "segment_id string, datasource string, start string, "
         "size long, is_published int, is_available int") \
-        .filter("segment_id != ''") \
         .createOrReplaceTempView("sys_segments")
 
     # sys.servers / sys.tasks (SystemSchema.java): in this engine the whole
@@ -525,16 +523,15 @@ def _register_metadata_views_inner(spark: SparkSession,
     # driver), and batch ingests run synchronously so the task table drains
     # to empty.  Shapes match the reference so client dashboards parse.
     sc = spark.sparkContext
-    spark.createDataFrame(
-        [(f"{sc.master}", "historical", sc.master.split("[")[0],
-          int(sc.defaultParallelism), 0)],
+    local_frame(
+        spark, [(f"{sc.master}", "historical", sc.master.split("[")[0],
+                 int(sc.defaultParallelism), 0)],
         "server string, server_type string, tier string, "
         "curr_size long, max_size long") \
         .createOrReplaceTempView("sys_servers")
-    spark.createDataFrame(
-        [("", "", "", "")],
+    local_frame(
+        spark, [],
         "task_id string, type string, datasource string, status string") \
-        .filter("task_id != ''") \
         .createOrReplaceTempView("sys_tasks")
 
 
@@ -1716,7 +1713,8 @@ def druid_sql(spark: SparkSession, sql: str, catalog: Catalog | None = None,
         tables = sorted({t for t in (catalog.names() if catalog else [])
                          if t in referenced})
         res = _json.dumps([{"name": t, "type": "DATASOURCE"} for t in tables])
-        return spark.createDataFrame([(plan, res)], "PLAN string, RESOURCES string")
+        return local_frame(spark, [(plan, res)],
+                           "PLAN string, RESOURCES string")
     # Execute the dialect under its fixed knobs (non-ANSI + sqlTimeZone,
     # default UTC) — a clone only when the host session doesn't already
     # match; see _exec_session.
@@ -1817,19 +1815,11 @@ def druid_sql(spark: SparkSession, sql: str, catalog: Catalog | None = None,
             # __time reproduces that deterministically; it is only added
             # when the query can reference it (star expansion over
             # lookup.<name> must stay the two-column (k, v) schema).
-            import datetime as _dt
-            rows3 = [(k, v,
-                      _dt.datetime(1970, 1, 1)
-                      + _dt.timedelta(milliseconds=i))
-                     for i, (k, v) in enumerate(mapping.items())]
-            spark.createDataFrame(rows3 or [("", "", None)],
-                                  "k string, v string, __time timestamp") \
-                .filter("k != '' OR v != ''") \
+            rows3 = [(k, v, i) for i, (k, v) in enumerate(mapping.items())]
+            local_frame(spark, rows3, "k string, v string, __time timestamp") \
                 .createOrReplaceTempView(f"lookup_{lk}")
         else:
-            spark.createDataFrame(list(mapping.items()) or [("", "")],
-                                  "k string, v string") \
-                .filter("k != '' OR v != ''") \
+            local_frame(spark, list(mapping.items()), "k string, v string") \
                 .createOrReplaceTempView(f"lookup_{lk}")
     # view schema (sql/.../calcite/view/ViewManager + ViewSchema): a view is
     # a registered SQL macro exposed as table view.<name>; planned here

@@ -138,15 +138,18 @@ def test_subday_interval_over_hour_segments_no_spurious_fill(
 
 
 def test_bucket_listing_rejects_join_frames(spark, tmp_path):
-    from incubator_druid_spark.operators.timeseries import \
-        _bucket_partition_days
+    from incubator_druid_spark.operators.timeseries import (
+        _bucket_partition_days, _relation_files)
     cat = _mk_hour_bucketed(spark, tmp_path)
     src = cat.table("hourly")
     joined = src.join(src.select("typ").distinct(), on="typ")
     ivs = [(1704067200000, 1704153600000)]
-    assert _bucket_partition_days(joined, ivs, spark) is None
+    assert _relation_files(joined) is None
+    assert _bucket_partition_days(joined, _relation_files(joined), ivs,
+                                  spark) is None
     # the single-relation frame still resolves from the listing
-    assert _bucket_partition_days(src, ivs, spark) is not None
+    assert _bucket_partition_days(src, _relation_files(src), ivs,
+                                  spark) is not None
 
 
 # -- 5. JPEG BitWriter accumulator is bounded -------------------------------

@@ -234,3 +234,69 @@ def test_timeseries_zero_fill_no_filter_single_scan(spark, catalog):
                           "value": "click"}}
     df2 = translate(q2, spark, catalog)
     assert df2.count() > 0
+
+
+def _assert_local_scan(df):
+    """Driver-built frames plan as a LocalTableScan, never as a pickled
+    Python RDD (`Scan ExistingRDD`) that forks a Python worker per task."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
+@pytest.mark.parametrize("granularity, filt", [
+    ("day", {"type": "selector", "dimension": "event_type",
+             "value": "click"}),
+    ("hour", None),
+])
+def test_zero_fill_spine_is_local_relation(spark, catalog, granularity,
+                                           filt):
+    q = {"queryType": "timeseries", "dataSource": "events",
+         "granularity": granularity, "filter": filt,
+         "intervals": ["2024-01-01T00:00:00Z/2024-01-04T00:00:00Z"],
+         "aggregations": [{"type": "count", "name": "cnt"}]}
+    _assert_local_scan(translate(q, spark, catalog))
+
+
+def test_lookup_frames_are_local_relations(spark, foo_catalog):
+    from incubator_druid_spark.sql.functions import druid_sql
+    q = {"queryType": "scan", "columns": ["k", "v"],
+         "dataSource": {"type": "lookup", "lookup": "lookyloo"}}
+    _assert_local_scan(translate(q, spark, foo_catalog))
+    df = druid_sql(spark, "SELECT k, v FROM lookup.lookyloo", foo_catalog)
+    _assert_local_scan(df)
+    assert sorted(r["k"] for r in df.collect()) == \
+        ["6", "a", "abc", "nosuchkey"]
+
+
+def test_typed_inline_datasource_is_local_relation(spark, foo_catalog):
+    q = {"queryType": "scan", "columns": ["k", "n"],
+         "dataSource": {"type": "inline", "columnNames": ["k", "n"],
+                        "columnTypes": ["STRING", "LONG"],
+                        "rows": [["a", 1.0], ["b", None]]}}
+    df = translate(q, spark, foo_catalog)
+    _assert_local_scan(df)
+    assert [(r["k"], r["n"]) for r in df.collect()] == [("a", 1), ("b", None)]
+
+
+# createDataFrame sites kept beside session.local_frame, with the reason
+_CREATE_DATAFRAME_ALLOWED = {
+    "session.py": "local_frame itself",
+    "plans/datasource.py": "an inline datasource without declared column "
+                           "types needs Spark's type inference",
+    "functions/lookups.py": "a lookup past the literal-map size uploads a "
+                            "pandas frame and pins it with localCheckpoint",
+}
+
+
+def test_driver_built_frames_go_through_local_frame():
+    """A list passed to createDataFrame plans a pickled Python RDD; every
+    other driver-built frame on the query path must use local_frame."""
+    from pathlib import Path
+    root = Path(__file__).resolve().parents[1] / "incubator_druid_spark"
+    found = {}
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        n = path.read_text().count("createDataFrame(")
+        if n and not rel.startswith("pipeline/"):
+            found[rel] = n
+    assert found == {rel: 1 for rel in _CREATE_DATAFRAME_ALLOWED}, found

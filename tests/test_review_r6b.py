@@ -218,13 +218,14 @@ def test_footer_extent_memoized(spark, tmp_path):
     df.write.mode("overwrite").parquet(p)
     src = spark.read.parquet(p)
     ts_mod._EXTENT_CACHE.clear()
-    first = ts_mod._footer_time_extent(src)
+    files = ts_mod._relation_files(src)
+    first = ts_mod._footer_time_extent(src, files)
     assert first is not None
     assert len(ts_mod._EXTENT_CACHE) == 1
     key = next(iter(ts_mod._EXTENT_CACHE))
     # poison the cached value: a second call must serve it (no recompute)
     ts_mod._EXTENT_CACHE[key] = (123, 456)
-    assert ts_mod._footer_time_extent(src) == (123, 456)
+    assert ts_mod._footer_time_extent(src, files) == (123, 456)
 
 
 # -- catalog staleness: external write into an existing partition dir -------

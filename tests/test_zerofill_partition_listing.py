@@ -47,12 +47,12 @@ def test_filtered_zero_fill_uses_partition_listing(spark, tmp_path):
          "aggregations": [{"type": "longSum", "name": "s",
                            "fieldName": "v"}]}
     df = translate(q, spark, cat)
-    # exactly ONE scan of the fact table: coverage came from the listing
-    # (a LocalTableScan), not a second parquet scan
+    # exactly ONE scan of the fact table: coverage came from the listing,
+    # and the listing and the spine are local relations (LocalTableScan),
+    # never a pickled Python RDD that forks a Python worker per task
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("gapped") <= plan.count("LocalTableScan") \
-        or sum(1 for ln in plan.splitlines()
-               if "Scan parquet" in ln and "gapped" in ln) == 1, plan
+    assert plan.count("FileScan parquet") == 1, plan
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
     got = [(r["__time"], r["s"]) for r in df.collect()]
     d = datetime.datetime
     assert got == [
