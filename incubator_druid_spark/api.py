@@ -11,10 +11,20 @@ the request body dict and return the serialized response, so any HTTP server
 (stdlib http.server, flask, etc.) can mount them with a two-line handler.  No
 server dependency is baked in.
 
+Result path: each query is collected with ONE Spark action.  A rendering
+projection computes Druid's JSON values JVM-side — instants as
+``yyyy-MM-dd'T'HH:mm:ss.SSSXXX`` in the frame's session zone (UTC for native
+queries, sqlTimeZone for SQL), so the host machine's zone never enters;
+bytes as hex; NaN/±Inf as null — and ``toArrow()`` ships the rows.  The
+native envelopes and the five SQL result formats are then built from
+positional rows, so duplicate output column names stay distinct in the
+array formats.
+
 Query context options (query/QueryContexts.java): `skipEmptyBuckets` and
 `grandTotal` are honored in the timeseries translation; `timeout`/laning are
 deferred to Spark's own job cancellation and scheduler pools (orthogonal to
-translation — see SURVEY §2.12).
+translation — see SURVEY §2.12); `useCache`/`populateCache` are accepted and
+ignored, as on a Druid broker with its result cache off.
 """
 
 from __future__ import annotations
@@ -22,56 +32,121 @@ from __future__ import annotations
 import csv
 import io
 import json
-import math
-from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from incubator_druid_spark.catalog import Catalog, TIME_COLUMN
 from incubator_druid_spark.plans.translator import translate
 
 
-def _jsonable(v: Any, tz=None) -> Any:
-    """Druid's JSON rendering: instants with exactly 3 fractional digits
-    (ISODateTimeFormat.dateTime), suffixed 'Z' in UTC or with the query
-    timezone's offset under sqlTimeZone ('1999-12-31T16:00:00.000-08:00'
-    — SqlResourceTest testTimestampsInResponseLosAngelesTimeZone); DATEs
-    as the midnight instant of that calendar day in the query zone."""
-    import datetime
+# ISODateTimeFormat.dateTime: exactly 3 fractional digits, then 'Z' at a
+# zero offset or the zone's '-08:00'-style offset
+_INSTANT = "yyyy-MM-dd'T'HH:mm:ss.SSSXXX"
 
-    if isinstance(v, datetime.datetime):
-        if tz is not None:
-            # collect() returns naive machine-local wall time; pin the
-            # instant explicitly, then render in the query zone
-            aware = v.astimezone() if v.tzinfo is None else v
-            s = aware.astimezone(tz).isoformat(timespec="milliseconds")
-            return s[:-6] + "Z" if s.endswith("+00:00") else s
-        return v.isoformat(timespec="milliseconds") \
-            + ("Z" if v.tzinfo is None else "")
-    if isinstance(v, datetime.date):
-        if tz is None:
-            return v.isoformat()
-        s = datetime.datetime.combine(v, datetime.time(), tzinfo=tz) \
-            .isoformat(timespec="milliseconds")
-        return s[:-6] + "Z" if s.endswith("+00:00") else s
-    if isinstance(v, (bytes, bytearray)):
-        return v.hex()
-    if isinstance(v, float) and (math.isnan(v) or math.isinf(v)):
+# types whose values Spark renders before they cross to Python; intervals
+# become strings (Arrow carries no year-month interval, JSON no duration)
+_RENDERED = (T.TimestampType, T.TimestampNTZType, T.DateType, T.BinaryType,
+             T.FloatType, T.DoubleType, T.DayTimeIntervalType,
+             T.YearMonthIntervalType, T.CalendarIntervalType)
+
+
+def _holds(t: T.DataType, kinds) -> bool:
+    """Whether t, or a type nested in it (array elements, map values,
+    struct fields), is one of ``kinds``."""
+    if isinstance(t, kinds):
+        return True
+    if isinstance(t, T.ArrayType):
+        return _holds(t.elementType, kinds)
+    if isinstance(t, T.MapType):
+        return _holds(t.valueType, kinds)
+    if isinstance(t, T.StructType):
+        return any(_holds(f.dataType, kinds) for f in t.fields)
+    return False
+
+
+def _sql_str(s: str) -> str:
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _render(c: str, t: T.DataType, date_pattern: str, depth: int = 0) -> str:
+    """SQL for Druid's JSON value of ``c`` (a column or lambda variable of
+    type t): instants in the frame's session zone
+    ('2000-01-01T00:00:00.000Z' under UTC, '1999-12-31T16:00:00.000-08:00'
+    under America/Los_Angeles — SqlResourceTest
+    testTimestampsInResponseLosAngelesTimeZone; a TIMESTAMP_NTZ wall clock
+    is the UTC instant with those digits, as the catalog reads a zone-less
+    time column), DATEs by ``date_pattern``, bytes as lower-case hex,
+    NaN/±Inf as null.  SQL text rather than Column objects: the whole
+    projection then costs one py4j call instead of several per column."""
+    if not _holds(t, _RENDERED):
+        return c
+    x = f"x{depth}"
+    if isinstance(t, T.ArrayType):
+        return f"transform({c}, {x} -> " \
+               f"{_render(x, t.elementType, date_pattern, depth + 1)})"
+    if isinstance(t, T.MapType):
+        return f"transform_values({c}, (k{depth}, {x}) -> " \
+               f"{_render(x, t.valueType, date_pattern, depth + 1)})"
+    if isinstance(t, T.StructType):
+        fields = ", ".join(
+            _sql_str(f.name) + ", " + _render(
+                f"{c}.`{f.name.replace('`', '``')}`", f.dataType,
+                date_pattern, depth)
+            for f in t.fields)
+        return f"CASE WHEN {c} IS NOT NULL THEN named_struct({fields}) END"
+    if isinstance(t, T.TimestampNTZType):
+        c = f"timestamp_micros(timestampdiff(MICROSECOND, " \
+            f"TIMESTAMP_NTZ'1970-01-01 00:00:00', {c}))"
+    if isinstance(t, (T.TimestampType, T.TimestampNTZType)):
+        return f"date_format({c}, {_sql_str(_INSTANT)})"
+    if isinstance(t, T.DateType):
+        return f"date_format({c}, {_sql_str(date_pattern)})"
+    if isinstance(t, T.BinaryType):
+        return f"lower(hex({c}))"
+    if isinstance(t, (T.FloatType, T.DoubleType)):
+        return f"CASE WHEN NOT (isnan({c}) OR abs({c}) = double('Infinity'))" \
+               f" THEN {c} END"
+    return f"CAST({c} AS STRING)"
+
+
+def _values(col, t: T.DataType) -> list:
+    """One Arrow column as Python values.  Arrow hands a map over as
+    (key, value) pairs, so map columns go through _dicts."""
+    if _holds(t, T.MapType):
+        return [_dicts(v, t) for v in col.to_pylist()]
+    return col.to_pylist()
+
+
+def _dicts(v, t: T.DataType):
+    """A map value (nested anywhere in v) as the JSON object Druid sends."""
+    if v is None:
         return None
-    if isinstance(v, list):
-        return [_jsonable(x, tz) for x in v]
-    if isinstance(v, dict):
-        return {k: _jsonable(x, tz) for k, x in v.items()}
+    if isinstance(t, T.MapType):
+        return {k: _dicts(x, t.valueType) for k, x in v}
+    if isinstance(t, T.ArrayType):
+        return [_dicts(x, t.elementType) for x in v]
+    if isinstance(t, T.StructType):
+        return {f.name: _dicts(v[f.name], f.dataType) for f in t.fields}
     return v
 
 
-def _rows(df: DataFrame, limit: int | None = None, tz=None) -> list[dict]:
-    it = df.toLocalIterator() if limit is None else iter(df.limit(limit).collect())
-    out = []
-    for r in it:
-        out.append({k: _jsonable(v, tz)
-                    for k, v in r.asDict(recursive=True).items()})
-    return out
+def _collect(df: DataFrame, date_pattern: str) -> list[tuple]:
+    """The query's rows as positional tuples, from ONE Spark action: the
+    rendering projection (see _render) and ``toArrow()``.  The projection
+    addresses columns by name; only when two output names collide (two
+    joined tables both exposing 'k', or 'K' and 'k') are they renamed by
+    position first, so each stays distinct."""
+    fields = df.schema.fields
+    names = [f.name for f in fields]
+    if len({n.lower() for n in names}) < len(names):
+        names = [f"_{i}" for i in range(len(fields))]
+        df = df.toDF(*names)
+    table = df.selectExpr(*[
+        f"{_render('`' + n.replace('`', '``') + '`', f.dataType, date_pattern)}"
+        f" AS _{i}" for i, (n, f) in enumerate(zip(names, fields))]).toArrow()
+    return list(zip(*[_values(col, f.dataType)
+                      for col, f in zip(table.columns, fields)]))
 
 
 class QueryTimeoutError(TimeoutError):
@@ -80,11 +155,13 @@ class QueryTimeoutError(TimeoutError):
     Spark job group is cancelled, interrupting running tasks)."""
 
 
-def _rows_timed(df: DataFrame, timeout_ms, tz=None) -> list[dict]:
-    """Collect with an optional wall-clock budget.  The collect runs in a
+def _collect_timed(df: DataFrame, timeout_ms, date_pattern: str) -> list[tuple]:
+    """_collect with an optional wall-clock budget.  The collect runs in a
     worker thread under a dedicated Spark job group (a thread-local property,
-    so it must be set inside that thread); on expiry the group is cancelled —
-    executors interrupt the tasks — and QueryTimeoutError surfaces.
+    so it must be set inside that thread); the thread inherits the request
+    thread's other local properties, so the lane/priority scheduler pool
+    holds.  On expiry the group is cancelled — executors interrupt the
+    tasks — and QueryTimeoutError surfaces.
 
     Limitation: job-group cancellation reaches SUBMITTED jobs only.  Driver
     -side work before submission — analysis, optimization, and especially
@@ -94,9 +171,11 @@ def _rows_timed(df: DataFrame, timeout_ms, tz=None) -> list[dict]:
     abandoned worker thread after the timeout fires.  That is a Spark-core
     property, not something this wrapper can bound."""
     if not timeout_ms:
-        return _rows(df, tz=tz)
+        return _collect(df, date_pattern)
     import threading
     import uuid
+
+    from pyspark import InheritableThread
 
     sc = df.sparkSession.sparkContext
     group = f"druid-query-{uuid.uuid4().hex[:12]}"
@@ -107,13 +186,13 @@ def _rows_timed(df: DataFrame, timeout_ms, tz=None) -> list[dict]:
         sc.setJobGroup(group, "query with context.timeout",
                        interruptOnCancel=True)
         try:
-            result.append(_rows(df, tz=tz))
+            result.append(_collect(df, date_pattern))
         except Exception as ex:  # noqa: BLE001 — re-raised on the caller thread
             error.append(ex)
         finally:
             sc.setJobGroup(None, None)
 
-    t = threading.Thread(target=run, daemon=True)
+    t = InheritableThread(run, daemon=True)
     t.start()
     t.join(float(timeout_ms) / 1000.0)
     if t.is_alive():
@@ -159,33 +238,49 @@ def native_query(body: dict, spark: SparkSession, catalog: Catalog) -> list[dict
     others → plain row objects."""
     qt = body["queryType"]
     df = translate(body, spark, catalog)
-    rows = _rows_timed(df, (body.get("context") or {}).get("timeout"))
-
-    if qt == "timeseries":
-        return [{"timestamp": r.pop(TIME_COLUMN, None), "result": r} for r in rows]
-    if qt in ("topN", "search"):
-        # one envelope per time bucket ({timestamp, result: [entries]}) —
-        # TopNResultValue / SearchResultValue shape
-        buckets: dict = {}
-        for r in rows:
-            ts = r.pop(TIME_COLUMN, None)
-            buckets.setdefault(ts, []).append(r)
-        return [{"timestamp": ts, "result": rs} for ts, rs in buckets.items()]
-    if qt == "groupBy":
-        return [{"version": "v1", "timestamp": r.pop(TIME_COLUMN, None),
-                 "event": r} for r in rows]
+    cols = df.columns
+    # native DATE columns render as the calendar day; instants always in
+    # UTC (translate runs every native query under a UTC session)
+    rows = _collect_timed(df, (body.get("context") or {}).get("timeout"),
+                          "yyyy-MM-dd")
     if qt == "scan":
         # ScanQuery.ResultFormat (ScanQuery.java:53-55): RESULT_FORMAT_LIST
         # (event maps, default) vs RESULT_FORMAT_COMPACTED_LIST (value arrays
         # in column order — the wire-efficient form)
-        cols = df.columns
         if body.get("resultFormat") == "compactedList":
-            return [{"columns": cols,
-                     "events": [[r.get(c) for c in cols] for r in rows]}]
-        return [{"columns": cols, "events": rows}]
+            return [{"columns": cols, "events": [list(r) for r in rows]}]
+        return [{"columns": cols,
+                 "events": [dict(zip(cols, r)) for r in rows]}]
+    if qt in ("timeseries", "groupBy", "topN", "search"):
+        ts, events = _split_time(cols, rows)
+        if qt == "timeseries":
+            return [{"timestamp": t, "result": e} for t, e in zip(ts, events)]
+        if qt == "groupBy":
+            return [{"version": "v1", "timestamp": t, "event": e}
+                    for t, e in zip(ts, events)]
+        # one envelope per time bucket ({timestamp, result: [entries]}) —
+        # TopNResultValue / SearchResultValue shape
+        buckets: dict = {}
+        for t, e in zip(ts, events):
+            buckets.setdefault(t, []).append(e)
+        return [{"timestamp": t, "result": es} for t, es in buckets.items()]
+    objs = [dict(zip(cols, r)) for r in rows]
     if qt == "timeBoundary":
-        return [{"timestamp": rows[0].get("minTime"), "result": rows[0]}] if rows else []
-    return rows
+        return [{"timestamp": objs[0].get("minTime"), "result": objs[0]}] \
+            if objs else []
+    return objs
+
+
+def _split_time(cols: list[str], rows: list[tuple]):
+    """The two halves of a native envelope: each row's bucket instant, and
+    the row as an object without __time (None / the whole row when the
+    frame has no __time column)."""
+    if TIME_COLUMN not in cols:
+        return [None] * len(rows), [dict(zip(cols, r)) for r in rows]
+    i = cols.index(TIME_COLUMN)
+    rest = cols[:i] + cols[i + 1:]
+    return ([r[i] for r in rows],
+            [dict(zip(rest, r[:i] + r[i + 1:])) for r in rows])
 
 
 # ---------------------------------------------------------------------------
@@ -198,6 +293,9 @@ def sql_query(body: dict, spark: SparkSession, catalog: Catalog) -> str | list:
     arrayLines | csv."""
     from incubator_druid_spark.sql.functions import druid_sql
 
+    fmt = body.get("resultFormat", "object")
+    if fmt not in _SQL_FORMATS:
+        raise ValueError(f"unknown resultFormat {fmt!r}")
     sql = body["query"]
     params = body.get("parameters") or []
     if params or "?" in sql:
@@ -237,7 +335,8 @@ def sql_query(body: dict, spark: SparkSession, catalog: Catalog) -> str | list:
         # PlannerContext.CTX_SQL_OUTER_LIMIT — wrap the whole result in a
         # limit (the broker applies it outside any query-level LIMIT)
         df = df.limit(int(outer_limit))
-    return _collect_formatted(df, body, ctx)
+    return _SQL_FORMATS[fmt](_collect_timed(df, ctx.get("timeout"), _INSTANT),
+                             df.columns, bool(body.get("header")))
 
 
 def _require_time_condition(df) -> None:
@@ -409,64 +508,48 @@ def _bind_parameters(sql: str, params: list) -> str:
     return "".join(out)
 
 
-def _collect_formatted(df, body: dict, ctx: dict):
-    """Collect + format; DUPLICATE output column names (two joined tables
-    both exposing 'k') are collected under positional aliases so row
-    dicts don't collapse them (Row.asDict keeps only the last), and the
-    original names are restored for headers/object keys.  Timestamps and
-    dates render in the query's sqlTimeZone (default UTC → 'Z' suffix)."""
-    from zoneinfo import ZoneInfo
-    tz = ZoneInfo(ctx.get("sqlTimeZone") or "UTC")
-    cols = df.columns
-    if len(set(cols)) != len(cols):
-        safe = [f"__c{i}" for i in range(len(cols))]
-        rows = _rows_timed(df.toDF(*safe), ctx.get("timeout"), tz=tz)
-        return _format_sql_rows(rows, safe, body, display=cols)
-    return _format_sql_rows(_rows_timed(df, ctx.get("timeout"), tz=tz),
-                            cols, body)
+def _objects(rows, names, header):
+    # ObjectWriter.writeHeader: header=true prepends a {col: null} row
+    objs = [dict(zip(names, r)) for r in rows]
+    return [dict.fromkeys(names)] + objs if header else objs
 
 
-def _format_sql_rows(rows: list[dict], cols: list[str], body: dict,
-                     display: list[str] | None = None):
-    fmt = body.get("resultFormat", "object")
-    header = bool(body.get("header"))
-    names = display or cols
-    if display is not None and fmt in ("object", "objectLines"):
-        # JSON objects can't carry duplicate keys — last wins, same as the
-        # dict collapse; array formats below stay positional-exact
-        rows = [{d: r[c] for c, d in zip(cols, display)} for r in rows]
-        cols = names
+def _arrays(rows, names, header):
+    out = [list(r) for r in rows]
+    return [names] + out if header else out
 
-    if fmt == "object":
-        # ObjectWriter.writeHeader: header=true prepends a {col: null} row
-        return ([{c: None for c in names}] + rows) if header else rows
-    if fmt == "array":
-        out = [[r[c] for c in cols] for r in rows]
-        return ([names] + out) if header else out
-    if fmt == "objectLines":
-        # ObjectLinesWriter: optional header row, then one JSON object per
-        # line, terminated by a BLANK line (writeResponseEnd emits '\n\n' —
-        # the marker streaming clients use to detect truncation)
-        lines = [json.dumps(r) for r in rows]
-        if header:
-            lines.insert(0, json.dumps({c: None for c in names}))
-        return "\n".join(lines) + "\n\n"
-    if fmt == "arrayLines":
-        lines = [json.dumps([r[c] for c in cols]) for r in rows]
-        if header:
-            lines.insert(0, json.dumps(names))
-        return "\n".join(lines) + "\n\n"
-    if fmt == "csv":
-        # CsvWriter: '\n' line endings (not Python csv's default '\r\n'),
-        # trailing blank-line terminator like the lines formats
-        buf = io.StringIO()
-        w = csv.writer(buf, lineterminator="\n")
-        if header:
-            w.writerow(names)
-        for r in rows:
-            w.writerow([r[c] for c in cols])
-        return buf.getvalue() + "\n"
-    raise ValueError(f"unknown resultFormat {fmt!r}")
+
+def _lines(rows):
+    # ObjectLinesWriter / ArrayLinesWriter: one JSON value per line (an
+    # optional header row first), terminated by a BLANK line —
+    # writeResponseEnd emits '\n\n', the marker streaming clients use to
+    # detect truncation
+    return "\n".join(map(json.dumps, rows)) + "\n\n"
+
+
+def _csv(rows, names, header):
+    # CsvWriter: '\n' line endings (not Python csv's default '\r\n'),
+    # trailing blank-line terminator like the lines formats
+    buf = io.StringIO()
+    w = csv.writer(buf, lineterminator="\n")
+    if header:
+        w.writerow(names)
+    w.writerows(rows)
+    return buf.getvalue() + "\n"
+
+
+# ResultFormat.java: each SQL result format and its writer over positional
+# rows.  The array formats keep every column; a JSON object cannot carry
+# duplicate keys, so there the last of two same-named columns wins.
+_SQL_FORMATS = {
+    "object": _objects,
+    "array": _arrays,
+    "objectLines": lambda rows, names, header: _lines(
+        _objects(rows, names, header)),
+    "arrayLines": lambda rows, names, header: _lines(
+        _arrays(rows, names, header)),
+    "csv": _csv,
+}
 
 
 # ---------------------------------------------------------------------------

@@ -92,7 +92,8 @@ def run(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
     # TimeseriesQuery.CTX_TIMESTAMP_RESULT_FIELD — materialize the bucket
     # timestamp as a LONG millis result column (post-aggs may reference it;
     # Druid's SQL layer uses this for GROUP BY TIME_FLOOR rewrites)
-    ts_field = (query.get("context") or {}).get("timestampResultField")
+    context = query.get("context") or {}
+    ts_field = context.get("timestampResultField")
     if ts_field and gran.kind != "all":
         # resultArraySignature places the field right after __time
         # (TimeseriesQueryQueryToolChest.resultArraySignature)
@@ -108,7 +109,7 @@ def run(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
     if gran.kind != "all":
         out = out.orderBy(F.col(TIME_COLUMN).desc() if query.get("descending")
                           else F.col(TIME_COLUMN))
-        if query.get("context", {}).get("grandTotal"):
+        if context.get("grandTotal"):
             # TimeseriesQueryQueryToolChest grand-total row: overall aggregate
             # appended with a null timestamp
             tfolds = []
@@ -130,7 +131,8 @@ def run(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
 
 def _zero_fill(out: DataFrame, query: dict, gran, spark: SparkSession,
                catalog) -> DataFrame:
-    if query.get("context", {}).get("skipEmptyBuckets"):
+    context = query.get("context") or {}
+    if context.get("skipEmptyBuckets"):
         return out
     p = gran.period
     day_or_coarser = p is not None and (p.is_calendar
@@ -222,8 +224,8 @@ def _zero_fill(out: DataFrame, query: dict, gran, spark: SparkSession,
         else:
             name = spec.get("name")
             atype = spec["type"]
-        legacy = bool(query.get("context", {}).get("useDefaultValueForNull"))
-        state_mode = query.get("context", {}).get("finalize") is False
+        legacy = bool(context.get("useDefaultValueForNull"))
+        state_mode = context.get("finalize") is False
         if atype in ("cardinality", "hyperUnique") and state_mode:
             # finalize=false: the column is sketch STATE (binary) — an
             # empty bucket's state is NULL, not 0

@@ -260,11 +260,7 @@ def translate(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
         catalog = catalog.for_session(spark)
     from incubator_druid_spark.functions.lookups import clear_lookup_joins
     clear_lookup_joins()  # drop leftovers from any abandoned prior compile
-    from incubator_druid_spark.plans import cache
-    cache.apply_scheduling(query, spark)
-    hit = cache.lookup(query)
-    if hit is not None:
-        return hit
+    _apply_scheduling(query, spark)
     out = dispatch[qt](query, spark, catalog)
     # helper aggregates synthesized by rewrite_sketch_query (theta/HLL set-op
     # rewrites) are internal — Druid never surfaces them in the result row
@@ -272,4 +268,18 @@ def translate(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
                if c.startswith("__theta_union_") or c.startswith("__hll_union_")]
     if helpers:
         out = out.drop(*helpers)
-    return cache.populate(query, out)
+    return out
+
+
+def _apply_scheduling(query: dict, spark: SparkSession) -> None:
+    """Query prioritization (server/.../QueryScheduler.java laning,
+    QueryContexts.getPriority) as a Spark fair-scheduler pool for the jobs
+    this thread triggers: context.lane names the pool; otherwise priority
+    >0 picks 'high' and <0 'low' (default 0 → no pool).  The pool is a
+    thread-local property, matching one query per request thread."""
+    ctx = query.get("context") or {}
+    pool = ctx.get("lane")
+    if pool is None and "priority" in ctx:
+        p = int(ctx["priority"])
+        pool = "high" if p > 0 else "low" if p < 0 else None
+    spark.sparkContext.setLocalProperty("spark.scheduler.pool", pool)

@@ -22,7 +22,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 
 def make_handler(spark, catalog):
-    from incubator_druid_spark.api import native_query, sql_query
+    from incubator_druid_spark import api
 
     class Handler(BaseHTTPRequestHandler):
         def log_message(self, fmt, *args):  # quiet
@@ -84,9 +84,9 @@ def make_handler(spark, catalog):
                     catalog.register_lookup(name, body)
                     self._send(202, {"status": "accepted", "lookup": name})
                 elif path == "/druid/v2":
-                    self._send(200, native_query(body, spark, catalog))
+                    self._send(200, api.native_query(body, spark, catalog))
                 elif path == "/druid/v2/sql":
-                    out = sql_query(body, spark, catalog)
+                    out = api.sql_query(body, spark, catalog)
                     ct = ("text/csv" if body.get("resultFormat") == "csv"
                           else "application/json")
                     self._send(200, out, ct)
@@ -94,6 +94,9 @@ def make_handler(spark, catalog):
                     self._send(404, {"error": "not found"})
             except (ValueError, KeyError) as e:
                 self._send(400, {"error": str(e)})
+            except api.QueryTimeoutError as e:
+                # QueryResource maps QueryTimeoutException to 504
+                self._send(504, {"error": str(e)})
             except Exception as e:  # noqa: BLE001 — surface as 500, keep serving
                 self._send(500, {"error": f"{type(e).__name__}: {e}"})
 

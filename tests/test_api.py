@@ -120,6 +120,37 @@ def test_sql_result_formats(spark, foo_catalog):
     assert json.loads(lines.splitlines()[0])["m2"] == 1.0
 
 
+def test_sql_columns_colliding_by_case_stay_distinct(spark, foo_catalog):
+    """The rendering projection addresses columns by name; names that
+    differ only in case, or hold a dot, must still reach their own
+    position."""
+    from incubator_druid_spark.api import sql_query
+    sql = ("SELECT dim1 AS k, m2 AS K, __time AS \"t.x\" FROM foo "
+           "WHERE m2 = 1")
+    arr = sql_query({"query": sql, "resultFormat": "array", "header": True},
+                    spark, foo_catalog)
+    assert arr[0] == ["k", "K", "t.x"]
+    assert arr[1] == ["", 1.0, "2000-01-01T00:00:00.000Z"]
+    obj = sql_query({"query": "SELECT __time AS \"t.x\" FROM foo "
+                              "WHERE m2 = 1"}, spark, foo_catalog)
+    assert obj == [{"t.x": "2000-01-01T00:00:00.000Z"}]
+
+
+def test_sql_unknown_result_format_runs_no_job(spark, foo_catalog):
+    """An unknown resultFormat is a 400 before the query runs, not after."""
+    from incubator_druid_spark.api import sql_query
+    sc = spark.sparkContext
+    sc.setJobGroup("test-unknown-format", "unknown resultFormat")
+    try:
+        with pytest.raises(ValueError, match="unknown resultFormat"):
+            sql_query({"query": "SELECT dim1, COUNT(*) AS n FROM foo "
+                                "GROUP BY 1", "resultFormat": "xml"},
+                      spark, foo_catalog)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("test-unknown-format") == []
+
+
 def test_sql_parameters(spark, foo_catalog):
     from incubator_druid_spark.api import sql_query
     out = sql_query({"query": "SELECT count(*) AS c FROM foo WHERE dim1 = ?",
@@ -166,31 +197,152 @@ def test_timewarp_shifts_intervals(spark, foo_catalog):
 
 
 def test_result_cache_and_scheduling_context(spark, catalog):
-    """useCache/populateCache whole-result cache (CacheStrategy/
-    CachingClusteredClient analogue) + lane/priority → scheduler pool."""
+    """useCache/populateCache are accepted and ignored (a Druid broker with
+    its result cache off: every query reads the current tables);
+    lane/priority → scheduler pool."""
     from incubator_druid_spark import translate
-    from incubator_druid_spark.plans import cache as qcache
 
-    qcache.clear()
     q = {"queryType": "timeseries", "dataSource": "events", "granularity": "all",
          "aggregations": [{"type": "count", "name": "cnt"}],
          "context": {"useCache": True, "populateCache": True, "priority": 5}}
     first = translate(q, spark, catalog)
     n1 = first.first()["cnt"]
-    assert first.storageLevel.useMemory  # populated → persisted
+    assert not first.storageLevel.useMemory  # nothing persisted
     assert spark.sparkContext.getLocalProperty("spark.scheduler.pool") == "high"
 
     again = translate(dict(q, context={"useCache": True, "priority": -1}), spark, catalog)
-    assert again is first                # cache hit returns the persisted frame
+    assert again is not first
     assert again.first()["cnt"] == n1
     assert spark.sparkContext.getLocalProperty("spark.scheduler.pool") == "low"
+    spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
 
-    # different query (same shape, different agg name) → miss
-    miss = translate({**q, "aggregations": [{"type": "count", "name": "c2"}],
-                      "context": {"useCache": True}}, spark, catalog)
-    assert miss is not first
-    qcache.clear()
-    assert not first.storageLevel.useMemory or True  # unpersisted on clear
+
+def test_timeout_keeps_scheduler_pool(spark, foo_catalog, monkeypatch):
+    """context.timeout collects on a worker thread; the lane's scheduler
+    pool (a thread-local property set by translate) must reach it."""
+    from incubator_druid_spark import api
+    sc = spark.sparkContext
+    pools = []
+    collect = api._collect
+
+    def recording(df, date_pattern):
+        pools.append(sc.getLocalProperty("spark.scheduler.pool"))
+        return collect(df, date_pattern)
+
+    monkeypatch.setattr(api, "_collect", recording)
+    out = api.native_query({
+        "queryType": "timeseries", "dataSource": "foo", "granularity": "all",
+        "aggregations": [{"type": "count", "name": "n"}],
+        "context": {"lane": "high", "timeout": 60000}}, spark, foo_catalog)
+    sc.setLocalProperty("spark.scheduler.pool", None)
+    assert out[0]["result"] == {"n": 6}
+    assert pools == ["high"]
+
+
+def test_native_scan_is_one_spark_job(spark, tmp_path):
+    """The result path collects with ONE Spark action: a 4-file scan runs
+    one job, not one per partition."""
+    from incubator_druid_spark import translate
+    from incubator_druid_spark.api import native_query
+    from incubator_druid_spark.catalog import Catalog
+    path = str(tmp_path / "multi.parquet")
+    spark.range(0, 40, 1, 4).selectExpr(
+        "timestamp_seconds(946684800 + id * 3600) AS __time", "id AS v") \
+        .write.parquet(path)
+    cat = Catalog(spark)
+    cat.register("multi", path)
+    q = {"queryType": "scan", "dataSource": "multi", "columns": ["v"],
+         "intervals": ["2000-01-01T00:00:00Z/2001-01-01T00:00:00Z"]}
+    assert translate(q, spark, cat).rdd.getNumPartitions() >= 2
+    sc = spark.sparkContext
+    sc.setJobGroup("test-native-scan-one-job", "native scan")
+    try:
+        out = native_query(q, spark, cat)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sorted(e["v"] for e in out[0]["events"]) == list(range(40))
+    assert len(sc.statusTracker().getJobIdsForGroup(
+        "test-native-scan-one-job")) == 1
+
+
+def test_native_instants_ignore_host_zone(spark, catalog):
+    """Native results render in UTC whatever the server machine's zone
+    (Granularities.nullToUtc): the day bucket 2024-01-01T00:00Z stays
+    that instant under a Los Angeles host."""
+    import os
+    import time
+
+    from incubator_druid_spark.api import native_query
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/Los_Angeles"
+    time.tzset()
+    try:
+        out = native_query({
+            "queryType": "timeseries", "dataSource": "events",
+            "granularity": "day",
+            "intervals": ["2024-01-01T00:00:00Z/2024-01-02T00:00:00Z"],
+            "aggregations": [{"type": "count", "name": "n"}]},
+            spark, catalog)
+    finally:
+        if old is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
+    assert [o["timestamp"] for o in out] == ["2024-01-01T00:00:00.000Z"]
+
+
+def test_granular_timeseries_null_context(spark, foo_catalog):
+    """A JSON `"context": null` reads as no context, not a crash."""
+    from incubator_druid_spark.api import native_query
+    out = native_query({
+        "queryType": "timeseries", "dataSource": "foo", "granularity": "hour",
+        "intervals": ["2000-01-01T00:00:00Z/2000-01-01T03:00:00Z"],
+        "filter": {"type": "selector", "dimension": "dim1", "value": ""},
+        "aggregations": [{"type": "count", "name": "n"}],
+        "context": None}, spark, foo_catalog)
+    assert [(o["timestamp"], o["result"]["n"]) for o in out] == [
+        ("2000-01-01T00:00:00.000Z", 1), ("2000-01-01T01:00:00.000Z", 0),
+        ("2000-01-01T02:00:00.000Z", 0)]
+
+
+def test_server_maps_query_timeout_to_504(monkeypatch):
+    """QueryResource answers a QueryTimeoutException with HTTP 504."""
+    import io
+
+    from incubator_druid_spark import api
+    from incubator_druid_spark.server import make_handler
+
+    def timed_out(body, spark, catalog):
+        raise api.QueryTimeoutError("Query timeout of 1 ms exceeded")
+
+    monkeypatch.setattr(api, "sql_query", timed_out)
+    body = json.dumps({"query": "SELECT 1"}).encode()
+    sent = {}
+
+    class Fake(make_handler(None, None)):
+        def __init__(self):  # no socket: drive do_POST directly
+            self.path = "/druid/v2/sql"
+            self.headers = {"Content-Length": str(len(body))}
+            self.rfile = io.BytesIO(body)
+
+        def _send(self, code, payload, content_type=None):
+            sent.update(code=code, payload=payload)
+
+    Fake().do_POST()
+    assert sent["code"] == 504
+    assert "timeout" in sent["payload"]["error"]
+
+
+def test_no_row_iterator_in_engine():
+    """One result path: no engine module (the curation pipeline aside)
+    streams rows back partition by partition."""
+    import pathlib
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "incubator_druid_spark"
+    hits = [str(p.relative_to(pkg)) for p in pkg.rglob("*.py")
+            if p.relative_to(pkg).parts[0] != "pipeline"
+            and "toLocalIterator(" in p.read_text()]
+    assert hits == []
 
 
 def test_scan_compacted_list_format(spark, foo_catalog):

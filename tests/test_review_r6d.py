@@ -20,7 +20,6 @@ internals):
 7. histogram finalizes to Histogram.asVisual() {breaks, counts, quantiles}.
 8. SQL lines result formats end with the blank-line terminator; object
    formats honor header.
-9. The whole-result cache invalidates when a lookup is re-registered.
 """
 
 import datetime
@@ -196,15 +195,3 @@ def test_sql_lines_formats_blank_line_terminated(spark, mm_catalog):
     out = sql_query(dict(body, resultFormat="object", header=True),
                     spark, mm_catalog)
     assert out[0] == {"status": None, "n": None}
-
-
-def test_cache_invalidated_on_lookup_reregister(spark, mm_catalog):
-    from incubator_druid_spark.functions.lookups import register_lookup
-    from incubator_druid_spark.plans import cache
-    register_lookup("r6d_lk", {"ok": "fine"})
-    q = {"queryType": "scan", "dataSource": "t", "intervals": [],
-         "columns": ["status"], "context": {"populateCache": True,
-                                            "useCache": True}}
-    k1 = cache.cache_key(q)
-    register_lookup("r6d_lk", {"ok": "changed"})
-    assert cache.cache_key(q) != k1

@@ -4,7 +4,7 @@ plus the hostile-host sweep the r7 judge prescribed).
 1. A vanilla PySpark-4 host (ANSI on, NO pinned session timezone) must not
    crash on the first druid_sql call: `conf.get(key, "")` VALIDATED the ''
    default and threw INVALID_CONF_VALUE.TIME_ZONE (sql/functions.py r7).
-2. _host_state_token must be O(#views) identity reads — no per-call plan
+2. _exec_session's staleness checks must be cheap — no per-call plan
    re-analysis (~250 ms at 6 views in r7) — and stable across calls so the
    exec-session clone is built once.
 3. druid_sql executes under the dialect's fixed knobs (non-ANSI + UTC /
@@ -47,41 +47,41 @@ def test_bare_ansi_host_first_call(bare_host):
     assert len(rows) == 3 and all(r["cnt"] > 0 for r in rows)
 
 
-def test_host_state_token_stable_and_fast(bare_host):
-    """Crack #2: the token must not re-analyze host temp views per call.
-    Identity reads are ~20 ms at 8 views; the r7 semanticHash round-trip
-    was ~250 ms at 6.  Bound generously (loaded CI box) — the structural
-    guarantee is the same-clone assertion below."""
+def test_exec_session_clone_stable_and_fast(bare_host):
+    """Crack #2: a stable host reuses its clone without re-analyzing host
+    temp views per call (the r7 semanticHash round-trip was ~250 ms at 6
+    views).  Bound generously (loaded CI box) — the structural guarantee
+    is the same-clone assertion."""
     from incubator_druid_spark.sql import functions as sf
     for i in range(8):
         bare_host.range(50).selectExpr("id", f"id*{i} AS v") \
             .createOrReplaceTempView(f"r8tok{i}")
-    t1 = sf._host_state_token(bare_host)  # warm py4j
+    q = "SELECT COUNT(*) AS c FROM r8tok0"
+    c1 = sf._exec_session(bare_host, "UTC", q)  # builds, warms py4j
     t0 = time.time()
-    t2 = sf._host_state_token(bare_host)
+    c2 = sf._exec_session(bare_host, "UTC", q)
     elapsed = time.time() - t0
-    assert t1 == t2
-    assert elapsed < 0.15, f"token took {elapsed*1000:.0f} ms — re-analysis?"
-    c1 = sf._exec_session(bare_host, "UTC")
-    c2 = sf._exec_session(bare_host, "UTC")
     assert c1 is c2, "stable host state must reuse the cached clone"
-    # replacing a view must drift the token (identity change on replace)
+    assert elapsed < 0.15, f"clone check took {elapsed*1000:.0f} ms"
+    # replacing a referenced view rebuilds the clone
     bare_host.range(3).selectExpr("id", "id AS v") \
         .createOrReplaceTempView("r8tok0")
-    assert sf._host_state_token(bare_host) != t2
+    c3 = sf._exec_session(bare_host, "UTC", q)
+    assert c3 is not c2
+    assert c3.sql(q).collect()[0]["c"] == 3
 
 
-def test_engine_views_do_not_churn_token(bare_host):
+def test_engine_views_do_not_rebuild_clone(bare_host):
     """The engine's own registrations (lookup_/view_/sys_/information_
-    schema_ temp views) are excluded from the token, so engine activity
-    can never invalidate its own clone."""
+    schema_ temp views) are outside the staleness checks, so engine
+    activity can never invalidate its own clone."""
     from incubator_druid_spark.sql import functions as sf
-    before = sf._host_state_token(bare_host)
+    before = sf._exec_session(bare_host, "UTC")
     bare_host.range(2).selectExpr("CAST(id AS STRING) k",
                                   "CAST(id AS STRING) v") \
         .createOrReplaceTempView("lookup_r8churn")
     bare_host.range(2).selectExpr("id").createOrReplaceTempView("sys_r8x")
-    assert sf._host_state_token(bare_host) == before
+    assert sf._exec_session(bare_host, "UTC") is before
 
 
 def test_druid_sql_never_mutates_host(spark):
