@@ -27,6 +27,9 @@ from dataclasses import dataclass
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+#: the most buckets ``Granularity.spine`` enumerates driver-side
+SPINE_CAP = 500_000
+
 _MILLIS = {"s": 1000, "m": 60_000, "h": 3_600_000, "d": 86_400_000, "w": 7 * 86_400_000}
 
 # Simple-name → ISO period (GranularityType.java:34-84)
@@ -204,6 +207,19 @@ class Granularity:
             out = F.timestamp_add("DAY", F.lit(p.millis // day * steps), local)
         return F.to_utc_timestamp(out, self.tz) if self.tz else out
 
+    def spine_fits(self, intervals: list[tuple[int, int]]) -> bool:
+        """Whether ``spine`` over the intervals stays within ``SPINE_CAP``
+        buckets, judged without enumerating them (False for all/none)."""
+        p = self.period
+        if self.kind in ("all", "none") or p is None or not intervals:
+            return False
+        # a month is at least 28 days; an interval adds at most a partial
+        # bucket at either end, and a local span is at most a day longer
+        width = max(p.millis or p.months * 28 * _MILLIS["d"], 1)
+        slack = _MILLIS["d"] if self.tz else 0
+        return sum((e - s + slack) // width + 2
+                   for s, e in intervals) <= SPINE_CAP
+
     def spine(self, start_ms: int, end_ms: int) -> list[int]:
         """Bucket starts covering [start, end) — the zero-fill time spine for
         timeseries (driver-side; bucket counts are small by construction).
@@ -262,7 +278,7 @@ class Granularity:
                         break
                     out.append(t)
                     k += p.months
-                    if len(out) > 100_000:
+                    if len(out) > SPINE_CAP:
                         raise ValueError("time spine too large")
                 return out
             dt = datetime.fromtimestamp(start_ms / 1000, tz=timezone.utc)
@@ -278,7 +294,7 @@ class Granularity:
                 # the 1969 ones, disagreeing with floor()'s keys
                 out.append(t)
                 mi += p.months
-                if len(out) > 100_000:
+                if len(out) > SPINE_CAP:
                     raise ValueError("time spine too large")
         else:
             origin = self.origin_millis
@@ -292,7 +308,7 @@ class Granularity:
             while t < end_ms:
                 out.append(t)
                 t += p.millis
-                if len(out) > 1_000_000:
+                if len(out) > SPINE_CAP:
                     raise ValueError("time spine too large")
         return out
 

@@ -74,10 +74,3 @@ def interval_predicate(intervals: list[tuple[int, int]], time_col: Column) -> Co
     for p in preds[1:]:
         out = out | p
     return out
-
-
-def clamp_intervals(intervals: list[tuple[int, int]]) -> tuple[int, int]:
-    """Overall [min-start, max-end) envelope (for spine generation)."""
-    if not intervals:
-        return ETERNITY
-    return min(i[0] for i in intervals), max(i[1] for i in intervals)

@@ -73,6 +73,9 @@ def get_spark(app_name: str = "incubator-druid-spark", master: str | None = None
                 "0.0")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
+        # PySpark's per-call call-site capture costs ~5 py4j round trips on
+        # every DataFrame/Column call, and translate makes hundreds of them
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -1,15 +1,21 @@
-"""Capture .explain("formatted") output for named board queries.
+"""Capture .explain("formatted") output for board queries or native queries.
 
-Usage: python scripts/capture_plans.py <out_dir> <suffix> name1,name2,...
+Usage: python scripts/capture_plans.py <out_dir> <suffix> item1,item2,...
 e.g.:  python scripts/capture_plans.py plans/r09 after dedup_fingerprint,ts_day
+       python scripts/capture_plans.py plans/r11 after plans/r11/ts_hour_filtered.json
 
-Writes <out_dir>/<name>_<suffix>.txt for each query, using the sf0.1
-testdata (the bench scale) so plan shapes match the benched queries.
+An item is a board entry name from ``__spark_entry__.queries()`` or the
+path of a native query JSON file, which is translated against the catalog
+of the testdata directory.  Writes <out_dir>/<name>_<suffix>.txt for each
+item (a JSON file's name is its stem), using the sf0.1 testdata (the bench
+scale; ``SPARK_GRAFT_SF_DIR`` overrides it) so plan shapes match the
+benched queries.
 """
 
 from __future__ import annotations
 
 import io
+import json
 import os
 import sys
 from contextlib import redirect_stdout
@@ -18,17 +24,24 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
-    out_dir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3].split(",")
+    out_dir, suffix, items = sys.argv[1], sys.argv[2], sys.argv[3].split(",")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     import __spark_entry__ as entrymod
-    from incubator_druid_spark import get_spark
+    from incubator_druid_spark import get_spark, translate
+    from incubator_druid_spark.catalog import load_catalog
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
     os.makedirs(out_dir, exist_ok=True)
-    for name in names:
-        df = qs[name](spark, sf_dir)
+    for item in items:
+        if item.endswith(".json"):
+            with open(item) as fh:
+                query = json.load(fh)
+            name = os.path.splitext(os.path.basename(item))[0]
+            df = translate(query, spark, load_catalog(spark, sf_dir))
+        else:
+            name, df = item, qs[item](spark, sf_dir)
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")

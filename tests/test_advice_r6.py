@@ -138,18 +138,26 @@ def test_subday_interval_over_hour_segments_no_spurious_fill(
 
 
 def test_bucket_listing_rejects_join_frames(spark, tmp_path):
-    from incubator_druid_spark.operators.timeseries import (
-        _bucket_partition_days, _relation_files)
+    from incubator_druid_spark import timeline as tl_mod
     cat = _mk_hour_bucketed(spark, tmp_path)
     src = cat.table("hourly")
     joined = src.join(src.select("typ").distinct(), on="typ")
-    ivs = [(1704067200000, 1704153600000)]
-    assert _relation_files(joined) is None
-    assert _bucket_partition_days(joined, _relation_files(joined), ivs,
-                                  spark) is None
-    # the single-relation frame still resolves from the listing
-    assert _bucket_partition_days(src, _relation_files(src), ivs,
-                                  spark) is not None
+    day, early = [(1704067200000, 1704153600000)], [(1704067200000,
+                                                     1704074400000)]
+    assert tl_mod.relation_files(joined) is None
+    tl_mod._TIMELINES.clear()
+    # a join frame's timeline comes from a scan of the query intervals
+    # alone (00:00-02:00 holds no row) and is not memoized
+    assert tl_mod.timeline(joined, day) == tl_mod.Timeline(
+        (1704067200000,), tl_mod.DAY_MS, None)
+    assert tl_mod.timeline(joined, early).starts == ()
+    assert tl_mod._TIMELINES == {}
+    # the single-relation frame resolves from the hour listing and is
+    # memoized under its file list
+    tl = tl_mod.timeline(src, early)
+    assert tl.span == 3_600_000
+    assert tl.starts == (1704088800000, 1704092400000)
+    assert list(tl_mod._TIMELINES.values()) == [tl]
 
 
 # -- 5. JPEG BitWriter accumulator is bounded -------------------------------

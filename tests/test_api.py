@@ -334,6 +334,56 @@ def test_server_maps_query_timeout_to_504(monkeypatch):
     assert "timeout" in sent["payload"]["error"]
 
 
+def test_session_skips_call_site_capture(spark):
+    """get_spark turns off PySpark's per-call call-site capture: with it
+    on, every DataFrame/Column call pays extra py4j round trips."""
+    from pyspark.errors.utils import is_debugging_enabled
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
+
+
+@pytest.mark.parametrize("path, body", [
+    ("/druid/v2/sql", {"query": "SELECT nope FROM events"}),
+    ("/druid/v2", {"queryType": "timeseries", "dataSource": "nope",
+                   "granularity": "all",
+                   "aggregations": [{"type": "count", "name": "n"}]}),
+])
+def test_unknown_names_keep_error_envelope(spark, catalog, monkeypatch,
+                                           path, body):
+    """An unknown column or datasource answers the same error envelope and
+    status with call-site capture off as with it on."""
+    import io
+
+    import pyspark.errors.utils as perr
+
+    from incubator_druid_spark.server import make_handler
+    data = json.dumps(body).encode()
+
+    def send(debugging):
+        monkeypatch.setattr(perr, "_enable_debugging_cache", debugging)
+        sent = {}
+
+        class Fake(make_handler(spark, catalog)):
+            def __init__(self):  # no socket: drive do_POST directly
+                self.path = path
+                self.headers = {"Content-Length": str(len(data))}
+                self.rfile = io.BytesIO(data)
+
+            def _send(self, code, payload, content_type=None):
+                sent.update(code=code, payload=payload)
+
+        Fake().do_POST()
+        # the first line names the error; the rest prints the analyzed
+        # plan, whose expression ids differ from run to run
+        return sent["code"], list(sent["payload"]), \
+            sent["payload"]["error"].split("\n")[0]
+
+    off = send(False)
+    assert off == send(True)
+    assert "nope" in off[2]
+
+
 def test_no_row_iterator_in_engine():
     """One result path: no engine module (the curation pipeline aside)
     streams rows back partition by partition."""

@@ -217,23 +217,24 @@ def test_aqe_skew_join_split(spark):
 
 
 def test_timeseries_zero_fill_no_filter_single_scan(spark, catalog):
-    """Unfiltered timeseries zero-fill derives segment coverage from the
-    aggregated buckets — the physical plan must scan the events table
-    exactly once (a second scan would double the 100 TB read)."""
+    """Timeseries zero-fill reads segment coverage from the memoized
+    timeline, so the physical plan scans the events table exactly once,
+    filtered or not (a second scan would double the 100 TB read), with no
+    semi-join against segment days and no range-partitioned sort."""
     from incubator_druid_spark import translate
     q = {"queryType": "timeseries", "dataSource": "events",
          "granularity": "day",
          "intervals": ["2024-01-01T00:00:00Z/2024-02-05T00:00:00Z"],
          "aggregations": [{"type": "count", "name": "cnt"}]}
-    plan = translate(q, spark, catalog)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert plan.count("events.parquet") <= 1, plan
-    # a FILTERED query pays the (column-pruned) coverage scan - that one
-    # may read the source twice, but the coverage subtree prunes to __time
     q2 = {**q, "filter": {"type": "selector", "dimension": "event_type",
                           "value": "click"}}
-    df2 = translate(q2, spark, catalog)
-    assert df2.count() > 0
+    for query in (q, q2, {**q2, "granularity": "hour"}):
+        df = translate(query, spark, catalog)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("events.parquet") == 1, plan
+        assert "LeftSemi" not in plan and "rangepartitioning" not in plan, \
+            plan
+    assert df.count() > 0
 
 
 def _assert_local_scan(df):

@@ -18,8 +18,8 @@
    rendered in the sql timezone.
 6. numeric-ordering bound comparisons are BigDecimal-exact beyond 2^53
    (StringComparators.NUMERIC uses convertStringToBigDecimal).
-7. _footer_time_extent memoizes per file list (no per-query driver
-   re-read of immutable parquet footers).
+7. The segment timeline is memoized per frame and file list (no per-query
+   re-read of immutable parquet footers, no per-query timeline job).
 """
 
 import datetime
@@ -208,24 +208,27 @@ def test_numeric_bound_exact_beyond_double_precision(spark):
     assert got == ["9007199254740995"]
 
 
-# -- 7. footer extent memoized ----------------------------------------------
+# -- 7. segment timeline memoized -------------------------------------------
 
 def test_footer_extent_memoized(spark, tmp_path):
-    from incubator_druid_spark.operators import timeseries as ts_mod
+    from incubator_druid_spark import timeline as tl_mod
     df = spark.createDataFrame(
         [(datetime.datetime(2024, 1, 1), 1)], "__time timestamp, v long")
     p = str(tmp_path / "seg")
     df.write.mode("overwrite").parquet(p)
     src = spark.read.parquet(p)
-    ts_mod._EXTENT_CACHE.clear()
-    files = ts_mod._relation_files(src)
-    first = ts_mod._footer_time_extent(src, files)
-    assert first is not None
-    assert len(ts_mod._EXTENT_CACHE) == 1
-    key = next(iter(ts_mod._EXTENT_CACHE))
+    ivs = [(1704067200000, 1704153600000)]
+    tl_mod._TIMELINES.clear()
+    first = tl_mod.timeline(src, ivs)
+    assert first.extent == (1704067200000, 1704067200000)
+    assert len(tl_mod._TIMELINES) == 1
+    key = next(iter(tl_mod._TIMELINES))
     # poison the cached value: a second call must serve it (no recompute)
-    ts_mod._EXTENT_CACHE[key] = (123, 456)
-    assert ts_mod._footer_time_extent(src, files) == (123, 456)
+    poisoned = tl_mod.Timeline((), tl_mod.DAY_MS, (123, 456))
+    tl_mod._TIMELINES[key] = poisoned
+    assert tl_mod.timeline(src, ivs) is poisoned
+    # a second read of the same files is the same frame: the memo holds
+    assert tl_mod.timeline(spark.read.parquet(p), ivs) is poisoned
 
 
 # -- catalog staleness: external write into an existing partition dir -------
