@@ -131,18 +131,13 @@ class Catalog:
                 self.register(t, p, time_column=_DEFAULT_TIME_COLUMNS.get(t))
         return self
 
-    def register_managed(self, name: str) -> None:
-        """Datasource backed by a session-catalog table (saveAsTable) — the
-        path for bucketed layouts, whose bucketing metadata only survives
-        through spark.table()."""
-        self._specs[name] = DatasourceSpec(name, path="", fmt="managed")
-        self._invalidate(name)
-
     def table(self, name: str) -> DataFrame:
         if name not in self._specs:
             raise KeyError(f"unknown datasource: {name!r} (registered: {sorted(self._specs)})")
         spec = self._specs[name]
         if spec.fmt == "managed":
+            # a session-catalog table (saveAsTable) at spec.path: bucketed
+            # layouts keep their bucketing metadata only through spark.table
             return self.spark.table(name)
         token = self._path_token(spec.path)
         cached = self._df_cache.get(name)
@@ -199,7 +194,7 @@ class Catalog:
             reader = self.spark.read.format(spec.fmt)
             for k, v in opts.items():
                 reader = reader.option(k, v)
-            # basePath keeps directory-partition columns (__bucket) intact
+            # basePath keeps directory-partition columns intact
             # when loading leaf files directly
             return reader.option("basePath", spec.path).load(paths)
 

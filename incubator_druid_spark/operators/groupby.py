@@ -34,6 +34,8 @@ from incubator_druid_spark.model.columns import qcol
 from incubator_druid_spark.operators.dimensions import apply_dimensions
 from incubator_druid_spark.plans.translator import prepare_frame
 
+_GRANULE = "__granule"  # the time bucket key, renamed __time on return
+
 
 def run(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
     from incubator_druid_spark.operators.aggregations import rewrite_sketch_query
@@ -48,8 +50,8 @@ def run(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
 
     keys = list(dim_names)
     if gran.kind not in ("all",):
-        df = df.withColumn("__bucket", gran.floor(F.col(TIME_COLUMN)))
-        keys = ["__bucket"] + keys
+        df = df.withColumn(_GRANULE, gran.floor(F.col(TIME_COLUMN)))
+        keys = [_GRANULE] + keys
 
     ctx = FilterContext(df)
     agg_specs = query.get("aggregations") or []
@@ -117,8 +119,8 @@ def run(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
         sort_dims_first=bool(
             (query.get("context") or {}).get("sortByDimsFirst")))
 
-    if "__bucket" in out.columns:
-        out = out.withColumnRenamed("__bucket", TIME_COLUMN)
+    if _GRANULE in out.columns:
+        out = out.withColumnRenamed(_GRANULE, TIME_COLUMN)
     return out
 
 
@@ -226,9 +228,9 @@ def _having_ctx(out: DataFrame) -> FilterContext:
     __time as epoch MILLIS (ResultRow position 0 is a long;
     DimFilterHavingSpec.eval feeds it to the filter as a long) — expose the
     bucket timestamp as a millis virtual so selector/bound specs on __time
-    compare numerically.  At having time the bucket column is still named
-    __bucket (renamed on return)."""
-    tcol = "__bucket" if "__bucket" in out.columns else TIME_COLUMN
+    compare numerically.  At having time the bucket column still has its
+    internal name (renamed on return)."""
+    tcol = _GRANULE if _GRANULE in out.columns else TIME_COLUMN
     if tcol in out.columns:
         return FilterContext(
             out, virtual={TIME_COLUMN: F.unix_millis(qcol(tcol))})
@@ -281,9 +283,9 @@ def _apply_limit_spec(out: DataFrame, spec: dict | None, dim_names,
         # sortByDimsFirst (GroupByQuery.getRowOrdering).  The sort runs over
         # the aggregated result, not the input, so it stays cheap at scale.
         order = [qcol(d).asc() for d in dim_names]
-        if "__bucket" in out.columns:
-            order = (order + [F.col("__bucket").asc()] if sort_dims_first
-                     else [F.col("__bucket").asc()] + order)
+        if _GRANULE in out.columns:
+            order = (order + [F.col(_GRANULE).asc()] if sort_dims_first
+                     else [F.col(_GRANULE).asc()] + order)
         return out.orderBy(*order) if order else out
     if spec.get("type", "default") != "default":
         raise ValueError(f"unknown limitSpec type {spec.get('type')!r}")
@@ -320,10 +322,10 @@ def _apply_limit_spec(out: DataFrame, spec: dict | None, dim_names,
         # DefaultLimitSpec.makeComparator:393-396 — for granular queries the
         # row timestamp orders FIRST (then the limit columns); with
         # sortByDimsFirst the columns order first and time breaks ties
-        if "__bucket" in out.columns:
-            order_exprs = (order_exprs + [F.col("__bucket").asc()]
+        if _GRANULE in out.columns:
+            order_exprs = (order_exprs + [F.col(_GRANULE).asc()]
                            if sort_dims_first
-                           else [F.col("__bucket").asc()] + order_exprs)
+                           else [F.col(_GRANULE).asc()] + order_exprs)
         out = out.orderBy(*order_exprs)
     offset = int(spec.get("offset") or 0)
     if offset:

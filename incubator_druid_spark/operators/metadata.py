@@ -21,6 +21,7 @@ from pyspark.sql import types as T
 from incubator_druid_spark.catalog import Catalog, TIME_COLUMN
 from incubator_druid_spark.plans.translator import prepare_frame
 from incubator_druid_spark.session import local_frame
+from incubator_druid_spark.timeline import read_meta
 
 
 def time_boundary(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
@@ -132,7 +133,7 @@ def segment_metadata(query: dict, spark: SparkSession, catalog: Catalog) -> Data
         # SegmentMetadataQuery.java:58-67 AnalysisTypes ROLLUP / AGGREGATORS /
         # QUERYGRANULARITY — served from the ingest-spec sidecar the way the
         # reference reads them from per-segment metadata
-        meta = _read_table_meta(catalog, query["dataSource"]) or {}
+        meta = read_meta(catalog, query["dataSource"]) or {}
         if "rollup" in analysis:
             out = out.withColumn("rollup", F.lit(meta.get("rollup")))
         if "queryGranularity" in analysis:
@@ -144,17 +145,3 @@ def segment_metadata(query: dict, spark: SparkSession, catalog: Catalog) -> Data
                 if meta.get("aggregators") is not None else None
             out = out.withColumn("aggregators", F.lit(aggs_json))
     return out
-
-
-def _read_table_meta(catalog: Catalog, name) -> dict | None:
-    """Read the `_druid_meta.json` sidecar written by sources/ingest."""
-    import json as _json
-    import os as _os
-    if not isinstance(name, str) or name not in catalog:
-        return None
-    spec = catalog._specs[name]
-    p = _os.path.join(spec.path, "_druid_meta.json") if spec.path else None
-    if p and _os.path.exists(p):
-        with open(p) as fh:
-            return _json.load(fh)
-    return None

@@ -9,8 +9,8 @@ Zero-filling: Druid emits a row for every granularity bucket in the query
 intervals even when no rows landed there (unless context skipEmptyBuckets).
 Empty buckets hold aggregator identity values (count → 0, sums → NULL in
 SQL-compatible mode).  Like Druid's broker, only buckets the datasource's
-segment timeline covers are filled: those that overlap a segment day inside
-the query intervals and the [minTime, maxTime] extent.  The timeline
+segment timeline covers are filled: those that overlap a segment inside the
+query intervals and the [minTime, maxTime] extent.  The timeline
 (``timeline.py``) is memoized per datasource version, so the buckets are
 chosen in Python from ``Granularity.spine()``, the one enumeration
 (time zone, calendar periods and origin are exact; the bucket count is
@@ -19,8 +19,9 @@ a local relation (``session.local_frame``: an Arrow table of epoch millis,
 planned as a LocalTableScan that runs with no Python worker) and the
 aggregate is left-joined onto it, so the source is scanned once.  Nothing
 is built when zero-fill cannot add a bucket (skipEmptyBuckets, or no filter
-at day-or-coarser granularity).  A granular result has at most one row per
-bucket, so within the spine cap it is sorted in one partition.
+at day-or-coarser granularity over segments within UTC days).  A granular
+result has at most one row per bucket, so within the spine cap it is sorted
+in one partition.
 """
 
 from __future__ import annotations
@@ -36,7 +37,8 @@ from incubator_druid_spark.operators.aggregations import (compile_aggregations,
                                                           compile_post_aggregations)
 from incubator_druid_spark.plans.translator import prepare_frame
 from incubator_druid_spark.session import local_frame
-from incubator_druid_spark.timeline import DAY_MS, timeline
+from incubator_druid_spark.timeline import (DAY_MS, segment_granularity,
+                                            timeline, utc_day_segments)
 
 
 def run(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
@@ -110,15 +112,7 @@ def run(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
         if context.get("grandTotal"):
             # TimeseriesQueryQueryToolChest grand-total row: overall aggregate
             # appended with a null timestamp
-            tfolds = []
-            taggs = compile_aggregations(query.get("aggregations"), ctx,
-                                         query, folds=tfolds)
-            if not taggs and not tfolds:
-                taggs = [F.count(F.lit(1)).alias("count")]
-            total = grouped_agg(df, [], taggs, tfolds)
-            if post:
-                total = total.select("*", *compile_post_aggregations(
-                    query.get("postAggregations")))
+            total = grouped_agg(df, [], aggs, folds).select("*", *post)
             total = total.withColumn(TIME_COLUMN, F.lit(None).cast("timestamp"))
             out = out.unionByName(total)
     limit = query.get("limit")
@@ -142,21 +136,16 @@ def _zero_fill(out: DataFrame, query: dict, gran, spark: SparkSession,
     if context.get("skipEmptyBuckets"):
         return out
     p = gran.period
-    if query.get("filter") is None and (p.is_calendar or p.millis >= DAY_MS):
-        # no dim filter → the aggregated buckets and the segment timeline see
-        # the SAME rows, so every covered day-or-coarser bucket is already
-        # present: zero-fill is a no-op
+    if query.get("filter") is None and (p.is_calendar or p.millis >= DAY_MS) \
+            and utc_day_segments(segment_granularity(catalog,
+                                                     query["dataSource"])):
+        # no dim filter, and every segment lies in a UTC day holding rows:
+        # every covered day-or-coarser bucket is already present
         return out
-    # Druid only produces buckets where SEGMENTS exist: the broker condenses
-    # query intervals to the segment timeline before zero-filling, so a
-    # 1970-2020 query over 2011 data returns only 2011 buckets
-    # (testTimeseriesWithFirstLastAggregator runs FULL_ON and expects 4
-    # months, not 600), an INTERIOR day with no segment produces no bucket,
-    # and an hour inside a day segment zero-fills even when no row matches
-    # (testTimeseriesQueryZeroFilling fills all 24 hours of a day whose only
-    # row is at 00:00, and ends at maxTime 2011-04-15T00, not T23).
-    # Coverage is a property of the DATASOURCE, not the filtered rows — a
-    # filter matching nothing still fills every covered bucket
+    # Druid fills only buckets where SEGMENTS exist, within [minTime,
+    # maxTime] (testTimeseriesWithFirstLastAggregator: FULL_ON gives 4
+    # months, not 600; testTimeseriesQueryZeroFilling: all hours of a day
+    # segment up to maxTime), whatever the filter matches
     # (testTimeseriesWithNonExistentFilter).
     from incubator_druid_spark.plans.datasource import resolve_datasource
     ivs = parse_intervals(query.get("intervals"))

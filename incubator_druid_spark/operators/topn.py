@@ -29,6 +29,8 @@ from incubator_druid_spark.model.columns import qcol
 from incubator_druid_spark.operators.dimensions import apply_dimensions
 from incubator_druid_spark.plans.translator import prepare_frame
 
+_GRANULE = "__granule"  # the time bucket key, renamed __time on return
+
 
 def run(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
     from incubator_druid_spark.operators.aggregations import rewrite_sketch_query
@@ -41,8 +43,8 @@ def run(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
     keys = [dim]
     per_bucket = gran.kind != "all"
     if per_bucket:
-        df = df.withColumn("__bucket", gran.floor(F.col(TIME_COLUMN)))
-        keys = ["__bucket", dim]
+        df = df.withColumn(_GRANULE, gran.floor(F.col(TIME_COLUMN)))
+        keys = [_GRANULE, dim]
 
     # DimensionTopNMetricSpec.previousStop: pagination — only dimension
     # values strictly after the stop (query/topn/DimensionTopNMetricSpec.java)
@@ -94,11 +96,11 @@ def run(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
         # top-K within each time bucket → window rank (single shuffle on the
         # bucket+dim keys already done by the agg; rank reuses that partitioning)
         from pyspark.sql import Window
-        w = Window.partitionBy("__bucket").orderBy(*order)
+        w = Window.partitionBy(_GRANULE).orderBy(*order)
         out = (out.withColumn("__rank", F.row_number().over(w))
                   .filter(F.col("__rank") <= k).drop("__rank")
-                  .orderBy("__bucket", *order)
-                  .withColumnRenamed("__bucket", TIME_COLUMN))
+                  .orderBy(_GRANULE, *order)
+                  .withColumnRenamed(_GRANULE, TIME_COLUMN))
         return out
     return out.orderBy(*order).limit(k)
 

@@ -23,6 +23,8 @@ from incubator_druid_spark.catalog import Catalog, TIME_COLUMN
 from incubator_druid_spark.filters.filters import FilterContext, compile_filter
 from incubator_druid_spark.model.intervals import (interval_predicate, parse_intervals)
 from incubator_druid_spark.plans.datasource import resolve_datasource
+from incubator_druid_spark.timeline import (BUCKET, bucket_range,
+                                            segment_granularity)
 
 
 def _legacy_null_frame(df: DataFrame) -> DataFrame:
@@ -35,7 +37,7 @@ def _legacy_null_frame(df: DataFrame) -> DataFrame:
     from pyspark.sql import types as T
     cols = []
     for f in df.schema.fields:
-        if f.name == TIME_COLUMN or f.name == "__bucket":
+        if f.name in (TIME_COLUMN, BUCKET):
             cols.append(F.col(f.name))
         elif isinstance(f.dataType, T.StringType):
             cols.append(F.coalesce(F.col(f.name), F.lit("")).alias(f.name))
@@ -51,6 +53,12 @@ def _legacy_null_frame(df: DataFrame) -> DataFrame:
 def prepare_frame(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
     """dataSource → virtualColumns → intervals → filter, shared by all types."""
     df = resolve_datasource(query["dataSource"], spark, catalog)
+    ivs = parse_intervals(query.get("intervals"))
+    # an ingested table's recorded segments prune its partitions, unless a
+    # virtual column replaces the __time they were bucketed by
+    seg = segment_granularity(catalog, query["dataSource"]) if ivs and all(
+        vc.get("name") != TIME_COLUMN
+        for vc in query.get("virtualColumns") or []) else None
 
     ctx_opts = query.get("context") or {}
     # druid.generic.useDefaultValueForNull — legacy mode replaces null with
@@ -144,32 +152,10 @@ def prepare_frame(query: dict, spark: SparkSession, catalog: Catalog) -> DataFra
                 col = F.timestamp_millis(lenient_cast(col, "long"))
         df = df.withColumn(vc["name"], col)
 
-    ivs = parse_intervals(query.get("intervals"))
     if ivs:
         pred = interval_predicate(ivs, F.col(TIME_COLUMN))
-        # Segment-partition pruning: tables written by sources/ingest carry a
-        # `__bucket` partition column (yyyy-MM-dd'THH format — lexicographic
-        # order == chronological).  Adding a redundant range predicate on it
-        # turns the interval into Catalyst PartitionFilters, so at 100 TB the
-        # scan opens only the covered partition directories (the same role as
-        # Druid's segment-timeline pruning in CachingClusteredClient).
-        if "__bucket" in df.columns:
-            import datetime
-            lo_ms = min(s for s, _ in ivs)
-            hi = max(e for _, e in ivs) // 1000
-            fmt = "%Y-%m-%dT%H"
-            # the upper bound is always safe (a partition's start never
-            # exceeds its rows' times); the LOWER bound must be the
-            # interval start floored to the table's SEGMENT granularity —
-            # the raw start would exclude the first partially-covered
-            # segment (e.g. a noon start pruning away '...T00' of a
-            # day-partitioned table)
-            hi_s = datetime.datetime.fromtimestamp(
-                hi, tz=datetime.timezone.utc).strftime(fmt)
-            pred = pred & (F.col("__bucket") <= hi_s)
-            lo_s = _bucket_floor_lo(query, catalog, lo_ms)
-            if lo_s is not None:
-                pred = pred & (F.col("__bucket") >= lo_s)
+        if seg is not None:
+            pred = pred & bucket_range(seg, ivs)
         df = df.filter(pred)
 
     flt = query.get("filter")
@@ -180,51 +166,6 @@ def prepare_frame(query: dict, spark: SparkSession, catalog: Catalog) -> DataFra
         df = flush_lookup_joins(df)  # large-lookup refs inside the predicate
         df = df.filter(pred)
     return df
-
-
-def _bucket_floor_lo(query: dict, catalog, lo_ms: int) -> str | None:
-    """Lower partition-prune bound: the interval start floored to the
-    table's SEGMENT granularity, i.e. the partition value of the segment
-    CONTAINING lo.  The granularity comes from the ingest sidecar
-    (_druid_meta.json, operators/metadata._read_table_meta); tables with
-    no sidecar, non-table datasources, or complex granularities
-    (tz/origin/all) return None and the caller keeps only the upper
-    bound — weaker pruning, never wrong."""
-    import datetime
-
-    ds = query.get("dataSource")
-    if isinstance(ds, dict) and ds.get("type") == "table":
-        ds = ds.get("name")
-    if not isinstance(ds, str):
-        return None
-    from incubator_druid_spark.operators.metadata import _read_table_meta
-    try:
-        meta = _read_table_meta(catalog, ds)
-    except Exception:
-        return None
-    sg = (meta or {}).get("segmentGranularity")
-    if not isinstance(sg, str):
-        return None
-    from incubator_druid_spark.model.granularity import parse_granularity
-    try:
-        g = parse_granularity(sg)
-    except ValueError:
-        return None
-    if g.kind != "period" or g.tz or g.origin_millis is not None:
-        return None
-    p = g.period
-    utc = datetime.timezone.utc
-    if p.is_calendar:  # mirror Granularity._floor_months (UTC, epoch-based)
-        dt = datetime.datetime.fromtimestamp(lo_ms / 1000, tz=utc)
-        mi = (dt.year - 1970) * 12 + dt.month - 1
-        fl = (mi // p.months) * p.months
-        out = datetime.datetime(1970 + fl // 12, fl % 12 + 1, 1, tzinfo=utc)
-    else:  # mirror Granularity._floor_millis (P1W → Monday anchor)
-        anchor = (-259_200_000
-                  if p.weeks and p.millis == 604_800_000 else 0)
-        ms = ((lo_ms - anchor) // p.millis) * p.millis + anchor
-        out = datetime.datetime.fromtimestamp(ms / 1000, tz=utc)
-    return out.strftime("%Y-%m-%dT%H")
 
 
 def translate(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:

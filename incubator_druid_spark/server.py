@@ -22,6 +22,8 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 
 def make_handler(spark, catalog):
+    from pyspark.errors import AnalysisException
+
     from incubator_druid_spark import api
 
     class Handler(BaseHTTPRequestHandler):
@@ -92,7 +94,8 @@ def make_handler(spark, catalog):
                     self._send(200, out, ct)
                 else:
                     self._send(404, {"error": "not found"})
-            except (ValueError, KeyError) as e:
+            except (ValueError, KeyError, AnalysisException) as e:
+                # unknown names and unparsable SQL (a ParseException) too
                 self._send(400, {"error": str(e)})
             except api.QueryTimeoutError as e:
                 # QueryResource maps QueryTimeoutException to 504

@@ -49,7 +49,7 @@ def get_spark(app_name: str = "incubator-druid-spark", master: str | None = None
         .config("spark.sql.parquet.aggregatePushdown", "true")
         # default INT96 timestamps carry NO parquet min/max statistics —
         # killing __time predicate pushdown AND the footer-based timeline
-        # condensation (operators/timeseries.py _footer_time_extent); micros
+        # condensation (timeline.py _footer_time_extent); micros
         # is the modern spec type every reader (incl. DuckDB) understands
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # Broadcast decisions: static estimates come from COMPRESSED parquet

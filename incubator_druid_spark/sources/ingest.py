@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from incubator_druid_spark.catalog import Catalog, TIME_COLUMN
 from incubator_druid_spark.filters.filters import FilterContext, compile_filter
 from incubator_druid_spark.model.granularity import parse_granularity
+from incubator_druid_spark.timeline import BUCKET, bucket_key, write_meta
 
 
 # ---------------------------------------------------------------------------
@@ -272,8 +273,8 @@ def ingest(spark: SparkSession, spec: dict, catalog: Catalog,
     registers the datasource in the catalog.
 
     tuningConfig.partitionsSpec maps to the physical layout:
-    - default: time-partition directories (`__bucket`) only — Druid's
-      segment-per-interval model;
+    - default: time-partition directories only (the segment layout of
+      ``timeline.py``) — Druid's segment-per-interval model;
     - {"type": "hashed", "partitionDimensions": [...], "numShards": N}:
       additionally bucketBy the shard key (Druid's hashed shard spec).
       Bucketed tables join/aggregate on the shard key with NO shuffle —
@@ -292,11 +293,9 @@ def ingest(spark: SparkSession, spec: dict, catalog: Catalog,
     df = read_input(spark, spec.get("ioConfig", {}))
     df = apply_data_schema(df, ds)
 
-    seg_gran = (ds.get("granularitySpec") or {}).get("segmentGranularity", "day")
-    gran = parse_granularity(seg_gran)
-    out = df.withColumn("__bucket",
-                        F.date_format(gran.floor(F.col(TIME_COLUMN)),
-                                      "yyyy-MM-dd'T'HH"))
+    gspec = ds.get("granularitySpec") or {}
+    seg_gran = gspec.get("segmentGranularity", "day")
+    out = df.withColumn(BUCKET, bucket_key(parse_granularity(seg_gran)))
     tuning = spec.get("tuningConfig") or {}
     pspec = tuning.get("partitionsSpec") or {}
     # DynamicPartitionsSpec (Druid's default): segments roll over at
@@ -311,82 +310,50 @@ def ingest(spark: SparkSession, spec: dict, catalog: Catalog,
     # segments instead of replacing the datasource version
     mode = "append" if (spec.get("ioConfig") or {}).get("appendToExisting") \
         else "overwrite"
-    if pspec.get("type") == "hashed" and pspec.get("partitionDimensions"):
-        dims = pspec["partitionDimensions"]
-        shards = int(pspec.get("numShards", 8))
-        spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
-        (out.write.mode(mode)
-            .option("maxRecordsPerFile", max_rows)
-            .partitionBy("__bucket")
-            .bucketBy(shards, *dims)
-            .sortBy(*dims)
-            .option("path", path)
-            .saveAsTable(name))
-        catalog.register_managed(name)
-    elif pspec.get("type") in ("single_dim", "range"):
+    kind = pspec.get("type")
+    if kind in ("single_dim", "range", "zorder"):
         dims = ([pspec["partitionDimension"]]
                 if pspec.get("partitionDimension")
                 else list(pspec.get("partitionDimensions") or []))
         if not dims:
-            raise ValueError(f"{pspec['type']} partitionsSpec needs "
+            raise ValueError(f"{kind} partitionsSpec needs "
                              "partitionDimension(s)")
         shards = int(pspec.get("numShards")
                      or spark.sparkContext.defaultParallelism)
-        (out.repartitionByRange(shards, F.col("__bucket"),
-                                *[F.col(d) for d in dims])
-            .sortWithinPartitions("__bucket", *dims)
-            .write.mode(mode)
-            .option("maxRecordsPerFile", max_rows)
-            .partitionBy("__bucket")
-            .parquet(path))
-        catalog.register(name, path)
-    elif pspec.get("type") == "zorder":
-        # Superset of the reference's range specs (no Druid analogue):
-        # Morton-interleave several dimensions inside each time chunk so
-        # file min/max stats prune filters on ANY clustered dimension,
-        # not just the range chain's prefix (sources/layout.py).
-        from .layout import cluster_by_zorder
-        dims = list(pspec.get("partitionDimensions") or [])
-        if not dims:
-            raise ValueError("zorder partitionsSpec needs "
-                             "partitionDimensions")
-        shards = int(pspec.get("numShards")
-                     or spark.sparkContext.defaultParallelism)
-        (cluster_by_zorder(out, dims, bits=int(pspec.get("bits", 12)),
-                           num_partitions=shards,
-                           prefix_cols=["__bucket"])
-            .write.mode(mode)
-            .option("maxRecordsPerFile", max_rows)
-            .partitionBy("__bucket")
-            .parquet(path))
-        catalog.register(name, path)
+        if kind == "zorder":
+            # Superset of the reference's range specs (no Druid analogue):
+            # Morton-interleave several dimensions inside each time chunk
+            # so file min/max stats prune filters on ANY clustered
+            # dimension, not just the range chain's prefix
+            # (sources/layout.py).
+            from .layout import cluster_by_zorder
+            out = cluster_by_zorder(out, dims,
+                                    bits=int(pspec.get("bits", 12)),
+                                    num_partitions=shards,
+                                    prefix_cols=[BUCKET])
+        else:
+            out = (out.repartitionByRange(shards, F.col(BUCKET),
+                                          *[F.col(d) for d in dims])
+                      .sortWithinPartitions(BUCKET, *dims))
+    writer = (out.write.mode(mode).option("maxRecordsPerFile", max_rows)
+              .partitionBy(BUCKET))
+    if kind == "hashed" and pspec.get("partitionDimensions"):
+        dims = pspec["partitionDimensions"]
+        spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
+        (writer.bucketBy(int(pspec.get("numShards", 8)), *dims)
+            .sortBy(*dims)
+            .option("path", path)
+            .saveAsTable(name))
+        catalog.register(name, path, fmt="managed")
     else:
-        (out.write.mode(mode)
-            .option("maxRecordsPerFile", max_rows)
-            .partitionBy("__bucket")
-            .parquet(path))
+        writer.parquet(path)
         catalog.register(name, path)
-    _write_table_meta(path, ds)
+    # the ingest-spec facts segmentMetadata reports and the segment
+    # granularity the layout was written with — the analogue of the
+    # reference's per-segment metadata.drd
+    write_meta(path, {"rollup": bool(gspec.get("rollup")),
+                      "queryGranularity": gspec.get("queryGranularity"),
+                      "segmentGranularity": seg_gran,
+                      "aggregators": ds.get("metricsSpec") or []},
+               append=mode == "append")
     return path
-
-
-def _write_table_meta(path: str, data_schema: dict) -> None:
-    """`_druid_meta.json` sidecar: the ingest-spec facts segmentMetadata
-    reports (rollup / queryGranularity / aggregators / dimensions) — the
-    analogue of the reference's per-segment metadata.drd."""
-    import json
-    gran = data_schema.get("granularitySpec") or {}
-    meta = {
-        "rollup": bool(gran.get("rollup")),
-        "queryGranularity": gran.get("queryGranularity"),
-        "segmentGranularity": gran.get("segmentGranularity"),
-        "aggregators": data_schema.get("metricsSpec") or [],
-        "dimensions": [_dim_name(d) for d in
-                       (data_schema.get("dimensionsSpec") or {})
-                       .get("dimensions") or []],
-    }
-    try:
-        with open(os.path.join(path, "_druid_meta.json"), "w") as fh:
-            json.dump(meta, fh)
-    except OSError:
-        pass  # non-local FS (s3/hdfs) — sidecar is best-effort

@@ -29,6 +29,7 @@ from pyspark.sql import SparkSession
 
 from incubator_druid_spark.catalog import Catalog
 from incubator_druid_spark.session import local_frame
+from incubator_druid_spark.timeline import segment_dirs
 
 # common ISO periods → fixed millis (calendar periods handled via date_trunc)
 _FIXED = {
@@ -441,7 +442,6 @@ def register_metadata_views(spark: SparkSession, catalog: Catalog) -> None:
     Re-entrancy guarded: resolving a registered SQL view's schema below
     calls druid_sql, and a view that itself references sys.* /
     INFORMATION_SCHEMA.* would otherwise recurse unboundedly."""
-    import os as _os
     if getattr(_SQL_CTX, "in_metadata_views", False):
         return
     _SQL_CTX.in_metadata_views = True
@@ -481,17 +481,12 @@ def _register_metadata_views_inner(spark: SparkSession,
         # ingested tables, one per file for plain parquet sources; sizes from
         # the filesystem listing (the analogue of the coordinator's segment
         # metadata — no data read)
-        spec = catalog._specs[name]
-        path = spec.path
+        path = catalog._specs[name].path
         if path and _os.path.isdir(path):
-            buckets = [d for d in sorted(_os.listdir(path))
-                       if d.startswith("__bucket=")]
-            for b in buckets or [""]:
-                full = _os.path.join(path, b) if b else path
+            for key, full in segment_dirs(path) or [("", path)]:
                 size = sum(_os.path.getsize(_os.path.join(r, f))
                            for r, _, fs in _os.walk(full) for f in fs)
-                seg_id = f"{name}_{b.removeprefix('__bucket=')}" if b else name
-                segs.append((seg_id, name, b.removeprefix("__bucket="),
+                segs.append((f"{name}_{key}" if key else name, name, key,
                              size, 1, 1))
         elif path:
             segs.append((name, name, "", _os.path.getsize(path), 1, 1))

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from incubator_druid_spark.catalog import Catalog, TIME_COLUMN
 from incubator_druid_spark.model.granularity import parse_granularity
 from incubator_druid_spark.sources.ingest import apply_data_schema
+from incubator_druid_spark.timeline import BUCKET, bucket_key, write_meta
 
 
 def build_stream_source(spark: SparkSession, io_config: dict,
@@ -182,10 +183,7 @@ def compact(spark: SparkSession, streaming_path: str, table_path: str,
     quantile centroid structs, first/last pairs) are re-MERGED, not
     re-finalized — compile_rollup_aggregations detects the stored state
     types and emits the combining form."""
-    gran = parse_granularity(segment_granularity)
-    df = spark.read.parquet(streaming_path)
-    if "__bucket" in df.columns:
-        df = df.drop("__bucket")
+    df = spark.read.parquet(streaming_path).drop(BUCKET)
     if query_granularity and metrics:
         from incubator_druid_spark.sources.ingest import rollup
         df = rollup(df, dimensions or [], metrics, query_granularity)
@@ -196,9 +194,13 @@ def compact(spark: SparkSession, streaming_path: str, table_path: str,
     # the Druid-default 5M rows (DynamicPartitionsSpec), and the within-file
     # time sort keeps parquet min/max stats tight for interval pruning.
     n = spark.sparkContext.defaultParallelism
-    (df.withColumn("__bucket",
-                   F.date_format(gran.floor(F.col(TIME_COLUMN)), "yyyy-MM-dd'T'HH"))
-       .repartitionByRange(n, F.col("__bucket"), F.col(TIME_COLUMN))
-       .sortWithinPartitions("__bucket", TIME_COLUMN)
+    (df.withColumn(BUCKET, bucket_key(parse_granularity(segment_granularity)))
+       .repartitionByRange(n, F.col(BUCKET), F.col(TIME_COLUMN))
+       .sortWithinPartitions(BUCKET, TIME_COLUMN)
        .write.mode("overwrite").option("maxRecordsPerFile", max_rows_per_segment)
-       .partitionBy("__bucket").parquet(table_path))
+       .partitionBy(BUCKET).parquet(table_path))
+    # the layout's granularity, and the rollup facts segmentMetadata reports
+    write_meta(table_path, {
+        "segmentGranularity": segment_granularity,
+        "rollup": bool(query_granularity and metrics) or None,
+        "queryGranularity": query_granularity, "aggregators": metrics})

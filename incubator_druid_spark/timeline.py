@@ -1,49 +1,167 @@
-"""Segment timeline of a datasource version: the days that hold segments and
-the [minTime, maxTime] extent of their rows.
+"""Segment layout and timeline: the one module that knows how segments sit
+on disk.
 
-Druid's broker reduces a query's intervals to the segments of its in-memory
-``VersionedIntervalTimeline`` before it zero-fills buckets
-(``CachingClusteredClient``).  Segment files here are immutable, so a file
-list is one datasource version: its timeline is computed once and memoized
-by that list and the frame's analyzed plan (two frames over the same files
-can differ: a query datasource, or another time column), and an ingest or
-re-registration gets a new one.  It comes from the ``__bucket`` partition
-listing plus parquet footers where those exist, else from one aggregate job
-over the unfiltered source.  A frame that is not a single file relation
-(join, union, inline) is not memoized: nothing reuses it, so each query runs
-that job over the rows inside its own intervals.
+Batch ingest and compaction write a parquet directory partitioned by
+``__bucket``, each row's segment start (__time floored to the
+segmentGranularity) as UTC yyyy-MM-dd'T'HH whatever the session zone, so key
+order is time order; the ``_druid_meta.json`` sidecar beside it records the
+segment granularity.  A listed segment is [start, next bucket of that
+granularity): queries prune partitions by key range, and the timeline lists
+segments without reading a row.  A ``__bucket`` table with no recorded
+granularity is scanned like a plain table: no pruning, and its segments are
+the UTC days holding rows.
+
+The timeline is what Druid's broker reduces a query's intervals to before
+it zero-fills (``CachingClusteredClient``), memoized per file list (one
+datasource version) and analyzed plan.  A join, union or inline frame is not
+memoized; its scan reads only the rows inside the query intervals.
 """
 
 from __future__ import annotations
 
 import datetime
+import json
+import os
 import re
 from bisect import bisect_left, bisect_right
 from dataclasses import dataclass
+from urllib.parse import unquote
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from incubator_druid_spark.catalog import TIME_COLUMN
+from incubator_druid_spark.model.granularity import Granularity, parse_granularity
 from incubator_druid_spark.model.intervals import interval_predicate
 
-DAY_MS = 86_400_000
+BUCKET = "__bucket"
+META_FILE = "_druid_meta.json"
+HOUR_MS, DAY_MS = 3_600_000, 86_400_000
+_UTC = datetime.timezone.utc
+
+
+def bucket_key(gran: Granularity) -> Column:
+    """Each row's partition key, its __time floored to ``gran``, from epoch
+    arithmetic and a date: the session time zone never enters."""
+    ms = F.unix_millis(gran.floor(F.col(TIME_COLUMN)))
+    day = F.date_from_unix_date(F.floor(ms / DAY_MS).cast("int"))
+    hour = F.floor(F.pmod(ms, F.lit(DAY_MS)) / HOUR_MS).cast("string")
+    return F.concat(day.cast("string"), F.lit("T"), F.lpad(hour, 2, "0"))
+
+
+def write_meta(path: str, meta: dict, append: bool = False) -> None:
+    """Write the sidecar beside the partitions of a table just written.  An
+    append of another segment granularity leaves none recorded: keys of two
+    granularities are scanned like a plain table."""
+    old = _sidecar(path) if append else None
+    if old and old.get("segmentGranularity") != meta["segmentGranularity"]:
+        meta = {**meta, "segmentGranularity": None}
+    try:
+        with open(os.path.join(path, META_FILE), "w") as fh:
+            json.dump(meta, fh)
+    except OSError:
+        pass  # non-local FS (s3/hdfs): the table is scanned like a plain one
+
+
+def read_meta(catalog, datasource) -> dict | None:
+    """The sidecar of a table datasource, or None."""
+    name = _table(datasource)
+    path = name in catalog and catalog._specs[name].path
+    return _sidecar(path) if path else None
+
+
+def segment_granularity(catalog, datasource) -> Granularity | None:
+    """The recorded segment granularity of a table datasource in this
+    layout, else None.  A table without the partition column in the
+    catalog's cached schema costs no file access."""
+    name = _table(datasource)
+    if name in catalog and BUCKET in catalog.schema(name).fieldNames():
+        return _granularity(read_meta(catalog, name))
+    return None
+
+
+def utc_day_segments(seg: Granularity | None) -> bool:
+    """Whether every segment of granularity ``seg`` lies inside one UTC day
+    (None: a scanned table, whose segments are UTC days)."""
+    p = seg and seg.period
+    return seg is None or (not seg.tz and not p.is_calendar
+                           and DAY_MS % p.millis == 0
+                           and (seg.origin_millis or 0) % p.millis == 0)
+
+
+def bucket_range(seg: Granularity, intervals) -> Column:
+    """A predicate on the partition key keeping every segment that overlaps
+    the intervals, from the one holding the first instant to the last
+    instant's key; Catalyst makes it PartitionFilters."""
+    lo, hi = min(s for s, _ in intervals), max(e for _, e in intervals)
+    try:
+        return (F.col(BUCKET) >= _key(seg.spine(lo, lo + 1)[0])) \
+            & (F.col(BUCKET) <= _key(hi))
+    except (OverflowError, ValueError, OSError):
+        return F.lit(True)  # a bound past the calendar: no pruning
+
+
+def segment_dirs(path: str) -> list[tuple[str, str]]:
+    """(key, directory) of each segment partition under a table directory."""
+    prefix = BUCKET + "="
+    return [(d[len(prefix):], os.path.join(path, d))
+            for d in sorted(os.listdir(path)) if d.startswith(prefix)]
+
+
+def _table(datasource) -> str | None:
+    if isinstance(datasource, dict) and datasource.get("type") == "table":
+        datasource = datasource.get("name")
+    return datasource if isinstance(datasource, str) else None
+
+
+def _sidecar(path: str) -> dict | None:
+    try:
+        with open(os.path.join(path, META_FILE)) as fh:
+            return json.load(fh)
+    except (OSError, ValueError):
+        return None
+
+
+def _granularity(meta: dict | None) -> Granularity | None:
+    """The recorded segment granularity, if it buckets time."""
+    try:
+        gran = parse_granularity((meta or {})["segmentGranularity"])
+    except (ValueError, KeyError, TypeError):
+        return None
+    return gran if gran.kind == "period" else None
+
+
+def _key(ms: int) -> str:
+    t = datetime.datetime.fromtimestamp(ms / 1000, tz=_UTC)
+    return f"{t.year:04d}-{t.month:02d}-{t.day:02d}T{t.hour:02d}"
+
+
+def _segment(seg: Granularity, start: int) -> tuple[int, int]:
+    """The interval of the segment keyed at ``start``: up to the next bucket
+    after the key hour's last instant (a sub-hour granularity puts several
+    buckets under one key)."""
+    p = seg.period
+    width = p.millis or p.months * 31 * DAY_MS
+    return start, seg.spine(start + HOUR_MS - 1,
+                            start + HOUR_MS + 2 * width)[1]
+
+
+def _local(uri: str) -> str | None:
+    return "/" + unquote(uri[5:]).lstrip("/") if uri.startswith("file:") \
+        else None
 
 
 @dataclass(frozen=True)
 class Timeline:
-    """Segment starts (sorted) of one span, and the row extent; epoch millis,
-    UTC (Druid's default segmentGranularity is a UTC day)."""
+    """Segment intervals [start, end), sorted, and the row extent; epoch
+    millis, UTC."""
 
-    starts: tuple[int, ...]
-    span: int
+    segments: tuple[tuple[int, int], ...]
     extent: tuple[int, int] | None  # None: not known, no clipping
 
     def buckets(self, gran, intervals) -> list[int]:
         """Sorted starts of the ``gran`` buckets the timeline covers: those
-        that overlap a segment day inside a query interval and the extent.
-        Segments are pruned at their own span before they widen to days, so
-        an hour segment outside a sub-day interval adds no bucket."""
+        that overlap a segment inside a query interval and the extent."""
         keep = set()
         for s, e in intervals:
             spine = gran.spine(s, e)
@@ -51,12 +169,13 @@ class Timeline:
                 s, e = max(s, self.extent[0]), min(e, self.extent[1] + 1)
             if s >= e:
                 continue
-            segs = self.starts[bisect_right(self.starts, s - self.span):
-                               bisect_left(self.starts, e)]
-            for d in {m - m % DAY_MS for m in segs}:
-                # the buckets holding the day's first and last covered instant
-                # and every bucket between them
-                a, z = max(d, s), min(d + DAY_MS, e)
+            first = bisect_right(self.segments, s, key=lambda g: g[1])
+            for a, z in self.segments[first:]:
+                if a >= e:
+                    break
+                # the buckets holding the segment's first and last covered
+                # instant and every bucket between them
+                a, z = max(a, s), min(z, e)
                 keep.update(spine[bisect_right(spine, a) - 1:
                                   bisect_left(spine, z)])
         return sorted(keep)
@@ -96,40 +215,41 @@ def relation_files(src: DataFrame) -> list[str] | None:
 
 
 def _scanned_timeline(src: DataFrame, windowed: bool = False) -> Timeline:
-    """One aggregate over the source, reading only __time: the min and max
-    instant of every UTC day.  A ``windowed`` source holds only the rows
-    inside the query intervals, so rows past either end may exist and the
-    extent is left unknown."""
+    """One aggregate over the source, reading only __time: the UTC days
+    holding rows are the segments, their min and max instant the extent
+    (unknown for a ``windowed`` source, cut to the query intervals)."""
     t = F.unix_millis(F.col(TIME_COLUMN))
     rows = (src.where(F.col(TIME_COLUMN).isNotNull())
             .groupBy((t - F.pmod(t, F.lit(DAY_MS))).alias("d"))
             .agg(F.min(t).alias("lo"), F.max(t).alias("hi")).collect())
     extent = None if windowed or not rows else (
         min(r["lo"] for r in rows), max(r["hi"] for r in rows))
-    return Timeline(tuple(sorted(r["d"] for r in rows)), DAY_MS, extent)
+    return Timeline(tuple((r["d"], r["d"] + DAY_MS)
+                          for r in sorted(rows, key=lambda r: r["d"])),
+                    extent)
 
 
 def _listed_timeline(src: DataFrame, files: list[str]) -> Timeline | None:
-    """The timeline from metadata alone.  Tables written by sources/ingest
-    partition by __bucket (yyyy-MM-dd'T'HH of the floored segment
-    granularity), so the directory names enumerate the segments that exist.
-    An all-midnight listing is read as DAY segments (a day segment covers
-    the whole day, testTimeseriesQueryZeroFilling); any other hour makes
-    them hour segments.  None when the layout or the footers do not tell."""
-    if "__bucket" not in src.columns:
+    """The timeline from metadata alone: the partition keys enumerate the
+    segments that exist, the sidecar at their root gives each one's
+    interval, and the footers the extent.  None when the layout, the
+    sidecar or the footers do not tell."""
+    if BUCKET not in src.columns:
         return None
-    starts = set()
+    roots, starts = set(), set()
     for f in files:
-        m = re.search(r"__bucket=([^/]+)/", f)
+        m = re.fullmatch(rf"(.*)/{BUCKET}=([^/]+)/[^/]+", f)
         try:
-            h = datetime.datetime.strptime(m.group(1), "%Y-%m-%dT%H")
+            t = datetime.datetime.strptime(m.group(2), "%Y-%m-%dT%H")
         except (AttributeError, ValueError):
             return None  # a file outside the layout: let the scan decide
-        starts.add(int(h.replace(tzinfo=datetime.timezone.utc)
-                       .timestamp() * 1000))
-    extent = _footer_time_extent(files)
-    span = 3_600_000 if any(s % DAY_MS for s in starts) else DAY_MS
-    return extent and Timeline(tuple(sorted(starts)), span, extent)
+        roots.add(_local(m.group(1)))
+        starts.add(int(t.replace(tzinfo=_UTC).timestamp() * 1000))
+    root = roots.pop() if len(roots) == 1 else None
+    seg = root and _granularity(_sidecar(root))
+    extent = seg and _footer_time_extent(files)
+    return extent and Timeline(
+        tuple(_segment(seg, s) for s in sorted(starts)), extent)
 
 
 def _footer_time_extent(files: list[str]) -> tuple[int, int] | None:
@@ -141,25 +261,18 @@ def _footer_time_extent(files: list[str]) -> tuple[int, int] | None:
 
     if len(files) > 4096:
         return None
-    utc = datetime.timezone.utc
     ends = []
     for uri in files:
-        if not uri.startswith("file:"):
-            return None
-        path = "/" + uri[5:].lstrip("/")
         try:
-            md = pq.ParquetFile(path).metadata
-        except Exception:
-            return None
-        idx = next((i for i in range(md.num_columns)
-                    if md.schema.column(i).name == TIME_COLUMN), None)
-        if idx is None:
-            return None
+            md = pq.read_metadata(_local(uri))
+            idx = md.schema.names.index(TIME_COLUMN)
+        except (TypeError, ValueError, OSError):
+            return None  # not a local parquet file, or no physical __time
         for g in range(md.num_row_groups):
             st = md.row_group(g).column(idx).statistics
             if st is None or not st.has_min_max \
                     or not isinstance(st.min, datetime.datetime):
                 return None  # e.g. raw TIMESTAMP(NANOS)-as-long storage
-            ends += [int(t.replace(tzinfo=t.tzinfo or utc).timestamp() * 1000)
+            ends += [int(t.replace(tzinfo=t.tzinfo or _UTC).timestamp() * 1000)
                      for t in (st.min, st.max)]
     return (min(ends), max(ends)) if ends else None

@@ -149,14 +149,14 @@ def test_bucket_listing_rejects_join_frames(spark, tmp_path):
     # a join frame's timeline comes from a scan of the query intervals
     # alone (00:00-02:00 holds no row) and is not memoized
     assert tl_mod.timeline(joined, day) == tl_mod.Timeline(
-        (1704067200000,), tl_mod.DAY_MS, None)
-    assert tl_mod.timeline(joined, early).starts == ()
+        ((1704067200000, 1704153600000),), None)
+    assert tl_mod.timeline(joined, early).segments == ()
     assert tl_mod._TIMELINES == {}
-    # the single-relation frame resolves from the hour listing and is
-    # memoized under its file list
+    # the single-relation frame resolves from the hour listing and its
+    # recorded hour granularity, and is memoized under its file list
     tl = tl_mod.timeline(src, early)
-    assert tl.span == 3_600_000
-    assert tl.starts == (1704088800000, 1704092400000)
+    assert tl.segments == ((1704088800000, 1704092400000),
+                           (1704092400000, 1704096000000))
     assert list(tl_mod._TIMELINES.values()) == [tl]
 
 

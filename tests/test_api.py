@@ -306,32 +306,39 @@ def test_granular_timeseries_null_context(spark, foo_catalog):
         ("2000-01-01T02:00:00.000Z", 0)]
 
 
-def test_server_maps_query_timeout_to_504(monkeypatch):
-    """QueryResource answers a QueryTimeoutException with HTTP 504."""
+def _post(spark, catalog, path, body):
+    """(status, payload) of one POST, driven through the server's handler
+    with no socket."""
     import io
 
-    from incubator_druid_spark import api
     from incubator_druid_spark.server import make_handler
-
-    def timed_out(body, spark, catalog):
-        raise api.QueryTimeoutError("Query timeout of 1 ms exceeded")
-
-    monkeypatch.setattr(api, "sql_query", timed_out)
-    body = json.dumps({"query": "SELECT 1"}).encode()
+    data = json.dumps(body).encode()
     sent = {}
 
-    class Fake(make_handler(None, None)):
-        def __init__(self):  # no socket: drive do_POST directly
-            self.path = "/druid/v2/sql"
-            self.headers = {"Content-Length": str(len(body))}
-            self.rfile = io.BytesIO(body)
+    class Fake(make_handler(spark, catalog)):
+        def __init__(self):
+            self.path = path
+            self.headers = {"Content-Length": str(len(data))}
+            self.rfile = io.BytesIO(data)
 
         def _send(self, code, payload, content_type=None):
             sent.update(code=code, payload=payload)
 
     Fake().do_POST()
-    assert sent["code"] == 504
-    assert "timeout" in sent["payload"]["error"]
+    return sent["code"], sent["payload"]
+
+
+def test_server_maps_query_timeout_to_504(monkeypatch):
+    """QueryResource answers a QueryTimeoutException with HTTP 504."""
+    from incubator_druid_spark import api
+
+    def timed_out(body, spark, catalog):
+        raise api.QueryTimeoutError("Query timeout of 1 ms exceeded")
+
+    monkeypatch.setattr(api, "sql_query", timed_out)
+    code, payload = _post(None, None, "/druid/v2/sql", {"query": "SELECT 1"})
+    assert code == 504
+    assert "timeout" in payload["error"]
 
 
 def test_session_skips_call_site_capture(spark):
@@ -351,37 +358,27 @@ def test_session_skips_call_site_capture(spark):
 ])
 def test_unknown_names_keep_error_envelope(spark, catalog, monkeypatch,
                                            path, body):
-    """An unknown column or datasource answers the same error envelope and
-    status with call-site capture off as with it on."""
-    import io
-
+    """An unknown column or datasource is the client's error: 400, with the
+    same error envelope with call-site capture off as with it on."""
     import pyspark.errors.utils as perr
-
-    from incubator_druid_spark.server import make_handler
-    data = json.dumps(body).encode()
 
     def send(debugging):
         monkeypatch.setattr(perr, "_enable_debugging_cache", debugging)
-        sent = {}
-
-        class Fake(make_handler(spark, catalog)):
-            def __init__(self):  # no socket: drive do_POST directly
-                self.path = path
-                self.headers = {"Content-Length": str(len(data))}
-                self.rfile = io.BytesIO(data)
-
-            def _send(self, code, payload, content_type=None):
-                sent.update(code=code, payload=payload)
-
-        Fake().do_POST()
+        code, payload = _post(spark, catalog, path, body)
         # the first line names the error; the rest prints the analyzed
         # plan, whose expression ids differ from run to run
-        return sent["code"], list(sent["payload"]), \
-            sent["payload"]["error"].split("\n")[0]
+        return code, list(payload), payload["error"].split("\n")[0]
 
     off = send(False)
     assert off == send(True)
-    assert "nope" in off[2]
+    assert off[0] == 400 and "nope" in off[2]
+
+
+def test_unparsable_sql_is_a_client_error(spark, catalog):
+    """A Spark ParseException is an AnalysisException: 400, not 500."""
+    code, payload = _post(spark, catalog, "/druid/v2/sql",
+                          {"query": "SELECT value FROM events WHERE ("})
+    assert code == 400 and "PARSE_SYNTAX_ERROR" in payload["error"]
 
 
 def test_no_row_iterator_in_engine():

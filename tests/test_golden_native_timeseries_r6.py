@@ -34,7 +34,7 @@ def test_ts_query_zero_filling(spark, wiki_catalog):
     """testTimeseriesQueryZeroFilling — hour granularity over a 17-day
     interval zero-fills every empty hour between the two data days and
     condenses to the segment's exact extent (parquet footer statistics —
-    operators/timeseries.py _footer_time_extent), so the final bucket is
+    timeline.py _footer_time_extent), so the final bucket is
     2011-04-15T00 like the reference, 25 rows total."""
     out = ts(spark, wiki_catalog,
              granularity="hour",

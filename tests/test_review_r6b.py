@@ -224,7 +224,7 @@ def test_footer_extent_memoized(spark, tmp_path):
     assert len(tl_mod._TIMELINES) == 1
     key = next(iter(tl_mod._TIMELINES))
     # poison the cached value: a second call must serve it (no recompute)
-    poisoned = tl_mod.Timeline((), tl_mod.DAY_MS, (123, 456))
+    poisoned = tl_mod.Timeline((), (123, 456))
     tl_mod._TIMELINES[key] = poisoned
     assert tl_mod.timeline(src, ivs) is poisoned
     # a second read of the same files is the same frame: the memo holds

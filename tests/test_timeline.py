@@ -4,6 +4,7 @@ datasource gets a new one."""
 
 import datetime
 import json
+import os
 
 import pytest
 
@@ -13,6 +14,7 @@ from incubator_druid_spark.api import native_query
 from incubator_druid_spark.catalog import Catalog
 from incubator_druid_spark.model.granularity import parse_granularity
 from incubator_druid_spark.sources.ingest import ingest
+from incubator_druid_spark.streaming.ingest import compact
 
 d = datetime.datetime
 _TYPED_A = {"type": "selector", "dimension": "typ", "value": "a"}
@@ -129,7 +131,7 @@ def test_join_timeline_reads_only_the_query_intervals(spark, tmp_path):
     day4 = 1704326400000  # 2024-01-04T00:00Z
     ivs = [(day4, day4 + tl_mod.DAY_MS)]
     tl = tl_mod.timeline(joined, ivs)
-    assert tl == tl_mod.Timeline((day4,), tl_mod.DAY_MS, None)
+    assert tl == tl_mod.Timeline(((day4, day4 + tl_mod.DAY_MS),), None)
     # every hour of day 4: no extent of the rows inside it clips the day
     assert len(tl.buckets(parse_granularity("hour"), ivs)) == 24
 
@@ -185,22 +187,29 @@ def test_filtered_hour_timeseries_job_budget(spark, catalog):
     assert 0 < len(tracker.getJobIdsForGroup("timeline-query")) <= 4
 
 
-def _ingest_days(spark, cat, tmp_path, days):
-    src = str(tmp_path / f"rows{len(days)}.json")
+def _ingest(spark, cat, tmp_path, times, seg_gran, name, append=False):
+    """One typ=a row at each of ``times``, batch-ingested into ``name``
+    with ``seg_gran`` segments; returns the table directory."""
+    src = str(tmp_path / f"{name}{len(times)}.json")
     with open(src, "w") as f:
-        for day in days:
-            f.write(json.dumps({"t": f"2024-01-0{day}T06:00:00Z",
-                                "typ": "a", "v": 1}) + "\n")
-    ingest(spark, {
+        for t in times:
+            f.write(json.dumps({"t": t, "typ": "a", "v": 1}) + "\n")
+    return ingest(spark, {
         "dataSchema": {
-            "dataSource": "daily",
+            "dataSource": name,
             "timestampSpec": {"column": "t", "format": "iso"},
             "dimensionsSpec": {"dimensions": [
                 "typ", {"type": "long", "name": "v"}]},
-            "granularitySpec": {"segmentGranularity": "day"}},
+            "granularitySpec": {"segmentGranularity": seg_gran}},
         "ioConfig": {"inputSource": {"type": "local", "files": [src]},
-                     "inputFormat": {"type": "json"}},
+                     "inputFormat": {"type": "json"},
+                     "appendToExisting": append},
     }, cat, str(tmp_path / "seg"))
+
+
+def _ingest_days(spark, cat, tmp_path, days):
+    _ingest(spark, cat, tmp_path,
+            [f"2024-01-0{day}T06:00:00Z" for day in days], "day", "daily")
 
 
 def test_reingest_and_reregistration_add_buckets(spark, tmp_path):
@@ -225,3 +234,113 @@ def test_reingest_and_reregistration_add_buckets(spark, tmp_path):
     got = _ts(spark, cat, "hour")
     assert len(got) == 87 + 3 + 4  # 01-05T21..23 and 01-06T00..03
     assert got[-1] == (d(2024, 1, 6, 3), 0, None)
+
+
+# one row on each of four days, in three weeks: the week of 01-08 holds none
+_SPREAD = ["2024-01-01T00:00:00Z", "2024-01-15T06:00:00Z",
+           "2024-01-20T06:00:00Z", "2024-01-25T06:00:00Z"]
+_SPREAD_DAYS = ["2024-01-01T00", "2024-01-15T00", "2024-01-20T00",
+                "2024-01-25T00"]
+_MID_JANUARY = "2024-01-14T00:00:00Z/2024-01-21T00:00:00Z"
+
+
+def _days(first, last, hits=(15, 20)):
+    return [(d(2024, 1, day), int(day in hits))
+            for day in range(first, last + 1)]
+
+
+@pytest.mark.parametrize("seg_gran, writer, zone, times, granularity, "
+                         "interval, keys, expected", [
+    # a month segment covers every day of the interval: all 7 are filled
+    ("month", "ingest", "UTC", _SPREAD, "day", _MID_JANUARY,
+     ["2024-01-01T00"], _days(14, 20)),
+    ("month", "compact", "UTC", _SPREAD, "day", _MID_JANUARY,
+     ["2024-01-01T00"], _days(14, 20)),
+    # the week of 01-15 is a segment, the week of 01-08 (holding 01-14) not
+    ("week", "ingest", "UTC", _SPREAD, "day", _MID_JANUARY,
+     ["2024-01-01T00", "2024-01-15T00", "2024-01-22T00"], _days(15, 20)),
+    # the key is UTC whatever the session zone: the same answers
+    ("day", "ingest", "UTC", _SPREAD, "day", _MID_JANUARY,
+     _SPREAD_DAYS, [(d(2024, 1, 15), 1), (d(2024, 1, 20), 1)]),
+    ("day", "ingest", "America/Los_Angeles", _SPREAD, "day", _MID_JANUARY,
+     _SPREAD_DAYS, [(d(2024, 1, 15), 1), (d(2024, 1, 20), 1)]),
+    # hour segments fill their own hours only, not the hours between them
+    ("hour", "ingest", "UTC",
+     ["2024-01-01T06:30:00Z", "2024-01-01T20:30:00Z"], "hour",
+     "2024-01-01T00:00:00Z/2024-01-02T00:00:00Z",
+     ["2024-01-01T06", "2024-01-01T20"],
+     [(d(2024, 1, 1, 6), 1), (d(2024, 1, 1, 20), 1)]),
+])
+def test_recorded_segment_layout(spark, tmp_path, seg_gran, writer, zone,
+                                 times, granularity, interval, keys,
+                                 expected):
+    """Each table is written with UTC partition keys and its segment
+    granularity recorded beside them.  Zero-fill covers exactly the
+    recorded segments inside the interval, with or without a filter, and
+    partition pruning keeps every row inside a queried day."""
+    session = spark.newSession()
+    session.conf.set("spark.sql.session.timeZone", zone)
+    cat = Catalog(session)
+    if writer == "ingest":
+        path = _ingest(session, cat, tmp_path, times, seg_gran, "spread")
+    else:
+        rows = str(tmp_path / "rows")
+        session.createDataFrame(
+            [(d.fromisoformat(t).replace(tzinfo=None), "a", 1)
+             for t in times], "__time timestamp, typ string, v long") \
+            .write.parquet(rows)
+        path = str(tmp_path / "compacted")
+        compact(session, rows, path, segment_granularity=seg_gran)
+        cat.register("spread", path)
+    assert sorted(f.split("=", 1)[1] for f in os.listdir(path)
+                  if f.startswith("__bucket=")) == keys
+
+    def ts(filt, gran, ivs):
+        q = {"queryType": "timeseries", "dataSource": "spread",
+             "granularity": gran, "filter": filt, "intervals": [ivs],
+             "aggregations": [{"type": "count", "name": "c"}]}
+        return [(r.asDict().get("__time"), r["c"])
+                for r in translate(q, session, cat).collect()]
+
+    assert ts(_TYPED_A, granularity, interval) == expected
+    assert [t for t, _ in ts(None, granularity, interval)] == \
+        [t for t, _ in expected]
+    for t in times:
+        day = d.fromisoformat(t[:10])
+        ivs = f"{day:%Y-%m-%d}/{day + datetime.timedelta(days=1):%Y-%m-%d}"
+        assert [c for _, c in ts(None, "all", ivs)] == \
+            [sum(x[:10] == t[:10] for x in times)]
+
+
+def test_partition_column_groups_as_a_dimension(spark, tmp_path):
+    """groupBy and topN bucket time under their own internal name, so an
+    ingested table's partition column groups as itself, at granularity all
+    or per day."""
+    cat = Catalog(spark)
+    _ingest(spark, cat, tmp_path, _SPREAD[:2], "day", "spread")
+    q = {"dataSource": "spread", "intervals": ["2024-01-01/2024-02-01"],
+         "aggregations": [{"type": "count", "name": "c"}]}
+    keys = ["2024-01-01T00", "2024-01-15T00"]
+    for gran in ("all", "day"):
+        out = translate({**q, "queryType": "groupBy", "granularity": gran,
+                         "dimensions": ["__bucket"]}, spark, cat).collect()
+        assert [(r["__bucket"], r["c"]) for r in out] == \
+            [(k, 1) for k in keys]
+    out = translate({**q, "queryType": "topN", "granularity": "day",
+                     "dimension": "__bucket", "metric": "c",
+                     "threshold": 5}, spark, cat).collect()
+    assert [(r["__time"], r["__bucket"]) for r in out] == \
+        [(d(2024, 1, 1), keys[0]), (d(2024, 1, 15), keys[1])]
+
+
+def test_append_of_another_granularity_is_scanned(spark, tmp_path):
+    """Day segments appended to a month-segmented table record no one
+    granularity, so the month partition holding 01-15 is not pruned away
+    by a day-floored bound."""
+    cat = Catalog(spark)
+    _ingest(spark, cat, tmp_path, _SPREAD[:2], "month", "spread")
+    _ingest(spark, cat, tmp_path, _SPREAD[2:], "day", "spread", append=True)
+    q = {"queryType": "timeseries", "dataSource": "spread",
+         "granularity": "all", "intervals": ["2024-01-15/2024-01-21"],
+         "aggregations": [{"type": "count", "name": "c"}]}
+    assert [r["c"] for r in translate(q, spark, cat).collect()] == [2]
