@@ -163,6 +163,11 @@ class Catalog:
                 tc = tc.cast("timestamp")
             df = df.withColumn(TIME_COLUMN, tc)
         if token is not None:
+            # a one-segment source is one partition: every operator above
+            # it runs inside the scan's task, with no exchange to plan
+            from .timeline import one_row_group
+            if one_row_group(df):
+                df = df.coalesce(1)
             self._df_cache[name] = (token, df)
         return df
 

@@ -21,7 +21,7 @@ from pyspark.sql import types as T
 from incubator_druid_spark.catalog import Catalog, TIME_COLUMN
 from incubator_druid_spark.plans.translator import prepare_frame
 from incubator_druid_spark.session import local_frame
-from incubator_druid_spark.timeline import read_meta
+from incubator_druid_spark.timeline import BUCKET, read_meta
 
 
 def time_boundary(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
@@ -78,7 +78,8 @@ def segment_metadata(query: dict, spark: SparkSession, catalog: Catalog) -> Data
     analysis = set(["cardinality", "minmax", "size"]
                    if requested is None else requested)
 
-    fields = df.schema.fields
+    # the segment layout's partition key is not a column of the data
+    fields = [f for f in df.schema.fields if f.name != BUCKET]
     approx = bool((query.get("context") or {}).get("useApproximateCardinality"))
 
     def _col_job(f):

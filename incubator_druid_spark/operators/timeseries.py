@@ -153,8 +153,9 @@ def _zero_fill(out: DataFrame, query: dict, gran, spark: SparkSession,
                     ivs).buckets(gran, ivs)
     spine = local_frame(spark, [(m,) for m in keep],
                         f"{TIME_COLUMN} timestamp")
-    # no hint: the spine is the preserved side (Spark cannot build it) and
-    # AQE broadcasts `out` from its exact post-aggregation size
+    # the spine is one partition: over a one-partition source the join
+    # plans no exchange; otherwise AQE broadcasts `out` from its exact
+    # post-aggregation size (the spine, the preserved side, cannot be built)
     joined = spine.join(out, on=TIME_COLUMN, how="left")
     # aggregator identity values for empty buckets
     fills = []

@@ -4,9 +4,13 @@ Design notes (100 TB target):
 - AQE on: runtime coalescing of shuffle partitions, skew-join splitting, and
   dynamic broadcast conversion replace Druid's hand-tuned per-segment scatter
   (reference: server/.../CachingClusteredClient.java does static segment pruning;
-  AQE re-plans with real statistics).
+  AQE re-plans with real statistics).  A source of one parquet row group is
+  read as one partition (``Catalog.table``, decided by
+  ``timeline.one_row_group``), so a query over it plans no exchange and AQE
+  has no stage to split: it runs as one job.
 - shuffle.partitions defaults to cores locally; on a real cluster this is
-  overridden (AQE coalesces down, so oversizing is safe).
+  overridden (AQE coalesces down, so oversizing is safe).  It applies only
+  where a plan shuffles: never above a one-partition source alone.
 - Arrow enabled for the few pandas-UDF paths (sketch interop, multimodal).
 - Driver-built frames (zero-fill spine, lookups, metadata rows, inline
   datasources, SQL system views) go through ``local_frame``: an Arrow table
@@ -90,7 +94,9 @@ def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
     worker.  An Arrow table plans a ``LocalTableScan`` that runs in the JVM
     alone.  ``rows`` is a sequence of tuples in ``schema`` (a DDL string)
     order.  ``timestamp`` columns take epoch millis and become timestamps
-    JVM-side via ``timestamp_millis``, so the host time zone never enters."""
+    JVM-side via ``timestamp_millis``, so the host time zone never enters.
+    The frame is one partition, like a one-segment source, so joining the
+    two plans no exchange."""
     import pyarrow as pa
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
@@ -104,7 +110,7 @@ def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
     table = pa.table([pa.array(c, type=to_arrow_type(f.dataType))
                       for c, f in zip(cols, wire.fields)],
                      names=wire.fieldNames())
-    df = spark.createDataFrame(table, schema=wire)
+    df = spark.createDataFrame(table, schema=wire).coalesce(1)
     times = {f.name: F.timestamp_millis(
                  F.col("`" + f.name.replace("`", "``") + "`"))
              for f in fields if isinstance(f.dataType, T.TimestampType)}

@@ -182,9 +182,14 @@ def apply_data_schema(df: DataFrame, data_schema: dict) -> DataFrame:
     metrics = data_schema.get("metricsSpec") or []
     gran_spec = data_schema.get("granularitySpec") or {}
 
+    # DataSchema adds the timestamp input column to the dimension
+    # exclusions: it is stored as __time, not again as a dimension
+    excluded = {TIME_COLUMN, ts_spec.get("column", "timestamp")}
     if gran_spec.get("rollup") and metrics:
         df = rollup(df, dims, metrics, gran_spec.get("queryGranularity", "none"))
-    elif dims:
+    elif not dims:
+        df = df.drop(*(excluded - {TIME_COLUMN}))
+    else:
         names = [_dim_name(d) for d in dims]
         # rollup disabled but metrics declared: Druid still stores ROW-LEVEL
         # metric columns (each row is its own group) — the aggregator's
@@ -210,7 +215,7 @@ def apply_data_schema(df: DataFrame, data_schema: dict) -> DataFrame:
             mcols.append(col.alias(mname))
         df = df.select(TIME_COLUMN, *[n for n in names if n in df.columns],
                        *[c for c in df.columns
-                         if c not in names and c != TIME_COLUMN
+                         if c not in names and c not in excluded
                          and metrics == []],
                        *mcols)
     return df

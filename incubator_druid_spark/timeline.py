@@ -11,6 +11,11 @@ segments without reading a row.  A ``__bucket`` table with no recorded
 granularity is scanned like a plain table: no pruning, and its segments are
 the UTC days holding rows.
 
+The module also decides which sources are read as one partition
+(``one_row_group``): local parquet of one row group in all is one segment,
+which Spark scans in one task anyway, so the catalog tells Catalyst and a
+query over it plans no exchange, as Druid merges nothing for one segment.
+
 The timeline is what Druid's broker reduces a query's intervals to before
 it zero-fills (``CachingClusteredClient``), memoized per file list (one
 datasource version) and analyzed plan.  A join, union or inline frame is not
@@ -250,6 +255,30 @@ def _listed_timeline(src: DataFrame, files: list[str]) -> Timeline | None:
     extent = seg and _footer_time_extent(files)
     return extent and Timeline(
         tuple(_segment(seg, s) for s in sorted(starts)), extent)
+
+
+def one_row_group(src: DataFrame) -> bool:
+    """Whether a single-relation frame reads local parquet holding at most
+    one row group in all: a datasource of one segment, which Spark scans in
+    one task whatever its split count (a row group is its smallest split).
+    False for non-local, non-parquet or unreadable input."""
+    import pyarrow.parquet as pq
+
+    files = relation_files(src)
+    if not files:
+        return False
+    groups = 0
+    for uri in files:
+        path = _local(uri)
+        if path is None:
+            return False  # not on the local file system
+        try:
+            groups += pq.read_metadata(path).num_row_groups
+        except (ValueError, OSError):
+            return False  # not parquet, or unreadable
+        if groups > 1:
+            return False
+    return True
 
 
 def _footer_time_extent(files: list[str]) -> tuple[int, int] | None:

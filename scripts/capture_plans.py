@@ -1,15 +1,16 @@
-"""Capture .explain("formatted") output for board queries or native queries.
+"""Capture .explain("formatted") output for board, native and SQL queries.
 
 Usage: python scripts/capture_plans.py <out_dir> <suffix> item1,item2,...
 e.g.:  python scripts/capture_plans.py plans/r09 after dedup_fingerprint,ts_day
        python scripts/capture_plans.py plans/r11 after plans/r11/ts_hour_filtered.json
+       python scripts/capture_plans.py plans/r11 after plans/r11/sql_hourly.sql
 
-An item is a board entry name from ``__spark_entry__.queries()`` or the
-path of a native query JSON file, which is translated against the catalog
-of the testdata directory.  Writes <out_dir>/<name>_<suffix>.txt for each
-item (a JSON file's name is its stem), using the sf0.1 testdata (the bench
-scale; ``SPARK_GRAFT_SF_DIR`` overrides it) so plan shapes match the
-benched queries.
+An item is a board entry name from ``__spark_entry__.queries()``, the path
+of a native query JSON file, or the path of a Druid SQL file; files run
+against the catalog of the testdata directory.  Writes
+<out_dir>/<name>_<suffix>.txt for each item (a file's name is its stem),
+using the sf0.1 testdata (the bench scale; ``SPARK_GRAFT_SF_DIR`` overrides
+it) so plan shapes match the benched queries.
 """
 
 from __future__ import annotations
@@ -30,18 +31,22 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from incubator_druid_spark import get_spark, translate
     from incubator_druid_spark.catalog import load_catalog
+    from incubator_druid_spark.sql.functions import druid_sql
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
     os.makedirs(out_dir, exist_ok=True)
     for item in items:
+        name = os.path.splitext(os.path.basename(item))[0]
         if item.endswith(".json"):
             with open(item) as fh:
-                query = json.load(fh)
-            name = os.path.splitext(os.path.basename(item))[0]
-            df = translate(query, spark, load_catalog(spark, sf_dir))
+                df = translate(json.load(fh), spark,
+                               load_catalog(spark, sf_dir))
+        elif item.endswith(".sql"):
+            with open(item) as fh:
+                df = druid_sql(spark, fh.read(), load_catalog(spark, sf_dir))
         else:
-            name, df = item, qs[item](spark, sf_dir)
+            df = qs[item](spark, sf_dir)
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")

@@ -265,6 +265,51 @@ def test_native_scan_is_one_spark_job(spark, tmp_path):
         "test-native-scan-one-job")) == 1
 
 
+_CLICKS = {"type": "selector", "dimension": "event_type", "value": "click"}
+_JAN = ["2024-01-01T00:00:00Z/2024-01-04T00:00:00Z"]
+_COUNT = [{"type": "count", "name": "n"}]
+
+
+@pytest.mark.parametrize("query", [
+    {"queryType": "timeseries", "granularity": "hour", "filter": _CLICKS},
+    {"queryType": "groupBy", "granularity": "day",
+     "dimensions": ["event_type"]},
+    {"queryType": "topN", "granularity": "all", "dimension": "event_type",
+     "metric": "n", "threshold": 3},
+    "SELECT event_type, COUNT(*) AS n FROM events GROUP BY event_type "
+    "ORDER BY 1",
+], ids=["timeseries_zero_fill", "groupby_day", "topn", "sql_order_by"])
+def test_one_row_group_query_is_one_spark_job(spark, catalog, query,
+                                              request):
+    """The testdata events table is one parquet row group, so it is read as
+    one partition: the aggregate, the zero-fill join and the sort run in
+    the scan's task, as one Spark job with no Exchange in the plan."""
+    from incubator_druid_spark import translate
+    from incubator_druid_spark.api import native_query, sql_query
+    from incubator_druid_spark.sql.functions import druid_sql
+    if isinstance(query, str):
+        run = lambda: sql_query({"query": query}, spark, catalog)  # noqa: E731
+        df = druid_sql(spark, query, catalog)
+    else:
+        query = {**query, "dataSource": "events", "intervals": _JAN,
+                 "aggregations": _COUNT}
+        run = lambda: native_query(query, spark, catalog)  # noqa: E731
+        df = translate(query, spark, catalog)
+    first = run()  # resolves the table and memoizes its timeline
+    assert first
+    sc = spark.sparkContext
+    group = request.node.name
+    sc.setJobGroup(group, "one-partition query")
+    try:
+        assert run() == first
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert "Exchange" not in \
+        df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_native_instants_ignore_host_zone(spark, catalog):
     """Native results render in UTC whatever the server machine's zone
     (Granularities.nullToUtc): the day bucket 2024-01-01T00:00Z stays

@@ -55,7 +55,8 @@ def test_partial_aggregation(spark, catalog):
          "dimensions": ["event_type"],
          "aggregations": [{"type": "doubleSum", "name": "t", "fieldName": "value"}]}
     plan = plan_of(translate(q, spark, catalog))
-    # two HashAggregate nodes (partial + final) around one shuffle
+    # two HashAggregate nodes (partial + final), with one shuffle between
+    # them over a source of more than one partition
     assert plan.count("HashAggregate") >= 2
     assert "partial_sum" in plan or "Partial" in plan
 
@@ -98,6 +99,59 @@ def test_whole_stage_codegen_everywhere(spark, catalog):
     # AQE hides WholeStageCodegen markers pre-execution; HashAggregate over
     # plain builtin expressions is the codegen path
     assert "HashAggregate" in plan
+
+
+_DAY_GROUPBY = {"queryType": "groupBy", "dataSource": "events",
+                "granularity": "day", "dimensions": ["event_type"],
+                "intervals": ["2024-01-01T00:00:00Z/2024-01-04T00:00:00Z"],
+                "filter": {"type": "selector", "dimension": "event_type",
+                           "value": "click"},
+                "aggregations": [{"type": "count", "name": "n"}]}
+
+
+@pytest.mark.parametrize("row_group_size, exchange", [
+    (None, False), (500, True)])
+def test_one_partition_read_only_for_one_row_group(spark, tmp_path,
+                                                   row_group_size,
+                                                   exchange):
+    """A source of one parquet row group is read as one partition, so its
+    groupBy plans no Exchange; the same rows written as two row groups keep
+    the shuffled plan, and either way the filter reaches the scan."""
+    import pyarrow.parquet as pq
+    from incubator_druid_spark.catalog import Catalog
+    path = str(tmp_path / "events.parquet")
+    table = pq.read_table(f"{SF_DIR}/events.parquet")
+    pq.write_table(table, path, row_group_size=row_group_size)
+    assert pq.read_metadata(path).num_row_groups == (2 if exchange else 1)
+    cat = Catalog(spark)
+    cat.register("events", path, time_column="ts")
+    plan = plan_of(translate(_DAY_GROUPBY, spark, cat))
+    assert ("Exchange" in plan) == exchange
+    assert ("Coalesce" in plan) != exchange
+    assert re.search(r"PushedFilters:.*EqualTo\(event_type,click\)", plan)
+
+
+def test_non_parquet_source_keeps_its_partitions(spark, tmp_path):
+    """Only parquet footers tell how many row groups a source holds: a CSV
+    table is read as Spark splits it, as before."""
+    from incubator_druid_spark.catalog import Catalog
+    path = str(tmp_path / "events.csv")
+    spark.read.parquet(f"{SF_DIR}/events.parquet").coalesce(1) \
+        .write.csv(path, header=True)
+    cat = Catalog(spark)
+    cat.register("events", path, fmt="csv", header="true")
+    assert "Coalesce" not in plan_of(cat.table("events"))
+
+
+def test_one_partition_side_of_a_join_is_shuffled(spark, catalog):
+    """Joined with a multi-partition frame, the one-partition events side is
+    hash-partitioned into the shuffle's partitions: the larger frame is not
+    collapsed to one task."""
+    events = catalog.table("events")
+    ids = spark.range(0, 1000, 1, 4)
+    plan = plan_of(events.join(ids, events["event_id"] == ids["id"]))
+    widths = re.findall(r"hashpartitioning\([^()]*, (\d+)\)", plan)
+    assert widths and all(int(n) > 1 for n in widths)
 
 
 def test_scan_no_order_no_shuffle(spark, catalog):
@@ -190,6 +244,9 @@ def test_aqe_skew_join_split(spark):
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1m",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "256k",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2.0",
+        # a hot partition can exceed twice the median only with enough
+        # partitions: pinned, so the test does not follow the core count
+        "spark.sql.shuffle.partitions": "8",
     }
     saved = {k: spark.conf.get(k) for k in tuned}
     for k, v in tuned.items():

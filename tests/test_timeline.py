@@ -344,3 +344,28 @@ def test_append_of_another_granularity_is_scanned(spark, tmp_path):
          "granularity": "all", "intervals": ["2024-01-15/2024-01-21"],
          "aggregations": [{"type": "count", "name": "c"}]}
     assert [r["c"] for r in translate(q, spark, cat).collect()] == [2]
+
+
+@pytest.mark.parametrize("dimensions", [["typ"], []],
+                         ids=["declared", "schemaless"])
+def test_segment_metadata_reports_data_columns(spark, tmp_path, dimensions):
+    """segmentMetadata on an ingested table lists the data's columns: not
+    the layout's partition key, and not the timestampSpec input column,
+    which is stored as __time (Druid's dimension exclusions)."""
+    src = str(tmp_path / "two.json")
+    with open(src, "w") as f:
+        for t in _SPREAD[:2]:
+            f.write(json.dumps({"t": t, "typ": "a"}) + "\n")
+    cat = Catalog(spark)
+    ingest(spark, {
+        "dataSchema": {
+            "dataSource": "two",
+            "timestampSpec": {"column": "t", "format": "iso"},
+            "dimensionsSpec": {"dimensions": dimensions},
+            "granularitySpec": {"segmentGranularity": "day"}},
+        "ioConfig": {"inputSource": {"type": "local", "files": [src]},
+                     "inputFormat": {"type": "json"}},
+    }, cat, str(tmp_path / "seg"))
+    md = translate({"queryType": "segmentMetadata", "dataSource": "two",
+                    "merge": True}, spark, cat).collect()
+    assert sorted(r["column"] for r in md) == ["__time", "typ"]
