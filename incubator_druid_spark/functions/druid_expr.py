@@ -749,7 +749,8 @@ def _cols(f):
 
 
 def _registry() -> dict:
-    from incubator_druid_spark.model.granularity import parse_period, Granularity
+    from incubator_druid_spark.model.granularity import (Granularity,
+                                                         parse_granularity)
 
     def _gran(period, origin=None, tz=None) -> Granularity:
         if isinstance(tz, Column):
@@ -761,12 +762,9 @@ def _registry() -> dict:
             raise ValueError(
                 "timestamp macro timezone must be a literal string "
                 "(dynamic per-row timezones are not supported)")
-        g = Granularity("period", parse_period(lit_str(period)), None, lit_str(tz))
-        o = lit_val(origin) if origin is not None else None
-        if o is not None:
-            from incubator_druid_spark.model.intervals import parse_iso_millis
-            g.origin_millis = parse_iso_millis(o) if isinstance(o, str) else int(o)
-        return g
+        return parse_granularity({"period": lit_str(period),
+                                  "origin": lit_val(origin),
+                                  "timeZone": lit_str(tz)})
 
     def _ts_c(ts, p=None):
         # a LONG literal fed to a timestamp macro is epoch millis

@@ -1,4 +1,4 @@
-"""Druid granularity system → Spark time-bucketing expressions.
+"""Druid granularity system → Spark SQL time-bucketing text.
 
 Reference semantics:
 - GranularityType enumerates SECOND…MINUTE, FIVE/TEN/FIFTEEN/THIRTY_MINUTE, HOUR,
@@ -9,20 +9,33 @@ Reference semantics:
   relative to the origin.
 - DurationGranularity: fixed millis bucket (granularity/DurationGranularity.java).
 - ALL → single bucket (no time grouping); NONE → identity (group by raw timestamp).
-- Druid weeks are ISO weeks (Monday start) — Spark's date_trunc('week') matches.
+- Druid weeks are ISO weeks (Monday start) — only the exact P1W spelling.
 
-Spark-first design: everything compiles to a Column expression over a timestamp
-column so it stays inside whole-stage codegen — no UDFs.  Fixed-width periods
-use millis arithmetic (`floor((t - origin) / width) * width + origin`), which
-Catalyst constant-folds; month-based periods use date_trunc / a months-arithmetic
-expression.  Flooring with a timezone shifts into local wall time, floors, and
-shifts back (matching PeriodGranularity.truncate).
+This module is the only code that knows period arithmetic.  ``floor_sql``,
+``ceil_sql`` and ``shift_sql`` return Spark SQL text specialized to the
+parsed period, origin and zone, all inlined as literals: native operators
+apply it with ``F.expr``, and the Druid SQL rewriter splices it into the
+query text for TIME_FLOOR/TIME_CEIL/TIME_SHIFT and FLOOR/CEIL … TO.  The
+text reads no session time zone.  It works on epoch millis and on local
+wall-clock millis, ``unix_millis(from_utc_timestamp(t, '<zone>'))``, with
+calendar fields taken from zone-free DATEs.  A bucket start is the latest
+instant ≤ t whose local wall time lies on the period grid: the wall floor
+maps back with t's own UTC offset when that offset still holds there, else
+through ``to_utc_timestamp`` (Joda's convertLocalToUTC with the original
+instant), so the repeated hour of a DST fall-back is two buckets.
+
+A Column operand goes through ``floor``/``ceil``/``shift``: a session
+temporary function whose body is the same text.  ``spine`` enumerates the
+bucket starts driver-side with the same arithmetic.
 """
 
 from __future__ import annotations
 
+import hashlib
 import re
 from dataclasses import dataclass
+from datetime import datetime, timedelta, timezone
+from functools import cached_property
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -31,6 +44,12 @@ from pyspark.sql import functions as F
 SPINE_CAP = 500_000
 
 _MILLIS = {"s": 1000, "m": 60_000, "h": 3_600_000, "d": 86_400_000, "w": 7 * 86_400_000}
+_DAY = _MILLIS["d"]
+_EPOCH = datetime(1970, 1, 1)
+_MS = timedelta(milliseconds=1)
+_EPOCH_MONDAY = -259_200_000  # 1969-12-29T00:00Z; epoch itself is a Thursday
+# the widest wall-clock jump of a zone transition that a spine must look past
+_MAX_SHIFT = 3 * _MILLIS["h"]
 
 # Simple-name → ISO period (GranularityType.java:34-84)
 SIMPLE_PERIODS = {
@@ -39,6 +58,10 @@ SIMPLE_PERIODS = {
     "hour": "PT1H", "six_hour": "PT6H", "eight_hour": "PT8H",
     "day": "P1D", "week": "P1W", "month": "P1M", "quarter": "P3M", "year": "P1Y",
 }
+
+#: the periods a non-literal Druid SQL period argument may name
+COMMON_PERIODS = ("PT1S", "PT1M", "PT5M", "PT10M", "PT15M", "PT30M", "PT1H",
+                  "PT6H", "PT8H", "PT12H", "P1D", "P1W", "P1M", "P3M", "P1Y")
 
 _PERIOD_RE = re.compile(
     r"^P(?:(?P<y>\d+)Y)?(?:(?P<mo>\d+)M)?(?:(?P<w>\d+)W)?(?:(?P<d>\d+)D)?"
@@ -78,8 +101,25 @@ def parse_period(iso: str) -> Period:
                       g[k] for k in ("d", "h", "mi", "s")))
 
 
+def _quote(s: str) -> str:
+    return "'" + s.replace("'", "''") + "'"
+
+
+def _day_of(wall: str) -> str:
+    """The DATE holding local wall-clock millis ``wall``."""
+    return f"date_from_unix_date(CAST(floor(({wall}) / {_DAY}) AS INT))"
+
+
+def _minus(x: str, n: int) -> str:
+    return f"{x} - {n}" if n else x
+
+
+def _date_ms(date: str) -> str:
+    return f"unix_date({date}) * {_DAY}L"
+
+
 class Granularity:
-    """Compiled granularity: ``floor(col)`` returns the bucket-start timestamp."""
+    """A parsed granularity: ``floor_sql`` gives the bucket-start text."""
 
     def __init__(self, kind: str, period: Period | None = None,
                  origin_millis: int | None = None, tz: str | None = None):
@@ -88,124 +128,204 @@ class Granularity:
         self.origin_millis = origin_millis
         self.tz = tz if tz not in (None, "UTC", "Etc/UTC") else None
 
-    # ------------------------------------------------------------------
-    def floor(self, col: Column) -> Column:
+    # -- Spark SQL text ---------------------------------------------------
+    def floor_sql(self, operand: str) -> str:
+        """The start of the bucket holding timestamp ``operand``."""
         if self.kind == "all":
-            # Druid ALL: one bucket anchored at the interval start; callers
-            # aggregate without time grouping, so floor is unused in practice.
-            return F.lit(None).cast("timestamp")
+            # one bucket anchored at the interval start; callers aggregate
+            # without time grouping
+            return "CAST(NULL AS TIMESTAMP)"
         if self.kind == "none":
-            return col
+            return operand
+        wall = self._wall_sql(operand)
         p = self.period
-        local = F.from_utc_timestamp(col, self.tz) if self.tz else col
-        if p.is_calendar:
-            out = self._floor_months(local, p.months)
-        else:
-            out = self._floor_millis(local, p.millis)
-        return F.to_utc_timestamp(out, self.tz) if self.tz else out
+        if not p.is_calendar:
+            delta = f"pmod({_minus(wall, self._anchor())}, {p.millis}L)"
+            return self._at(operand, wall, delta=delta)
+        return self._at(operand, wall, w=self._month_floor_sql(wall))
 
-    _EPOCH_MONDAY = -259_200_000  # 1969-12-29T00:00Z; epoch itself is a Thursday
+    def ceil_sql(self, operand: str) -> str:
+        """timestamp_ceil: the operand on a bucket start, else the next one
+        (query/expression/TimestampCeilExprMacro.java)."""
+        if self.kind != "period":
+            return self.floor_sql(operand)
+        fl = self.floor_sql(operand)
+        return (f"CASE WHEN {fl} = {operand} THEN {operand} "
+                f"ELSE {self.shift_sql(fl, 1)} END")
 
-    def _origin_wall_millis(self) -> int | None:
-        """The origin as LOCAL wall-clock millis when a timeZone is set —
-        the phase of a period granularity anchors in the origin's wall time
-        (PeriodGranularity.java truncate() works in the local chronology;
-        QueryGranularityTest.testPeriodTruncateDays: origin
-        2012-01-02T05:00-08:00 floors LA times to 05:00 wall, not 13:00Z
-        phase)."""
-        if self.origin_millis is None or not self.tz:
-            return self.origin_millis
-        from datetime import datetime, timezone
-        from zoneinfo import ZoneInfo
-        d = datetime.fromtimestamp(self.origin_millis / 1000,
-                                   tz=timezone.utc) \
-            .astimezone(ZoneInfo(self.tz)).replace(tzinfo=timezone.utc)
-        return int(d.timestamp() * 1000)
-
-    def _floor_millis(self, col: Column, width: int) -> Column:
-        origin = self._origin_wall_millis()
-        if origin is None:
-            # Druid weeks are ISO weeks (Monday start) — but ONLY the exact
-            # P1W spelling with no origin (PeriodGranularity.java:295-298
-            # weeks==1 branch); P2W/P3W align week MULTIPLES from the default
-            # epoch origin (:283-293), and P7D counts days from the Thursday
-            # epoch (:302-318)
-            origin = (self._EPOCH_MONDAY
-                      if self.period is not None and self.period.weeks
-                      and self.period.millis == 7 * 86_400_000
-                      else 0)
-        t = F.unix_millis(col)
-        # floor-div handles pre-origin timestamps correctly (Spark div truncates
-        # toward negative infinity only via `floor`, so use it explicitly).
-        bucket = F.floor((t - F.lit(origin)) / F.lit(width)) * width + origin
-        return F.timestamp_millis(bucket.cast("long"))
-
-    def _floor_months(self, col: Column, months: int) -> Column:
-        ow = self._origin_wall_millis()
-        if ow is not None:
-            # PeriodGranularity.truncate months-with-origin branch
-            # (:265-278): whole month-periods are counted FROM THE ORIGIN,
-            # keeping its day-of-month and time — NOT truncated to month
-            # starts.  Candidate month-difference clamps down when the
-            # origin's day/time hasn't been reached yet (Joda month-end
-            # clamping matches Spark's timestampadd).
-            o = F.timestamp_millis(F.lit(int(ow)))
-
-            def add_months_ts(ts, k):
-                # interval month arithmetic keeps the time-of-day and
-                # clamps month-end days, like Joda's months().add
-                return ts + F.make_interval(F.lit(0), k.cast("int"))
-
-            diff = ((F.year(col) * 12 + F.month(col))
-                    - (F.year(o) * 12 + F.month(o)))
-            whole = (diff - F.when(add_months_ts(o, diff) > col,
-                                   F.lit(1)).otherwise(F.lit(0)))
-            k = F.floor(whole / months) * months
-            return add_months_ts(o, k)
-        if months == 1:
-            return F.date_trunc("month", col)
-        if months == 12:
-            return F.date_trunc("year", col)
-        if months == 3:
-            return F.date_trunc("quarter", col)
-        # generic: month index since epoch, floored to the period; pmod
-        # keeps pre-epoch (negative-index) months in 0..11 — a sign-
-        # following % would make make_timestamp yield NULL for 1969 rows
-        mi = (F.year(col) - 1970) * 12 + F.month(col) - 1
-        floored = F.floor(mi / months) * months
-        return F.make_timestamp(
-            (F.floor(floored / 12) + 1970).cast("int"),
-            (F.pmod(floored, 12) + 1).cast("int"),
-            F.lit(1), F.lit(0), F.lit(0), F.lit(0),
-        )
-
-    # ------------------------------------------------------------------
-    def ceil(self, col: Column) -> Column:
-        """timestamp_ceil semantics: floor, then +1 period if not on boundary
-        (reference: query/expression/TimestampCeilExprMacro.java)."""
-        fl = self.floor(col)
-        nxt = self.shift(fl, 1)
-        return F.when(fl == col, fl).otherwise(nxt)
-
-    def shift(self, col: Column, steps: int) -> Column:
+    def shift_sql(self, operand: str, steps) -> str:
+        """``operand`` moved by ``steps`` periods (SQL text or an int).
+        Sub-day fixed periods are physical durations; days, weeks and
+        months advance in the local chronology, so a zone's day across a
+        DST switch is 23 or 25 hours (TimestampShiftExprMacro.java)."""
         p = self.period
         if p is None:
-            return col
-        day = 86_400_000
-        if not p.is_calendar and (self.tz is None or p.millis % day != 0):
-            # sub-day fixed periods are physical durations in any chronology
-            return F.timestamp_millis(
-                (F.unix_millis(col) + F.lit(p.millis * steps)).cast("long"))
-        # calendar months and day-multiple periods advance in LOCAL wall time
-        # (joda Period.plus semantics — a tz day across a DST switch is
-        # 23/25 physical hours; TimestampShiftExprMacro.java chronology)
-        local = F.from_utc_timestamp(col, self.tz) if self.tz else col
-        if p.is_calendar:
-            # add_months returns a DATE (drops time-of-day); timestamp_add keeps it
-            out = F.timestamp_add("MONTH", F.lit(p.months * steps), local)
+            return operand
+        k = f"({steps})"
+        if not p.is_calendar and (not self.tz or p.millis % _DAY):
+            return (f"timestamp_millis(unix_millis({operand}) "
+                    f"+ {k} * {p.millis}L)")
+        wall = self._wall_sql(operand)
+        if not p.is_calendar:
+            return self._at(operand, wall, delta=f"-{k} * {p.millis}L")
+        moved = f"add_months({_day_of(wall)}, CAST({k} * {p.months} AS INT))"
+        return self._at(operand, wall,
+                        w=f"{_date_ms(moved)} + pmod({wall}, {_DAY}L)")
+
+    def _wall_sql(self, operand: str) -> str:
+        if not self.tz:
+            return f"unix_millis({operand})"
+        return f"unix_millis(from_utc_timestamp({operand}, {_quote(self.tz)}))"
+
+    def _at(self, operand: str, wall: str, w: str | None = None,
+            delta: str | None = None) -> str:
+        """The instant whose local wall time is ``w`` = ``wall - delta``,
+        where ``wall`` is the operand's own wall time: the operand's UTC
+        offset carried over when it still holds there, else
+        ``to_utc_timestamp``'s (the earlier offset of a repeated hour)."""
+        if delta is None:
+            delta = f"{wall} - ({w})"
+        if w is None:
+            w = f"{wall} - ({delta})"
+        if not self.tz:
+            return f"timestamp_millis({w})"
+        z = _quote(self.tz)
+        c = f"timestamp_millis(unix_millis({operand}) - ({delta}))"
+        return (f"CASE WHEN unix_millis(from_utc_timestamp({c}, {z})) = ({w}) "
+                f"THEN {c} ELSE to_utc_timestamp(timestamp_millis({w}), {z}) "
+                f"END")
+
+    def _month_floor_sql(self, wall: str) -> str:
+        """Wall millis of the calendar bucket holding wall millis ``wall``."""
+        n, day = self.period.months, _day_of(wall)
+        ow = self._origin_wall
+        if ow is None:
+            # whole periods counted in months from 1970-01
+            start = f"trunc({day}, 'MM')"
+            if n > 1:
+                start = (f"add_months({start}, -pmod(year({day}) * 12 "
+                         f"+ month({day}) - 23641, {n}))")
+            return _date_ms(start)
+        # PeriodGranularity.truncate months-with-origin branch (:265-278):
+        # whole periods counted FROM THE ORIGIN, keeping its day-of-month
+        # and time; add_months clamps month ends like Joda's months().add
+        od = (_EPOCH + timedelta(milliseconds=ow)).date()
+        tod = ow % _DAY
+
+        def cand(k: str) -> str:
+            moved = f"add_months(DATE{_quote(str(od))}, {k})"
+            return f"{_date_ms(moved)} + {tod}L"
+
+        diff = f"(year({day}) * 12 + month({day}) - {od.year * 12 + od.month})"
+        whole = (f"({diff} - CASE WHEN {cand(diff)} > {wall} "
+                 f"THEN 1 ELSE 0 END)")
+        return cand(whole if n == 1 else f"{whole} - pmod({whole}, {n})")
+
+    # -- Column operands --------------------------------------------------
+    def floor(self, col: Column) -> Column:
+        return F.call_function(self._function("floor"), col)
+
+    def ceil(self, col: Column) -> Column:
+        return F.call_function(self._function("ceil"), col)
+
+    def shift(self, col: Column, steps: int) -> Column:
+        return F.call_function(self._function("shift"), col,
+                               F.lit(int(steps)).cast("bigint"))
+
+    def _function(self, op: str) -> str:
+        """Name of a session temporary function whose body is this
+        granularity's ``op`` text; the body keeps the zone as a literal, so
+        the session that analyzes it does not matter."""
+        from incubator_druid_spark.sql.functions import register_function
+        if op == "shift":
+            params, body = "ts TIMESTAMP, k BIGINT", self.shift_sql("ts", "k")
         else:
-            out = F.timestamp_add("DAY", F.lit(p.millis // day * steps), local)
-        return F.to_utc_timestamp(out, self.tz) if self.tz else out
+            params, body = "ts TIMESTAMP", getattr(self, f"{op}_sql")("ts")
+        name = f"druid_{op}_{hashlib.sha1(body.encode()).hexdigest()[:16]}"
+        register_function(
+            name, f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({params}) "
+                  f"RETURNS TIMESTAMP RETURN {body}")
+        return name
+
+    # -- driver-side mirror -----------------------------------------------
+    @cached_property
+    def _zone(self):
+        from zoneinfo import ZoneInfo
+        return ZoneInfo(self.tz)
+
+    def _wall(self, t: int) -> int:
+        if not self.tz:
+            return t
+        utc = (_EPOCH + timedelta(milliseconds=t)).replace(tzinfo=timezone.utc)
+        return t + utc.astimezone(self._zone).utcoffset() // _MS
+
+    def _offsets(self, w: int) -> tuple[int, int]:
+        """The UTC offsets that can give wall time ``w``: equal for most
+        walls, earlier then later across a repeated hour, and before then
+        after a gap's jump."""
+        local = (_EPOCH + timedelta(milliseconds=w)).replace(tzinfo=self._zone)
+        return (local.utcoffset() // _MS,
+                local.replace(fold=1).utcoffset() // _MS)
+
+    @cached_property
+    def _origin_wall(self) -> int | None:
+        """The origin as local wall-clock millis — the phase of a period
+        granularity anchors in the origin's wall time (QueryGranularityTest
+        testPeriodTruncateDays: origin 2012-01-02T05:00-08:00 floors LA
+        times to 05:00 wall, not 13:00Z phase)."""
+        o = self.origin_millis
+        return None if o is None else self._wall(o)
+
+    def _anchor(self) -> int:
+        """The wall-clock grid origin of a fixed period.  Only the exact P1W
+        spelling with no origin is Monday-anchored (PeriodGranularity.java
+        :295-298); P2W+ aligns from the epoch and P7D counts days from it."""
+        ow = self._origin_wall
+        if ow is not None:
+            return ow
+        p = self.period
+        return _EPOCH_MONDAY if p.weeks and p.millis == _MILLIS["w"] else 0
+
+    def _grid_index(self, wall: int) -> int:
+        """Index of the grid point at or before wall millis ``wall``."""
+        p = self.period
+        if not p.is_calendar:
+            return (wall - self._anchor()) // p.millis
+        d = (_EPOCH + timedelta(milliseconds=wall))
+        ow = self._origin_wall
+        if ow is None:
+            return ((d.year - 1970) * 12 + d.month - 1) // p.months
+        od = _EPOCH + timedelta(milliseconds=ow)
+        diff = (d.year * 12 + d.month) - (od.year * 12 + od.month)
+        if self._grid_months(diff) > wall:
+            diff -= 1
+        return diff // p.months
+
+    def _grid_months(self, k: int) -> int:
+        """Wall millis ``k`` months after the origin (or 1970-01)."""
+        import calendar
+        ow = self._origin_wall
+        base = _EPOCH + timedelta(milliseconds=ow or 0)
+        y, m = divmod(base.year * 12 + base.month - 1 + k, 12)
+        day = min(base.day, calendar.monthrange(y, m + 1)[1])
+        moved = base.replace(year=y, month=m + 1, day=day)
+        return (moved - _EPOCH) // _MS
+
+    def _grid(self, i: int) -> int:
+        p = self.period
+        if not p.is_calendar:
+            return self._anchor() + i * p.millis
+        return self._grid_months(i * p.months)
+
+    def floor_ms(self, t: int) -> int:
+        """``floor_sql`` for one instant, in epoch millis."""
+        wall = self._wall(t)
+        w = self._grid(self._grid_index(wall))
+        if not self.tz:
+            return w
+        c = t - (wall - w)
+        # to_utc_timestamp takes the earlier offset, as fold 0 does
+        return c if self._wall(c) == w else w - self._offsets(w)[0]
 
     def spine_fits(self, intervals: list[tuple[int, int]]) -> bool:
         """Whether ``spine`` over the intervals stays within ``SPINE_CAP``
@@ -215,102 +335,42 @@ class Granularity:
             return False
         # a month is at least 28 days; an interval adds at most a partial
         # bucket at either end, and a local span is at most a day longer
-        width = max(p.millis or p.months * 28 * _MILLIS["d"], 1)
-        slack = _MILLIS["d"] if self.tz else 0
+        width = max(p.millis or p.months * 28 * _DAY, 1)
+        slack = _DAY if self.tz else 0
         return sum((e - s + slack) // width + 2
                    for s, e in intervals) <= SPINE_CAP
 
     def spine(self, start_ms: int, end_ms: int) -> list[int]:
-        """Bucket starts covering [start, end) — the zero-fill time spine for
-        timeseries (driver-side; bucket counts are small by construction).
+        """Bucket starts covering [start, end): the bucket holding start
+        and every later one before end — the zero-fill time spine.
 
-        With a timeZone the enumeration happens in local wall-clock time and
-        each bucket start maps back to UTC, mirroring floor()'s
-        from_utc_timestamp → trunc → to_utc_timestamp chain so spine and agg
-        bucket keys agree exactly."""
+        It walks the wall-clock grid and keeps each instant on it that
+        ``floor_ms`` maps to itself, so spine and ``floor_sql`` keys agree
+        exactly, including both buckets of a repeated hour."""
         if self.kind in ("all", "none") or self.period is None:
             return []
-        if self.tz:
-            from datetime import datetime, timezone
-            from zoneinfo import ZoneInfo
-            z = ZoneInfo(self.tz)
-
-            def to_local(ms: int) -> int:  # from_utc_timestamp: wall shift
-                dt = datetime.fromtimestamp(ms / 1000, tz=timezone.utc) \
-                    .astimezone(z).replace(tzinfo=timezone.utc)
-                return int(dt.timestamp() * 1000)
-
-            def to_utc(ms: int) -> int:    # to_utc_timestamp: inverse shift
-                naive = datetime.fromtimestamp(ms / 1000, tz=timezone.utc)
-                return int(naive.replace(tzinfo=z).timestamp() * 1000)
-
-            plain = Granularity(self.kind, self.period,
-                                self._origin_wall_millis())
-            return [to_utc(t) for t in
-                    plain.spine(to_local(start_ms), to_local(end_ms))]
-        out = []
-        p = self.period
-        if p.is_calendar:
-            # walk months from the floored start; mirror _floor_months'
-            # origin alignment so spine and agg bucket keys agree
-            import calendar
-            from datetime import datetime, timezone
-            ow = self._origin_wall_millis()
-
-            def add_m(dt, k):  # Joda-style month add with day clamping
-                mi0 = dt.year * 12 + dt.month - 1 + k
-                y0, mo0 = divmod(mi0, 12)
-                day = min(dt.day, calendar.monthrange(y0, mo0 + 1)[1])
-                return dt.replace(year=y0, month=mo0 + 1, day=day)
-
-            if ow is not None:
-                odt = datetime.fromtimestamp(ow / 1000, tz=timezone.utc)
-                sdt = datetime.fromtimestamp(start_ms / 1000,
-                                             tz=timezone.utc)
-                diff = (sdt.year * 12 + sdt.month) \
-                    - (odt.year * 12 + odt.month)
-                if add_m(odt, diff) > sdt:
-                    diff -= 1
-                k = diff // p.months * p.months
-                while True:
-                    t = int(add_m(odt, k).timestamp() * 1000)
-                    if t >= end_ms:
-                        break
-                    out.append(t)
-                    k += p.months
-                    if len(out) > SPINE_CAP:
-                        raise ValueError("time spine too large")
-                return out
-            dt = datetime.fromtimestamp(start_ms / 1000, tz=timezone.utc)
-            mi = (dt.year - 1970) * 12 + dt.month - 1
-            mi = mi // p.months * p.months
-            while True:
-                y, mo = divmod(mi, 12)
-                t = int(datetime(1970 + y, mo + 1, 1, tzinfo=timezone.utc).timestamp() * 1000)
-                if t >= end_ms:
-                    break
-                # pre-epoch buckets keep their true (negative-millis) keys —
-                # clamping to 0 would duplicate the epoch bucket and drop
-                # the 1969 ones, disagreeing with floor()'s keys
+        first = self.floor_ms(start_ms)
+        if not self.tz:
+            i, out = self._grid_index(first), []
+            while (t := self._grid(i)) < end_ms:
                 out.append(t)
-                mi += p.months
+                i += 1
                 if len(out) > SPINE_CAP:
                     raise ValueError("time spine too large")
-        else:
-            origin = self.origin_millis
-            if origin is None:
-                # Monday anchor only for exactly P1W (same rule as
-                # _floor_millis); P2W+ aligns multiples from epoch, P7D
-                # counts days from the Thursday epoch
-                origin = (self._EPOCH_MONDAY
-                          if p.weeks and p.millis == 7 * 86_400_000 else 0)
-            t = (start_ms - origin) // p.millis * p.millis + origin
-            while t < end_ms:
-                out.append(t)
-                t += p.millis
-                if len(out) > SPINE_CAP:
-                    raise ValueError("time spine too large")
-        return out
+            return out
+        i = self._grid_index(self._wall(first) - _MAX_SHIFT)
+        hi = self._wall(end_ms) + _MAX_SHIFT
+        out = set()
+        while (w := self._grid(i)) < hi:
+            early, late = self._offsets(w)
+            if early >= late:  # one instant, or two in a repeated hour
+                out.update((w - early, w - late))
+            elif self.floor_ms(w - early) == w - early:  # w is in a gap
+                out.add(w - early)
+            i += 1
+            if len(out) > SPINE_CAP:
+                raise ValueError("time spine too large")
+        return sorted(u for u in out if first <= u < end_ms)
 
 
 def parse_granularity(spec) -> Granularity:

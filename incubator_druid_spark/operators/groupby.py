@@ -50,7 +50,7 @@ def run(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
 
     keys = list(dim_names)
     if gran.kind not in ("all",):
-        df = df.withColumn(_GRANULE, gran.floor(F.col(TIME_COLUMN)))
+        df = df.withColumn(_GRANULE, F.expr(gran.floor_sql(TIME_COLUMN)))
         keys = [_GRANULE] + keys
 
     ctx = FilterContext(df)

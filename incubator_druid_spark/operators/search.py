@@ -78,7 +78,7 @@ def run(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
     arr = F.concat(*entries) if len(entries) > 1 else entries[0]
     sel = [F.explode(arr).alias("dv")]
     if per_bucket:
-        sel = [gran.floor(F.col(TIME_COLUMN)).alias(TIME_COLUMN)] + sel
+        sel = [F.expr(gran.floor_sql(TIME_COLUMN)).alias(TIME_COLUMN)] + sel
     out = df.select(*sel).select(
         *([TIME_COLUMN] if per_bucket else []),
         F.col("dv.dimension").alias("dimension"),

@@ -64,7 +64,7 @@ def run(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
             out = run_keyed_aods(df, [], keyed, ctx)
         else:
             bucketed = df.withColumn(TIME_COLUMN,
-                                     gran.floor(F.col(TIME_COLUMN)))
+                                     F.expr(gran.floor_sql(TIME_COLUMN)))
             out = run_keyed_aods(bucketed, [TIME_COLUMN], keyed, ctx)
         for _p in post:
             out = out.select("*", _p)
@@ -86,7 +86,7 @@ def run(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
         out = grouped_agg(df, [], aggs, folds)
     else:
         out = grouped_agg(
-            df, [gran.floor(F.col(TIME_COLUMN)).alias(TIME_COLUMN)],
+            df, [F.expr(gran.floor_sql(TIME_COLUMN)).alias(TIME_COLUMN)],
             aggs, folds)
         if bounded:
             out = _zero_fill(out, query, gran, spark, catalog)

@@ -43,7 +43,7 @@ def run(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
     keys = [dim]
     per_bucket = gran.kind != "all"
     if per_bucket:
-        df = df.withColumn(_GRANULE, gran.floor(F.col(TIME_COLUMN)))
+        df = df.withColumn(_GRANULE, F.expr(gran.floor_sql(TIME_COLUMN)))
         keys = [_GRANULE, dim]
 
     # DimensionTopNMetricSpec.previousStop: pagination — only dimension

@@ -195,14 +195,17 @@ def translate(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
     # engine's own sessions and the driver's are UTC already → no clone).
     # ANSI-on UTC hosts stay on the host session: the operator tree is
     # ANSI-independent by construction (lenient try_* routes).
-    from incubator_druid_spark.sql.functions import _exec_session, _UTC_ALIASES
+    from incubator_druid_spark.sql.functions import (_UTC_ALIASES,
+                                                     _exec_session,
+                                                     compiling_for)
     if spark.conf.get("spark.sql.session.timeZone") not in _UTC_ALIASES:
         spark = _exec_session(spark, "UTC")
         catalog = catalog.for_session(spark)
     from incubator_druid_spark.functions.lookups import clear_lookup_joins
     clear_lookup_joins()  # drop leftovers from any abandoned prior compile
     _apply_scheduling(query, spark)
-    out = dispatch[qt](query, spark, catalog)
+    with compiling_for(spark):
+        out = dispatch[qt](query, spark, catalog)
     # helper aggregates synthesized by rewrite_sketch_query (theta/HLL set-op
     # rewrites) are internal — Druid never surfaces them in the result row
     helpers = [c for c in out.columns

@@ -171,12 +171,15 @@ def apply_data_schema(df: DataFrame, data_schema: dict) -> DataFrame:
     df = _apply_timestamp(df, ts_spec)
 
     tf = data_schema.get("transformSpec") or {}
-    for tr in tf.get("transforms") or []:
-        # segment/transform/ExpressionTransform.java
-        from incubator_druid_spark.functions.druid_expr import compile_expr
-        df = df.withColumn(tr["name"], compile_expr(tr["expression"], F.col))
-    if tf.get("filter") is not None:
-        df = df.filter(compile_filter(tf["filter"], FilterContext(df)))
+    from incubator_druid_spark.functions.druid_expr import compile_expr
+    from incubator_druid_spark.sql.functions import compiling_for
+    with compiling_for(df.sparkSession):
+        for tr in tf.get("transforms") or []:
+            # segment/transform/ExpressionTransform.java
+            df = df.withColumn(tr["name"],
+                               compile_expr(tr["expression"], F.col))
+        if tf.get("filter") is not None:
+            df = df.filter(compile_filter(tf["filter"], FilterContext(df)))
 
     dims = (data_schema.get("dimensionsSpec") or {}).get("dimensions") or []
     metrics = data_schema.get("metricsSpec") or []
@@ -262,7 +265,7 @@ def rollup(df: DataFrame, dims: list, metrics: list[dict],
         compile_rollup_aggregations
     gran = parse_granularity(query_granularity)
     names = [_dim_name(d) for d in dims]
-    keys = [gran.floor(F.col(TIME_COLUMN)).alias(TIME_COLUMN)] + \
+    keys = [F.expr(gran.floor_sql(TIME_COLUMN)).alias(TIME_COLUMN)] + \
            [F.col(n) for n in names if n in df.columns]
     aggs = compile_rollup_aggregations(metrics, FilterContext(df))
     return df.groupBy(*keys).agg(*aggs)

@@ -12,18 +12,20 @@ After ``register_druid_sql(spark)`` + ``register_views(catalog)``, Druid SQL
 like ``SELECT TIME_FLOOR(__time, 'PT1H'), MV_CONTAINS(dim2, 'a') …`` runs
 directly through ``spark.sql``.
 
-Period-string functions (TIME_FLOOR/CEIL/SHIFT) accept ANY literal ISO
-period — TimeFloorOperatorConversion.java:40-75 delegates to
-PeriodGranularity, so Druid accepts arbitrary periods: the common ones run
-through an inlined millis lookup in the SQL UDF, every other literal is
-rewritten call-site by ``_rewrite_time_periods`` through the native parser
-(model/granularity.py).  A NON-literal unknown period (a period read from a
-column) raises at evaluation time via raise_error — never a silent NULL.
+TIME_FLOOR/TIME_CEIL/TIME_SHIFT of every arity and FLOOR/CEIL … TO are
+rewritten call-site into ``Granularity``'s SQL text (model/granularity.py),
+as TimeFloorOperatorConversion.java:40-75 delegates to PeriodGranularity:
+any literal ISO period, the origin and the zone (the query's sqlTimeZone by
+default) are inlined as literals.  A NON-literal period (a period read from
+a column) picks among the common periods at run time and raises via
+raise_error on any other — never a silent NULL.
 """
 
 from __future__ import annotations
 
 import re
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -31,64 +33,8 @@ from incubator_druid_spark.catalog import Catalog
 from incubator_druid_spark.session import local_frame
 from incubator_druid_spark.timeline import segment_dirs
 
-# common ISO periods → fixed millis (calendar periods handled via date_trunc)
-_FIXED = {
-    "PT1S": 1000, "PT1M": 60000, "PT5M": 300000, "PT10M": 600000,
-    "PT15M": 900000, "PT30M": 1800000, "PT1H": 3600000, "PT6H": 21600000,
-    "PT8H": 28800000, "PT12H": 43200000, "P1D": 86400000, "P1W": 604800000,
-}
-_CAL = {"P1M": "month", "P3M": "quarter", "P1Y": "year"}
-_WEEK_ORIGIN = -259_200_000  # epoch's preceding Monday (ISO weeks)
-
-
-def _period_millis_case(arg: str) -> str:
-    branches = " ".join(f"WHEN '{p}' THEN {ms}L" for p, ms in _FIXED.items())
-    return f"(CASE {arg} {branches} END)"
-
-
-def _period_millis_strict(arg: str, fname: str) -> str:
-    """Common-period millis lookup that RAISES on an unknown period instead
-    of yielding NULL — literal non-common periods never reach this (the
-    call rewriter inlines them); only a non-literal period column can."""
-    case = _period_millis_case(arg)
-    return (f"(CASE WHEN {case} IS NOT NULL THEN {case} ELSE "
-            f"cast(raise_error(concat('{fname}: unsupported non-literal "
-            f"period ', {arg}, '; pass the period as a string literal or "
-            f"use the native API')) AS BIGINT) END)")
-
-
-def _time_floor_expr(ts: str, period: str, fname: str = "TIME_FLOOR") -> str:
-    cal = " ".join(f"WHEN '{p}' THEN date_trunc('{u}', {ts})"
-                   for p, u in _CAL.items())
-    ms = _period_millis_strict(period, fname)
-    origin = f"(CASE WHEN {period} = 'P1W' THEN {_WEEK_ORIGIN}L ELSE 0L END)"
-    fixed = (f"timestamp_millis(cast(floor((unix_millis({ts}) - {origin}) / {ms})"
-             f" * {ms} + {origin} AS BIGINT))")
-    return f"(CASE {period} {cal} ELSE {fixed} END)"
-
-
 _FUNCTIONS: list[str] = [
-    # -- time (TimeFloorOperatorConversion.java and siblings)
-    f"""CREATE OR REPLACE TEMPORARY FUNCTION TIME_FLOOR(ts TIMESTAMP, period STRING)
-        RETURNS TIMESTAMP RETURN {_time_floor_expr('ts', 'period')}""",
-    f"""CREATE OR REPLACE TEMPORARY FUNCTION TIME_CEIL(ts TIMESTAMP, period STRING)
-        RETURNS TIMESTAMP RETURN
-        CASE WHEN {_time_floor_expr('ts', 'period')} = ts THEN ts
-             ELSE CASE period
-                WHEN 'P1M' THEN timestampadd(MONTH, 1, {_time_floor_expr('ts', 'period')})
-                WHEN 'P3M' THEN timestampadd(MONTH, 3, {_time_floor_expr('ts', 'period')})
-                WHEN 'P1Y' THEN timestampadd(YEAR, 1, {_time_floor_expr('ts', 'period')})
-                ELSE timestamp_millis(unix_millis({_time_floor_expr('ts', 'period', 'TIME_CEIL')})
-                     + {_period_millis_strict('period', 'TIME_CEIL')}) END
-        END""",
-    f"""CREATE OR REPLACE TEMPORARY FUNCTION TIME_SHIFT(ts TIMESTAMP, period STRING, step INT)
-        RETURNS TIMESTAMP RETURN
-        CASE period
-            WHEN 'P1M' THEN timestampadd(MONTH, step, ts)
-            WHEN 'P3M' THEN timestampadd(MONTH, 3 * step, ts)
-            WHEN 'P1Y' THEN timestampadd(YEAR, step, ts)
-            ELSE timestamp_millis(unix_millis(ts) + step * {_period_millis_strict('period', 'TIME_SHIFT')})
-        END""",
+    # -- time (TimeParseOperatorConversion.java and siblings)
     """CREATE OR REPLACE TEMPORARY FUNCTION TIME_PARSE(s STRING)
        RETURNS TIMESTAMP RETURN try_cast(s AS TIMESTAMP)""",
     """CREATE OR REPLACE TEMPORARY FUNCTION TIME_FORMAT(ts TIMESTAMP, fmt STRING)
@@ -265,16 +211,14 @@ def register_druid_sql(spark: SparkSession, sql: str | None = None) -> None:
 
     from incubator_druid_spark.functions.lookups import lookup_version
     ver = lookup_version()
-    st = _FN_STATE.get(spark)
-    if st is None:
-        st = {"names": set(), "bloom": False, "lookup_ver": None}
+    st = _fn_state(spark)
     if sql is None:
         needed = set(_FN_BY_NAME)
         bloom_needed = lookup_needed = True
     else:
         # word-boundary scan of the final SQL; a hit inside a string
         # literal over-registers harmlessly.  Scan a backtick-stripped
-        # copy too: Calcite-quoted calls arrive as `TIME_FLOOR`(...) after
+        # copy too: Calcite-quoted calls arrive as `MV_LENGTH`(...) after
         # the quoted-identifier rewrite, which \b{name}\s*\( won't match.
         scan = sql + " " + sql.replace("`", "")
         needed = {n for n in _FN_BY_NAME
@@ -285,17 +229,12 @@ def register_druid_sql(spark: SparkSession, sql: str | None = None) -> None:
     bloom_missing = bloom_needed and not st["bloom"]
     lookup_missing = lookup_needed and st["lookup_ver"] != ver
     if not missing and not bloom_missing and not lookup_missing:
-        _FN_STATE[spark] = st
         return
     # Spark resolves a SQL temp function's body ONCE, with the session
-    # timezone at CREATE baked into its date/cast expressions.  That is
-    # exactly the reference's default: every TIME_* operator conversion
-    # falls back to plannerContext.getTimeZone() (the query's sqlTimeZone,
-    # default UTC) when no tz argument is given — and druid_sql executes
-    # each sqlTimeZone under its own per-(host, tz) session clone, so the
-    # CREATE-time zone here IS the planner zone and can never leak into a
-    # later query with a different sqlTimeZone (each clone keeps its own
-    # function registry).
+    # timezone at CREATE baked into its date/cast expressions.  druid_sql
+    # executes each sqlTimeZone under its own per-(host, tz) session clone,
+    # and each clone keeps its own function registry, so the CREATE-time
+    # zone is the query's sqlTimeZone (TIME_EXTRACT, TIME_FORMAT).
     for name in missing:
         try:
             spark.sql(_FN_BY_NAME[name])
@@ -309,7 +248,37 @@ def register_druid_sql(spark: SparkSession, sql: str | None = None) -> None:
     if lookup_missing:
         _register_lookup_fn(spark)
         st["lookup_ver"] = ver
-    _FN_STATE[spark] = st
+
+
+def _fn_state(spark: SparkSession) -> dict:
+    return _FN_STATE.setdefault(
+        spark, {"names": set(), "bloom": False, "lookup_ver": None})
+
+
+_COMPILING = threading.local()
+
+
+@contextmanager
+def compiling_for(spark: SparkSession):
+    """Make ``spark`` the session that ``register_function`` registers in
+    while this thread compiles a query for it."""
+    prev = getattr(_COMPILING, "spark", None)
+    _COMPILING.spark = spark
+    try:
+        yield
+    finally:
+        _COMPILING.spark = prev
+
+
+def register_function(name: str, stmt: str) -> None:
+    """Run CREATE statement ``stmt`` of temporary function ``name`` once per
+    session, in the session this thread compiles for (``compiling_for``),
+    else the active one."""
+    spark = getattr(_COMPILING, "spark", None) or SparkSession.active()
+    st = _fn_state(spark)
+    if name not in st["names"]:
+        spark.sql(stmt)
+        st["names"].add(name)
 
 
 def _register_bloom_test_fn(spark: SparkSession) -> None:
@@ -793,12 +762,14 @@ def _in_spans(pos: int, spans) -> bool:
 
 def _rewrite_calls(sql: str, name: str, repl) -> str:
     """Rewrite every call of ``name(...)`` in ``sql`` via ``repl(args) ->
-    str | None`` (None leaves the call untouched).  Argument splitting is
-    paren- and quote-aware so nested calls and string literals pass through;
-    matches that START inside a string literal are data, not calls, and are
-    left alone; replacement text is not re-scanned."""
+    str | None`` (None leaves the call untouched).  A ``name`` of several
+    alternatives ``A|B`` calls ``repl(matched_name, args)`` instead.
+    Argument splitting is paren- and quote-aware so nested calls and string
+    literals pass through; matches that START inside a string literal are
+    data, not calls, and are left alone; replacement text is not
+    re-scanned."""
     import re
-    pat = re.compile(rf"(?i)\b{name}\s*\(")
+    pat = re.compile(rf"(?i)\b({name})\s*\(")
     spans = _literal_spans(sql)
     out, pos = [], 0
     while True:
@@ -849,7 +820,7 @@ def _rewrite_calls(sql: str, name: str, repl) -> str:
         # inner one — e.g. CAST(CAST('10.1' AS INTEGER) AS VARCHAR), where
         # only the inner cast needs the Druid truncating-cast rewrite
         args = [_rewrite_calls(a, name, repl) for a in args]
-        rep = repl(args)
+        rep = repl(m.group(1).upper(), args) if "|" in name else repl(args)
         out.append(sql[pos:m.start()])
         if rep is not None:
             out.append(rep)
@@ -1102,281 +1073,85 @@ def _null_arg(a: str | None) -> bool:
         re.fullmatch(r"CAST\s*\(\s*NULL\s+AS\s+\w+\s*\)", s) is not None
 
 
-def _lit_period(arg: str) -> str | None:
-    """The ISO-period string if ``arg`` is a plain quoted literal."""
+def _lit_string(arg: str) -> str | None:
+    """The string if ``arg`` is a plain quoted literal."""
     a = arg.strip()
     if len(a) >= 2 and a[0] == "'" and a[-1] == "'" and "'" not in a[1:-1]:
         return a[1:-1].strip()
     return None
 
 
-def _period_ms_sql(p: str, fname: str) -> str:
-    """SQL text for the millis of period-argument ``p``: a literal fixed
-    period inlines its exact width via the native parser (any ISO period);
-    non-literals fall back to the strict common-period lookup."""
-    lit = _lit_period(p)
-    if lit is not None:
-        from incubator_druid_spark.model.granularity import parse_period
-        per = parse_period(lit)  # raises on malformed period = loud error
-        if per.is_calendar:
-            raise ValueError(
-                f"{fname}: calendar period {lit!r} has no fixed millis here; "
-                "use the 2-arg form or the native API's PeriodGranularity")
-        return f"{per.millis}L"
-    return _period_millis_strict(p, fname)
+def _rewrite_time_buckets(sql: str, tz: str | None, origin_ms) -> str:
+    """TIME_FLOOR/TIME_CEIL(ts, period[, origin[, tz]]) and TIME_SHIFT(ts,
+    period, step[, tz]) → ``Granularity``'s SQL text, in one pass so a
+    nested call is rewritten once (TimeFloorOperatorConversion.java and
+    siblings delegate to PeriodGranularity).  The zone defaults to the
+    query's sqlTimeZone ``tz``; ``origin_ms`` turns an origin argument into
+    epoch millis.  A non-literal period is a CASE over the common periods
+    that raises on any other."""
+    from incubator_druid_spark.model.granularity import (COMMON_PERIODS,
+                                                         Granularity,
+                                                         parse_period)
+
+    def repl(fname, args):
+        shift = fname == "TIME_SHIFT"
+        if not (3 if shift else 2) <= len(args) <= 4:
+            return None
+        ts, period = args[0], args[1]
+        origin = None if shift or len(args) < 3 or _null_arg(args[2]) \
+            else origin_ms(args[2])
+        zone = tz
+        if len(args) == 4 and not _null_arg(args[3]):
+            zone = _lit_string(args[3])
+            if zone is None:
+                raise ValueError(f"{fname}: the time zone must be a string "
+                                 "literal")
+
+        def text(iso):
+            g = Granularity("period", parse_period(iso), origin, zone)
+            return (g.shift_sql(ts, args[2]) if shift else
+                    g.ceil_sql(ts) if fname == "TIME_CEIL" else
+                    g.floor_sql(ts))
+
+        lit = _lit_string(period)
+        if lit is not None:
+            return text(lit)  # a malformed period raises loudly here
+        branches = " ".join(f"WHEN '{p}' THEN {text(p)}"
+                            for p in COMMON_PERIODS)
+        return (f"(CASE {period} {branches} ELSE CAST(raise_error(concat("
+                f"'{fname}: unsupported non-literal period ', {period}, "
+                f"'; pass the period as a string literal or use the native "
+                f"API')) AS TIMESTAMP) END)")
+
+    names = "TIME_FLOOR|TIME_CEIL|TIME_SHIFT"
+    # Calcite-quoted calls arrive backtick-quoted from the identifier rewrite
+    sql = _outside_literals(sql, lambda seg: re.sub(
+        rf"(?i)`({names})`(?=\s*\()", r"\1", seg))
+    return _rewrite_calls(sql, names, repl)
 
 
-def _rewrite_time_periods(sql: str) -> str:
-    """TIME_FLOOR/TIME_CEIL/TIME_SHIFT with ANY literal ISO period
-    (TimeFloorOperatorConversion.java:40-75 → PeriodGranularity accepts
-    arbitrary periods).  Common periods keep the registered SQL UDF; every
-    other literal — 'PT2H', 'P2W', 'P6M', 'PT90S' … — is inlined here via
-    the native parser, matching model/granularity.py's floor/ceil/shift
-    semantics (week-multiple periods anchor at the epoch's preceding Monday,
-    calendar periods floor on the month index).  Runs AFTER _rewrite_time_tz
-    so tz/origin forms have already been reduced to 2-/3-arg calls."""
-    from incubator_druid_spark.model.granularity import parse_period
-
-    def fixed_floor(ts, per):
-        # Monday anchor ONLY for the exact P1W spelling with no origin
-        # (PeriodGranularity.truncate:295-298); P2W+ aligns week multiples
-        # from the default epoch origin, and P7D/P14D are day arithmetic
-        # from the (Thursday) epoch — same rule as model/granularity.py
-        ms = per.millis
-        origin = (_WEEK_ORIGIN
-                  if per.weeks and ms == 604_800_000 else 0)
-        return (f"timestamp_millis(cast(floor((unix_millis({ts}) - {origin}) "
-                f"/ {ms}) * {ms} + {origin} AS BIGINT))")
-
-    def months_floor(ts, n):
-        mi = f"((year({ts}) - 1970) * 12 + month({ts}) - 1)"
-        fl = f"cast(floor({mi} / {n}) * {n} AS INT)"
-        return (f"make_timestamp(1970 + cast(floor(({fl}) / 12) AS INT), "
-                f"pmod({fl}, 12) + 1, 1, 0, 0, 0)")
-
-    def mk_repl(kind):
-        def repl(args):
-            n_expected = 3 if kind == "shift" else 2
-            if len(args) != n_expected:
-                return None  # origin/tz forms: handled by _rewrite_time_tz
-            lit = _lit_period(args[1])
-            if lit is None:
-                return None  # non-literal: strict UDF raises if unknown
-            norm = lit.upper()
-            if norm in _CAL and kind in ("floor", "ceil"):
-                # calendar periods floor in the SESSION time zone
-                # (TimeFloorOperatorConversion defaults to the planner tz).
-                # Inline date_trunc instead of the registered UDF: Spark
-                # resolves a SQL temp function's body ONCE and caches it
-                # with the first session's zone baked into DateTrunc, so a
-                # later sqlTimeZone query would floor in the wrong zone
-                # (testTimeseriesLosAngelesUsingTimeFloorConnection*).
-                unit = _CAL[norm]
-                fl = f"date_trunc('{unit}', {args[0]})"
-                if kind == "floor":
-                    return fl
-                add = {"month": ("MONTH", 1), "quarter": ("MONTH", 3),
-                       "year": ("YEAR", 1)}[unit]
-                return (f"(CASE WHEN {fl} = {args[0]} THEN {args[0]} ELSE "
-                        f"timestampadd({add[0]}, {add[1]}, {fl}) END)")
-            if norm in _FIXED:
-                # TimeFloorOperatorConversion defaults the zone to the
-                # PLANNER timezone, and PeriodGranularity truncates via the
-                # zone's chronology — so day/week floors land on LOCAL
-                # midnights/Mondays and shifts of calendar days are
-                # DST-aware.  Inline session-zone expressions (analyzed per
-                # query, so a scoped sqlTimeZone is honored); only sub-day
-                # SHIFTs are pure millis arithmetic and keep the UDF.
-                ts = args[0]
-                if kind == "shift":
-                    unit = {"P1D": "DAY", "P1W": "WEEK"}.get(norm)
-                    if unit is None:
-                        return None  # fixed duration: chronology add == +ms
-                    return f"timestampadd({unit}, {args[2]}, {ts})"
-                unit = {"PT1S": "second", "PT1M": "minute", "PT1H": "hour",
-                        "P1D": "day", "P1W": "week"}.get(norm)
-                ms = _FIXED[norm]
-                if unit:
-                    fl = f"date_trunc('{unit}', {ts})"
-                    nxt = f"timestampadd({unit.upper()}, 1, {fl})"
-                else:
-                    # sub-day multiples (PT5M … PT12H): Druid rounds the
-                    # LOCAL field to a multiple, i.e. floor in wall-clock
-                    # millis space (local midnight ≡ 0 mod 1 day there)
-                    loc = (f"unix_millis(from_utc_timestamp({ts}, "
-                           f"current_timezone()))")
-                    base = f"cast(floor({loc} / {ms}) * {ms} AS BIGINT)"
-                    fl = (f"to_utc_timestamp(timestamp_millis({base}), "
-                          f"current_timezone())")
-                    nxt = (f"to_utc_timestamp(timestamp_millis({base} "
-                           f"+ {ms}), current_timezone())")
-                if kind == "floor":
-                    return fl
-                return f"(CASE WHEN {fl} = {ts} THEN {ts} ELSE {nxt} END)"
-            if norm in _CAL:
-                if kind == "shift":
-                    # inline so the add resolves under the QUERY's session
-                    # zone (the UDF body bakes in the registration zone)
-                    unit = {"P1M": "MONTH", "P3M": "QUARTER",
-                            "P1Y": "YEAR"}[norm]
-                    return f"timestampadd({unit}, {args[2]}, {args[0]})"
-                return None
-            per = parse_period(lit)  # malformed period raises loudly here
-            ts = args[0]
-            if kind == "floor":
-                return (months_floor(ts, per.months) if per.is_calendar
-                        else fixed_floor(ts, per))
-            if kind == "ceil":
-                f = (months_floor(ts, per.months) if per.is_calendar
-                     else fixed_floor(ts, per))
-                nxt = (f"timestampadd(MONTH, {per.months}, {f})"
-                       if per.is_calendar else
-                       f"timestamp_millis(unix_millis({f}) + {per.millis})")
-                return f"(CASE WHEN {f} = {ts} THEN {ts} ELSE {nxt} END)"
-            step = args[2]
-            return (f"timestampadd(MONTH, ({step}) * {per.months}, {ts})"
-                    if per.is_calendar else
-                    f"timestamp_millis(unix_millis({ts}) + ({step}) "
-                    f"* {per.millis})")
-        return repl
-
-    sql = _rewrite_calls(sql, "TIME_FLOOR", mk_repl("floor"))
-    sql = _rewrite_calls(sql, "TIME_CEIL", mk_repl("ceil"))
-    sql = _rewrite_calls(sql, "TIME_SHIFT", mk_repl("shift"))
-    return sql
+def _origin_millis(spark: SparkSession, text: str) -> int:
+    """Epoch millis of a constant origin argument, already in final Spark
+    SQL, evaluated on the exec session (a TIMESTAMP literal is wall time in
+    its sqlTimeZone)."""
+    register_druid_sql(spark, text)
+    row = spark.sql(f"SELECT unix_millis({text}) AS o").first()
+    if row["o"] is None:
+        raise ValueError(f"origin {text!r} is not a constant timestamp")
+    return row["o"]
 
 
 def _rewrite_time_tz(sql: str) -> str:
-    """3/4-arg TIME_FLOOR/TIME_CEIL(ts, period, origin, tz), 4-arg
-    TIME_SHIFT(ts, period, step, tz), 3-arg TIME_EXTRACT/TIME_FORMAT(.., tz)
-    — TimeFloorOperatorConversion.java etc. accept origin + timezone.
-    Timezone: evaluate in local wall-clock, convert back
-    (TIME_EXTRACT/TIME_FORMAT read local fields, no back-conversion).
-    Origin: fixed-period buckets anchored at the origin instant.
-
-    Two wall-space shifts, chosen by what consumes the wrapped value:
-
-    * ``wrap``/``unwrap`` — for CALENDAR consumers (the registered
-      TIME_FLOOR/TIME_SHIFT macros, date_trunc, year()/month(),
-      timestampadd), all of which interpret their operand in the SESSION
-      zone.  The shift composes from_utc(tz) with to_utc(current_timezone())
-      so the session-zone wall of the wrapped value equals the target-zone
-      wall of the original — session-independent, which matters because
-      druid_sql executes each sqlTimeZone under its own tz-pinned session
-      clone (an explicit tz argument must override the planner zone, not
-      compound with it).  current_timezone() folds to a literal at analysis.
-    * ``wrap_ms`` — for EPOCH consumers (unix_millis bucket arithmetic),
-      which are already session-independent; the plain from_utc shift puts
-      the instant in target-zone local-millis space exactly like the
-      reference's PeriodGranularity math."""
+    """3-arg TIME_EXTRACT/TIME_FORMAT(ts, .., tz) read local fields in an
+    explicit zone (TimeExtractOperatorConversion.java etc.).  Both consume
+    their operand in the SESSION zone (the query's sqlTimeZone on the pinned
+    exec session), so the operand shifts from_utc(tz) then to_utc(session
+    zone): the session-zone wall of the wrapped value equals the tz wall of
+    the original.  current_timezone() folds to a literal at analysis."""
     def wrap(ts, tz):
-        if not tz:
-            return ts
         return (f"to_utc_timestamp(from_utc_timestamp({ts}, {tz}), "
                 f"current_timezone())")
 
-    def unwrap(x, tz):
-        if not tz:
-            return x
-        return (f"to_utc_timestamp(from_utc_timestamp({x}, "
-                f"current_timezone()), {tz})")
-
-    def wrap_ms(ts, tz):
-        return f"from_utc_timestamp({ts}, {tz})" if tz else ts
-
-    def floor_ceil(fname):
-        def repl(args):
-            if len(args) <= 2:
-                return None
-            ts, p = args[0], args[1]
-            origin = None if _null_arg(args[2]) else args[2]
-            tz = None if len(args) < 4 or _null_arg(args[3]) else args[3]
-            if origin is None:
-                lit0 = _lit_period(p)
-                if tz and lit0 is not None:
-                    from incubator_druid_spark.model.granularity import \
-                        parse_period
-                    per0 = parse_period(lit0)
-                    if not per0.is_calendar:
-                        # fixed period in an EXPLICIT zone: inline the
-                        # epoch arithmetic in the wrapped local space — the
-                        # 2-arg forms now floor in the SESSION zone, which
-                        # would double-apply a zone here
-                        ms0 = per0.millis
-                        anchor = (_WEEK_ORIGIN
-                                  if per0.weeks and ms0 == 604_800_000
-                                  else 0)
-                        tl0 = wrap_ms(ts, tz)
-                        b0 = (f"cast(floor((unix_millis({tl0}) - {anchor}) "
-                              f"/ {ms0}) * {ms0} + {anchor} AS BIGINT)")
-                        flo0 = f"timestamp_millis({b0})"
-                        if fname == "TIME_CEIL":
-                            flo0 = (f"(CASE WHEN {flo0} = {tl0} THEN {tl0} "
-                                    f"ELSE timestamp_millis({b0} + {ms0}) "
-                                    f"END)")
-                        return f"to_utc_timestamp({flo0}, {tz})"
-                inner = f"{fname}({wrap(ts, tz)}, {p})"
-                return unwrap(inner, tz)
-            tl, ol = wrap(ts, tz), wrap(origin, tz)
-            lit = _lit_period(p)
-            months = 0
-            if lit is not None:
-                from incubator_druid_spark.model.granularity import \
-                    parse_period
-                per = parse_period(lit)
-                if per.is_calendar:
-                    months = per.months
-            if months:
-                # calendar period anchored at origin (PeriodGranularity
-                # .truncate month path): exact complete-period count with
-                # Joda-style month-end clamping — Spark's timestampadd
-                # clamps day-of-month the same way, so the candidate
-                # month-difference is adjusted down when origin+cand > ts
-                cand = (f"((year({tl}) * 12 + month({tl})) - "
-                        f"(year({ol}) * 12 + month({ol})))")
-                whole = (f"({cand} - (CASE WHEN timestampadd(MONTH, {cand}, "
-                         f"{ol}) > {tl} THEN 1 ELSE 0 END))")
-                idx = f"CAST(floor(({whole}) / {months}.0) AS INT)"
-                if fname == "TIME_CEIL":
-                    flo = f"timestampadd(MONTH, {idx} * {months}, {ol})"
-                    nxt = (f"timestampadd(MONTH, ({idx} + 1) * {months}, "
-                           f"{ol})")
-                    flo = (f"(CASE WHEN {flo} = {tl} THEN {tl} "
-                           f"ELSE {nxt} END)")
-                else:
-                    flo = f"timestampadd(MONTH, {idx} * {months}, {ol})"
-                return unwrap(flo, tz)
-            # fixed-ms path: epoch arithmetic, so the plain from_utc shift
-            # (target-zone local-millis space) — session-independent as-is
-            tl, ol = wrap_ms(ts, tz), wrap_ms(origin, tz)
-            ms = _period_ms_sql(p, fname)
-            bucket = (f"floor((unix_millis({tl}) - unix_millis({ol})) / {ms})"
-                      if fname == "TIME_FLOOR" else
-                      f"ceil((unix_millis({tl}) - unix_millis({ol})) / {ms})")
-            flo = (f"timestamp_millis(cast(unix_millis({ol}) + "
-                   f"{bucket} * {ms} AS BIGINT))")
-            return f"to_utc_timestamp({flo}, {tz})" if tz else flo
-        return repl
-
-    sql = _rewrite_calls(sql, "TIME_FLOOR", floor_ceil("TIME_FLOOR"))
-    sql = _rewrite_calls(sql, "TIME_CEIL", floor_ceil("TIME_CEIL"))
-    def shift_tz(a):
-        if len(a) <= 3 or _null_arg(a[3]):
-            return None
-        lit0 = _lit_period(a[1])
-        if lit0 is not None:
-            from incubator_druid_spark.model.granularity import parse_period
-            per0 = parse_period(lit0)
-            if not per0.is_calendar:
-                # fixed period: millis add in the wrapped space (the 2-arg
-                # TIME_SHIFT now adds calendar days in the SESSION zone)
-                return (f"to_utc_timestamp(timestamp_millis(unix_millis("
-                        f"{wrap_ms(a[0], a[3])}) + ({a[2]}) * {per0.millis})"
-                        f", {a[3]})")
-        return unwrap(f"TIME_SHIFT({wrap(a[0], a[3])}, {a[1]}, {a[2]})",
-                      a[3])
-
-    sql = _rewrite_calls(sql, "TIME_SHIFT", shift_tz)
     for fn in ("TIME_EXTRACT", "TIME_FORMAT"):
         sql = _rewrite_calls(
             sql, fn,
@@ -1410,36 +1185,31 @@ _UNIT_PERIOD = {"SECOND": "PT1S", "MINUTE": "PT1M", "HOUR": "PT1H",
 
 
 def _rewrite_floor_ceil_to(sql: str) -> str:
+    """FLOOR/CEIL(ts TO unit) → TIME_FLOOR/TIME_CEIL(ts, period), which
+    the time-bucket rewrite then turns into the same text."""
     import re
     # operand may carry one nesting level: FLOOR(CAST(x AS TIMESTAMP) TO DAY)
     operand = r"((?:[^()]|\([^()]*\))+?)"
 
-    def cei(m):
-        period = _UNIT_PERIOD.get(m.group(2).upper())
-        if period is None:
-            raise ValueError(f"CEIL … TO {m.group(2)}: unknown time unit")
-        return f"TIME_CEIL({m.group(1)}, '{period}')"
-
-    def flo(m):
-        unit = m.group(2).upper()
-        if unit not in _UNIT_PERIOD:
-            # TimeUnits.java maps only SECOND..YEAR; an unknown unit must
-            # raise like the reference's plan error, not date_trunc to an
-            # all-NULL column
-            raise ValueError(f"FLOOR … TO {m.group(2)}: unknown time unit")
-        return f"date_trunc('{unit.lower()}', {m.group(1)})"
+    def to_call(fname):
+        def repl(m):
+            period = _UNIT_PERIOD.get(m.group(2).upper())
+            if period is None:
+                # TimeUnits.java maps only SECOND..YEAR; an unknown unit
+                # must raise like the reference's plan error
+                raise ValueError(f"{fname} … TO {m.group(2)}: unknown time "
+                                 "unit")
+            return f"TIME_{fname}({m.group(1)}, '{period}')"
+        return repl
 
     # guard by match START position: a FLOOR( inside a string literal is
     # data; an operand that merely CONTAINS a literal still rewrites
-    spans = _literal_spans(sql)
-    sql = re.sub(rf"(?i)\bFLOOR\s*\(\s*{operand}\s+TO\s+(\w+)\s*\)",
-                 lambda m: m.group(0) if _in_spans(m.start(), spans) else
-                 flo(m),
-                 sql)
-    spans = _literal_spans(sql)
-    return re.sub(rf"(?i)\bCEIL\s*\(\s*{operand}\s+TO\s+(\w+)\s*\)",
-                  lambda m: m.group(0) if _in_spans(m.start(), spans)
-                  else cei(m), sql)
+    for fname in ("FLOOR", "CEIL"):
+        spans = _literal_spans(sql)
+        sql = re.sub(rf"(?i)\b{fname}\s*\(\s*{operand}\s+TO\s+(\w+)\s*\)",
+                     lambda m, f=to_call(fname): m.group(0)
+                     if _in_spans(m.start(), spans) else f(m), sql)
+    return sql
 
 
 def _rewrite_date_trunc(sql: str) -> str:
@@ -1788,7 +1558,6 @@ def druid_sql(spark: SparkSession, sql: str, catalog: Catalog | None = None,
     sql = _rewrite_floor_ceil_to(sql)
     sql = _rewrite_date_trunc(sql)
     sql = _rewrite_time_tz(sql)
-    sql = _rewrite_time_periods(sql)
     sql = _rewrite_regexp_extract(sql)
     sql = _rewrite_array_functions(sql, _catalog_array_cols(catalog, sql))
 
@@ -2159,9 +1928,11 @@ def druid_sql(spark: SparkSession, sql: str, catalog: Catalog | None = None,
                          lambda a: "NULLIF(substring("
                                    + ", ".join(a) + "), '')")
     sql = _rewrite_aggregate_names(sql)
+    # last, so no later rewrite touches the inlined bucketing text
+    sql = _rewrite_time_buckets(
+        sql, tz, lambda text: _origin_millis(spark, text))
     # lazy function registration against the FINAL text: rewrites above may
-    # inject macro names (EXTRACT→TIME_EXTRACT, FLOOR..TO→TIME_CEIL, …) and
-    # inline away literal-period calls — scanning the executed SQL catches
-    # both directions
+    # inject macro names (EXTRACT→TIME_EXTRACT, …) and inline away others —
+    # scanning the executed SQL catches both directions
     register_druid_sql(spark, sql)
     return spark.sql(sql)

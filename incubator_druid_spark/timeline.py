@@ -48,7 +48,7 @@ _UTC = datetime.timezone.utc
 def bucket_key(gran: Granularity) -> Column:
     """Each row's partition key, its __time floored to ``gran``, from epoch
     arithmetic and a date: the session time zone never enters."""
-    ms = F.unix_millis(gran.floor(F.col(TIME_COLUMN)))
+    ms = F.unix_millis(F.expr(gran.floor_sql(TIME_COLUMN)))
     day = F.date_from_unix_date(F.floor(ms / DAY_MS).cast("int"))
     hour = F.floor(F.pmod(ms, F.lit(DAY_MS)) / HOUR_MS).cast("string")
     return F.concat(day.cast("string"), F.lit("T"), F.lpad(hour, 2, "0"))

@@ -148,6 +148,7 @@ def test_sql_unknown_result_format_runs_no_job(spark, foo_catalog):
                       spark, foo_catalog)
     finally:
         sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
     assert sc.statusTracker().getJobIdsForGroup("test-unknown-format") == []
 
 
@@ -261,6 +262,7 @@ def test_native_scan_is_one_spark_job(spark, tmp_path):
     finally:
         sc.setJobGroup(None, None)
     assert sorted(e["v"] for e in out[0]["events"]) == list(range(40))
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
     assert len(sc.statusTracker().getJobIdsForGroup(
         "test-native-scan-one-job")) == 1
 

@@ -7,11 +7,7 @@ Not ported, with reasons: testSerializePeriod / testSerializeDuration /
 testStandardGranularitiesSerde are Jackson wire tests; testMerge is the
 broker's granularity-merging helper (no analogue); testIterableNone
 iterates one bucket per millisecond — this engine's NONE granularity is
-row-grain (no bucketing), an equivalent contract without the iterator;
-the PT1H half of testPeriodDaylightSaving enumerates the REPEATED
-01:00 wall hour as two physical buckets — the wall-clock floor chain
-here merges the fold (documented engine deviation, sub-day periods under
-a DST fall-back)."""
+row-grain (no bucketing), an equivalent contract without the iterator."""
 
 import datetime as dt
 
@@ -124,6 +120,25 @@ def test_period_daylight_saving_days(spark):
     assert got == [_ms("2012-11-04T07:00:00+00:00"),
                    _ms("2012-11-05T08:00:00+00:00"),
                    _ms("2012-11-06T08:00:00+00:00")]
+
+
+def test_period_daylight_saving_hours(spark):
+    """testPeriodDaylightSaving (PT1H half) — the repeated 01:00 LA wall
+    hour of the 2012-11-04 fall-back is two buckets, in getIterable and in
+    bucketStart."""
+    la = {"type": "period", "period": "PT1H",
+          "timeZone": "America/Los_Angeles"}
+    buckets = [_ms("2012-11-04T00:00:00-07:00"),
+               _ms("2012-11-04T01:00:00-07:00"),
+               _ms("2012-11-04T01:00:00-08:00"),
+               _ms("2012-11-04T02:00:00-08:00"),
+               _ms("2012-11-04T03:00:00-08:00")]
+    assert spine(la, "2012-11-04T00:00:00-07:00",
+                 "2012-11-04T04:00:00-08:00") == buckets
+    assert _floor_vals(spark, la, [
+        _ms("2012-11-04T00:30:00-07:00"), _ms("2012-11-04T01:30:00-07:00"),
+        _ms("2012-11-04T01:30:00-08:00"), _ms("2012-11-04T02:30:00-08:00"),
+        _ms("2012-11-04T03:30:00-08:00")]) == buckets
 
 
 def _floor_vals(spark, spec, instants_ms):

@@ -182,6 +182,20 @@ def test_tz_spine_matches_floor(spark):
     floored = [r["f"] for r in df.select(g.floor(F.col("t")).alias("f")).collect()]
     keys = [r["t"] for r in df.collect()]
     assert floored == keys  # every spine point is its own bucket start
+    # the 2012-11-04 fall-back day: 25 hourly buckets, the repeated 01:00
+    # hour twice, each its own bucket start; every minute of the day
+    # floors onto a spine point
+    h = parse_granularity({"type": "period", "period": "PT1H",
+                           "timeZone": "America/Los_Angeles"})
+    day = 1352012400000     # 2012-11-04T07:00:00Z == LA midnight
+    spine = h.spine(day, day + 25 * 3_600_000)
+    assert len(spine) == 25 and spine == sorted(set(spine))
+    df = spark.createDataFrame([(m,) for m in range(
+        day, day + 25 * 3_600_000, 60_000)], "ms long") \
+        .select(F.timestamp_millis(F.col("ms")).alias("t"))
+    floored = {r["f"] for r in df.select(F.unix_millis(
+        h.floor(F.col("t"))).alias("f")).collect()}
+    assert floored == set(spine)
 
 
 def test_dst_aware_day_shift(spark):

@@ -182,6 +182,7 @@ def test_filtered_hour_timeseries_job_budget(spark, catalog):
         assert native_query(q, spark, catalog) == first
     finally:
         sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
     tracker = sc.statusTracker()
     assert tracker.getJobIdsForGroup("timeline-translate") == []
     assert 0 < len(tracker.getJobIdsForGroup("timeline-query")) <= 4
