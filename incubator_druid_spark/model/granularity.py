@@ -101,8 +101,12 @@ def parse_period(iso: str) -> Period:
                       g[k] for k in ("d", "h", "mi", "s")))
 
 
+# a zone id or fixed offset: 'America/Los_Angeles', 'Etc/GMT+8', '+05:30'
+_ZONE_RE = re.compile(r"[A-Za-z0-9_+\-/:]+")
+
+
 def _quote(s: str) -> str:
-    return "'" + s.replace("'", "''") + "'"
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _day_of(wall: str) -> str:
@@ -126,6 +130,10 @@ class Granularity:
         self.kind = kind  # 'all' | 'none' | 'period'
         self.period = period
         self.origin_millis = origin_millis
+        if tz is not None and not (isinstance(tz, str)
+                                   and _ZONE_RE.fullmatch(tz)):
+            # the zone is inlined into SQL text as a literal
+            raise ValueError(f"bad time zone: {tz!r}")
         self.tz = tz if tz not in (None, "UTC", "Etc/UTC") else None
 
     # -- Spark SQL text ---------------------------------------------------
@@ -146,12 +154,14 @@ class Granularity:
 
     def ceil_sql(self, operand: str) -> str:
         """timestamp_ceil: the operand on a bucket start, else the next one
-        (query/expression/TimestampCeilExprMacro.java)."""
+        (query/expression/TimestampCeilExprMacro.java).  The floor shifted by
+        0 or 1 periods, not a CASE of the two: outside a branch the floor is
+        a common subexpression that Spark evaluates once per row."""
         if self.kind != "period":
             return self.floor_sql(operand)
         fl = self.floor_sql(operand)
-        return (f"CASE WHEN {fl} = {operand} THEN {operand} "
-                f"ELSE {self.shift_sql(fl, 1)} END")
+        return self.shift_sql(fl, f"CASE WHEN {fl} = {operand} THEN 0 "
+                                  f"ELSE 1 END")
 
     def shift_sql(self, operand: str, steps) -> str:
         """``operand`` moved by ``steps`` periods (SQL text or an int).

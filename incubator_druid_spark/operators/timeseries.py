@@ -155,8 +155,12 @@ def _zero_fill(out: DataFrame, query: dict, gran, spark: SparkSession,
                         f"{TIME_COLUMN} timestamp")
     # the spine is one partition: over a one-partition source the join
     # plans no exchange; otherwise AQE broadcasts `out` from its exact
-    # post-aggregation size (the spine, the preserved side, cannot be built)
-    joined = spine.join(out, on=TIME_COLUMN, how="left")
+    # post-aggregation size (the spine, the preserved side, cannot be built).
+    # Null-safe equality: the isnotnull(key) Catalyst infers from a plain
+    # equi-join goes below the aggregate and evaluates the bucketing
+    # expression a second time per row
+    joined = spine.join(out, spine[TIME_COLUMN].eqNullSafe(out[TIME_COLUMN]),
+                        "left").drop(out[TIME_COLUMN])
     # aggregator identity values for empty buckets
     fills = []
     for spec in query.get("aggregations") or []:

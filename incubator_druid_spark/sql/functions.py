@@ -9,13 +9,14 @@ which Catalyst inlines into the plan — JVM-side, codegen-friendly, zero Python
 in the hot path.
 
 After ``register_druid_sql(spark)`` + ``register_views(catalog)``, Druid SQL
-like ``SELECT TIME_FLOOR(__time, 'PT1H'), MV_CONTAINS(dim2, 'a') …`` runs
-directly through ``spark.sql``.
+like ``SELECT TIME_PARSE(s), MV_CONTAINS(dim2, 'a') …`` runs directly through
+``spark.sql``.
 
-TIME_FLOOR/TIME_CEIL/TIME_SHIFT of every arity and FLOOR/CEIL … TO are
-rewritten call-site into ``Granularity``'s SQL text (model/granularity.py),
-as TimeFloorOperatorConversion.java:40-75 delegates to PeriodGranularity:
-any literal ISO period, the origin and the zone (the query's sqlTimeZone by
+TIME_FLOOR/TIME_CEIL/TIME_SHIFT have no registered function: ``druid_sql``
+rewrites them (every arity), FLOOR/CEIL … TO and DATE_TRUNC call-site into
+``Granularity``'s SQL text (model/granularity.py), as
+TimeFloorOperatorConversion.java:40-75 delegates to PeriodGranularity: any
+literal ISO period, the origin and the zone (the query's sqlTimeZone by
 default) are inlined as literals.  A NON-literal period (a period read from
 a column) picks among the common periods at run time and raises via
 raise_error on any other — never a silent NULL.
@@ -23,6 +24,7 @@ raise_error on any other — never a silent NULL.
 
 from __future__ import annotations
 
+import functools
 import re
 import threading
 from contextlib import contextmanager
@@ -762,14 +764,12 @@ def _in_spans(pos: int, spans) -> bool:
 
 def _rewrite_calls(sql: str, name: str, repl) -> str:
     """Rewrite every call of ``name(...)`` in ``sql`` via ``repl(args) ->
-    str | None`` (None leaves the call untouched).  A ``name`` of several
-    alternatives ``A|B`` calls ``repl(matched_name, args)`` instead.
-    Argument splitting is paren- and quote-aware so nested calls and string
-    literals pass through; matches that START inside a string literal are
-    data, not calls, and are left alone; replacement text is not
-    re-scanned."""
+    str | None`` (None leaves the call untouched).  Argument splitting is
+    paren- and quote-aware so nested calls and string literals pass through;
+    matches that START inside a string literal are data, not calls, and are
+    left alone; replacement text is not re-scanned."""
     import re
-    pat = re.compile(rf"(?i)\b({name})\s*\(")
+    pat = re.compile(rf"(?i)\b{name}\s*\(")
     spans = _literal_spans(sql)
     out, pos = [], 0
     while True:
@@ -820,7 +820,7 @@ def _rewrite_calls(sql: str, name: str, repl) -> str:
         # inner one — e.g. CAST(CAST('10.1' AS INTEGER) AS VARCHAR), where
         # only the inner cast needs the Druid truncating-cast rewrite
         args = [_rewrite_calls(a, name, repl) for a in args]
-        rep = repl(m.group(1).upper(), args) if "|" in name else repl(args)
+        rep = repl(args)
         out.append(sql[pos:m.start()])
         if rep is not None:
             out.append(rep)
@@ -1083,12 +1083,12 @@ def _lit_string(arg: str) -> str | None:
 
 def _rewrite_time_buckets(sql: str, tz: str | None, origin_ms) -> str:
     """TIME_FLOOR/TIME_CEIL(ts, period[, origin[, tz]]) and TIME_SHIFT(ts,
-    period, step[, tz]) → ``Granularity``'s SQL text, in one pass so a
-    nested call is rewritten once (TimeFloorOperatorConversion.java and
-    siblings delegate to PeriodGranularity).  The zone defaults to the
-    query's sqlTimeZone ``tz``; ``origin_ms`` turns an origin argument into
-    epoch millis.  A non-literal period is a CASE over the common periods
-    that raises on any other."""
+    period, step[, tz]) → ``Granularity``'s SQL text
+    (TimeFloorOperatorConversion.java and siblings delegate to
+    PeriodGranularity).  The zone defaults to the query's sqlTimeZone
+    ``tz``; ``origin_ms`` turns an origin argument into epoch millis.  A
+    non-literal period is a CASE over the common periods that raises on any
+    other."""
     from incubator_druid_spark.model.granularity import (COMMON_PERIODS,
                                                          Granularity,
                                                          parse_period)
@@ -1123,11 +1123,16 @@ def _rewrite_time_buckets(sql: str, tz: str | None, origin_ms) -> str:
                 f"'; pass the period as a string literal or use the native "
                 f"API')) AS TIMESTAMP) END)")
 
-    names = "TIME_FLOOR|TIME_CEIL|TIME_SHIFT"
+    names = ("TIME_SHIFT", "TIME_CEIL", "TIME_FLOOR")
     # Calcite-quoted calls arrive backtick-quoted from the identifier rewrite
     sql = _outside_literals(sql, lambda seg: re.sub(
-        rf"(?i)`({names})`(?=\s*\()", r"\1", seg))
-    return _rewrite_calls(sql, names, repl)
+        rf"(?i)`({'|'.join(names)})`(?=\s*\()", r"\1", seg))
+    # a call nested in another name's operand is rewritten in each copy of
+    # that operand, so an origin is evaluated once per text
+    origin_ms = functools.cache(origin_ms)
+    for fname in names:
+        sql = _rewrite_calls(sql, fname, lambda args, f=fname: repl(f, args))
+    return sql
 
 
 def _origin_millis(spark: SparkSession, text: str) -> int:
@@ -1212,32 +1217,28 @@ def _rewrite_floor_ceil_to(sql: str) -> str:
     return sql
 
 
+# DATE_TRUNC's units (DateTruncOperatorConversion.java TRUNC_PERIOD_MAP)
+_TRUNC_PERIOD = {**{u.lower(): p for u, p in _UNIT_PERIOD.items()},
+                 "milliseconds": "PT0.001S", "microseconds": "PT0.001S",
+                 "decade": "P10Y", "century": "P100Y", "millennium": "P1000Y"}
+
+
 def _rewrite_date_trunc(sql: str) -> str:
-    """DATE_TRUNC's documented 'decade'/'century'/'millennium' units
-    (sql.md) are unknown to Spark's date_trunc, which returns an all-NULL
-    column silently — rewrite them to year arithmetic (Postgres-style
-    truncation: century 2019 → 2001)."""
-    import re
-    operand = r"((?:[^()]|\([^()]*\))+?)"
-    exprs = {
-        "decade": "make_timestamp(CAST(year({x}) - pmod(year({x}), 10) "
-                  "AS INT), 1, 1, 0, 0, 0)",
-        "century": "make_timestamp(CAST(year({x}) - pmod(year({x}) - 1, "
-                   "100) AS INT), 1, 1, 0, 0, 0)",
-        "millennium": "make_timestamp(CAST(year({x}) - pmod(year({x}) - 1, "
-                      "1000) AS INT), 1, 1, 0, 0, 0)",
-    }
-    spans = _literal_spans(sql)
-
-    def repl(m):
-        if _in_spans(m.start(), spans):
-            return m.group(0)
-        tmpl = exprs.get(m.group(1).lower())
-        return m.group(0) if tmpl is None else tmpl.format(x=m.group(2))
-
-    return re.sub(
-        rf"(?i)\bDATE_TRUNC\s*\(\s*'(\w+)'\s*,\s*{operand}\s*\)",
-        repl, sql)
+    """DATE_TRUNC('unit', ts) → TIME_FLOOR(ts, period): Druid maps each
+    unit to a Period floored in the query zone.  Centuries and millennia
+    keep the Postgres phase (century 2019 → 2001), an origin in year 2001,
+    where Druid's 1970-anchored grid would give 1970."""
+    def repl(args):
+        unit = _lit_string(args[0]) if len(args) == 2 else None
+        if unit is None:
+            return None
+        period = _TRUNC_PERIOD.get(unit.lower())
+        if period is None:
+            raise ValueError(f"DATE_TRUNC cannot truncate to {unit!r}")
+        origin = (", TIMESTAMP '2001-01-01 00:00:00'"
+                  if unit.lower() in ("century", "millennium") else "")
+        return f"TIME_FLOOR({args[1]}, '{period}'{origin})"
+    return _rewrite_calls(sql, "DATE_TRUNC", repl)
 
 
 _ARRAY_COLS_CACHE: dict[int, frozenset] = {}

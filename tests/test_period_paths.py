@@ -1,8 +1,8 @@
 """One period arithmetic behind every path that buckets time.
 
 A native granularity, the timestamp_floor/ceil/shift expression macros and
-Druid SQL's TIME_FLOOR/TIME_CEIL/TIME_SHIFT (every arity) and FLOOR/CEIL …
-TO all render through ``Granularity`` (model/granularity.py), as Druid's
+Druid SQL's TIME_FLOOR/TIME_CEIL/TIME_SHIFT (every arity), FLOOR/CEIL … TO
+and DATE_TRUNC all render through ``Granularity`` (model/granularity.py), as Druid's
 TimeFloorOperatorConversion delegates to PeriodGranularity.  These tests
 run the same (period, origin, zone) grid through each path and require
 identical millis, including across DST transitions.
@@ -187,7 +187,8 @@ def _paths(i: int, period: str, origin: str | None, zone: str | None):
                   (zone, f"TIME_CEIL({t}, '{period}')", "ceil")]
         if period in UNITS:
             forms += [(zone, f"FLOOR({t} TO {UNITS[period]})", "floor"),
-                      (zone, f"CEIL({t} TO {UNITS[period]})", "ceil")]
+                      (zone, f"CEIL({t} TO {UNITS[period]})", "ceil"),
+                      (zone, f"DATE_TRUNC('{UNITS[period]}', {t})", "floor")]
     return [(tz, f"unix_millis({sql}) AS sql_{i}_{op}_{k}")
             for k, (tz, sql, op) in enumerate(forms)]
 
@@ -268,3 +269,63 @@ def test_macro_registers_in_the_query_session(spark, tmp_path):
              "expression": f"timestamp_floor(__time, 'PT1H', null, '{LA}')"}]}
     assert [r["h"] for r in translate(q, host, cat).collect()] == \
         [FALL_BACK_BUCKETS[2]]
+
+
+# ---------------------------------------------------------------------------
+# the zone enters the SQL text as a literal, so it must be a zone id
+# ---------------------------------------------------------------------------
+
+BAD_ZONE = "UTC\\' ) OR reflect('java.lang.System', 'exit', 1) --"
+
+
+def test_zone_with_a_quote_or_backslash_is_refused(spark, tmp_path):
+    """A native timeZone, a timestamp_* macro zone and a SQL zone argument
+    that could close the inlined string literal raise ValueError."""
+    from incubator_druid_spark import translate
+    from incubator_druid_spark.catalog import Catalog
+    from incubator_druid_spark.functions.druid_expr import compile_expr
+    from incubator_druid_spark.model.granularity import _quote
+    path = str(tmp_path / "one.parquet")
+    spark.createDataFrame([(0,)], "ms long") \
+        .select(F.timestamp_millis("ms").alias("__time")).write.parquet(path)
+    cat = Catalog(spark)
+    cat.register("one", path)
+    q = {"queryType": "timeseries", "dataSource": "one",
+         "granularity": {"type": "period", "period": "PT1H",
+                         "timeZone": BAD_ZONE},
+         "intervals": ["2012-11-04T00:00:00Z/2012-11-05T00:00:00Z"],
+         "aggregations": [{"type": "count", "name": "n"}]}
+    with pytest.raises(ValueError, match="bad time zone"):
+        translate(q, spark, cat)
+    for op in ("floor", "ceil"):
+        with pytest.raises(ValueError, match="bad time zone"):
+            compile_expr(f"timestamp_{op}(t, 'PT1H', null, "
+                         f"{_quote(BAD_ZONE)})", F.col)
+    with pytest.raises(ValueError, match="bad time zone"):
+        compile_expr(f"timestamp_shift(t, 'PT1H', 1, {_quote(BAD_ZONE)})",
+                     F.col)
+    with pytest.raises(ValueError, match="bad time zone"):
+        _sql_column(spark, "TIME_FLOOR(timestamp_millis(ms), 'PT1H', NULL, "
+                           "'UTC\\\\x')", [0])
+    # the literal itself escapes both characters, as Spark's lexer reads them
+    assert spark.sql(f"SELECT {_quote(BAD_ZONE)} AS z").first()["z"] == \
+        BAD_ZONE
+
+
+def test_date_trunc_floors_in_the_sql_time_zone(spark):
+    """DATE_TRUNC floors like TIME_FLOOR in the query zone; centuries and
+    millennia keep the Postgres phase; an unknown unit raises."""
+    t = ms("2019-07-01T03:30:00+00:00")
+    got = _sql_column(
+        spark,
+        "unix_millis(DATE_TRUNC('day', timestamp_millis(ms))) AS d, "
+        "unix_millis(DATE_TRUNC('decade', timestamp_millis(ms))) AS dec, "
+        "unix_millis(DATE_TRUNC('century', timestamp_millis(ms))) AS c, "
+        "unix_millis(DATE_TRUNC('millennium', timestamp_millis(ms))) AS m",
+        [t], LA)[0]
+    assert iso(got["d"]) == "2019-06-30T07:00:00Z"
+    assert iso(got["dec"]) == "2010-01-01T08:00:00Z"
+    assert iso(got["c"]) == iso(got["m"]) == "2001-01-01T08:00:00Z"
+    with pytest.raises(ValueError, match="cannot truncate"):
+        _sql_column(spark, "DATE_TRUNC('fortnight', timestamp_millis(ms))",
+                    [t])
