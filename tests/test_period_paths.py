@@ -275,7 +275,7 @@ def test_macro_registers_in_the_query_session(spark, tmp_path):
 # the zone enters the SQL text as a literal, so it must be a zone id
 # ---------------------------------------------------------------------------
 
-BAD_ZONE = "UTC\\' ) OR reflect('java.lang.System', 'exit', 1) --"
+BAD_ZONE = "UTC\\' ) OR raise_error('spliced') --"
 
 
 def test_zone_with_a_quote_or_backslash_is_refused(spark, tmp_path):
