@@ -24,6 +24,14 @@ maps back with t's own UTC offset when that offset still holds there, else
 through ``to_utc_timestamp`` (Joda's convertLocalToUTC with the original
 instant), so the repeated hour of a DST fall-back is two buckets.
 
+Two shortcuts read the JVM's zone rules, the ones from_utc_timestamp
+applies.  Where the zone's offsets are whole periods and its transitions
+lie on the grid (PT1H in America/Los_Angeles since 1948), the floor is the
+UTC floor, with no zone conversion.  Where no grid wall time falls in the
+span a transition skips or repeats (days and months in
+America/Los_Angeles), a bucket start is its wall time's one instant, the
+one ``to_utc_timestamp`` gives, with no check.
+
 A Column operand goes through ``floor``/``ceil``/``shift``: a session
 temporary function whose body is the same text.  ``spine`` enumerates the
 bucket starts driver-side with the same arithmetic.
@@ -32,11 +40,15 @@ bucket starts driver-side with the same arithmetic.
 from __future__ import annotations
 
 import hashlib
+import math
 import re
 from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
 from functools import cached_property
 
+from py4j.protocol import Py4JJavaError
+from pyspark import SparkContext
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -109,6 +121,56 @@ def _quote(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+_OFFSET = r"Z|[+-]\d\d:\d\d(?::\d\d)?"
+# ZoneOffsetTransition.toString: local time before it, offset before, after
+_TRANSITION_RE = re.compile(
+    rf"Transition\[\w+ at (\S+?)({_OFFSET}) to ({_OFFSET})\]")
+_ZONE_RULES: dict[str, tuple | None] = {}
+
+
+def _offset_ms(s: str) -> int:
+    if s == "Z":
+        return 0
+    h, m, *sec = (int(x) for x in s[1:].split(":"))
+    return (-1 if s[0] == "-" else 1) * ((h * 60 + m) * 60 + sum(sec)) * 1000
+
+
+def _transitions(text: str) -> list[tuple[int, int, int]]:
+    """(instant, offset before, offset after) of each transition printed
+    in ``text``."""
+    out = []
+    for local, before, after in _TRANSITION_RE.findall(text):
+        b = _offset_ms(before)
+        wall = (datetime.fromisoformat(local) - _EPOCH) // _MS
+        out.append((wall - b, b, _offset_ms(after)))
+    return out
+
+
+def _zone_rules(tz: str) -> tuple | None:
+    """The JVM's rules for ``tz``, the ones from_utc_timestamp applies: the
+    offset before the first transition, every transition, and one of each
+    yearly rule that follows them.  None without a running JVM or for a
+    zone Spark does not know."""
+    if tz in _ZONE_RULES:
+        return _ZONE_RULES[tz]
+    jvm = SparkContext._jvm
+    if jvm is None:
+        return None
+    try:
+        rules = jvm.org.apache.spark.sql.catalyst.util.DateTimeUtils \
+            .getZoneId(tz).getRules()
+        first = rules.getOffset(jvm.java.time.Instant.MIN).toString()
+        past = rules.getTransitions().toString()
+        future = " ".join(r.createTransition(2100).toString()
+                          for r in rules.getTransitionRules())
+        found = (_offset_ms(first), _transitions(past), _transitions(future))
+    except (Py4JJavaError, CapturedException):
+        # an unknown zone: Spark reports it when it runs the text
+        found = None
+    _ZONE_RULES[tz] = found
+    return found
+
+
 def _day_of(wall: str) -> str:
     """The DATE holding local wall-clock millis ``wall``."""
     return f"date_from_unix_date(CAST(floor(({wall}) / {_DAY}) AS INT))"
@@ -146,11 +208,18 @@ class Granularity:
         if self.kind == "none":
             return operand
         wall = self._wall_sql(operand)
-        p = self.period
-        if not p.is_calendar:
-            delta = f"pmod({_minus(wall, self._anchor())}, {p.millis}L)"
-            return self._at(operand, wall, delta=delta)
-        return self._at(operand, wall, w=self._month_floor_sql(wall))
+        w, delta = self._floor_wall(wall)
+        zoned = (self._to_utc(w) if self._grid_unambiguous
+                 else self._at(operand, wall, w, delta))
+        since = self._utc_grid_since
+        if since is None:
+            return zoned
+        p, t = self.period, f"unix_millis({operand})"
+        utc = (f"timestamp_millis({t} - pmod({_minus(t, self._anchor())}, "
+               f"{p.millis}L))")
+        if since == -math.inf:
+            return utc
+        return f"CASE WHEN {t} >= {since}L THEN {utc} ELSE {zoned} END"
 
     def ceil_sql(self, operand: str) -> str:
         """timestamp_ceil: the operand on a bucket start, else the next one
@@ -159,6 +228,13 @@ class Granularity:
         a common subexpression that Spark evaluates once per row."""
         if self.kind != "period":
             return self.floor_sql(operand)
+        p = self.period
+        if self._grid_unambiguous and (p.is_calendar or p.millis % _DAY == 0):
+            # the floor's wall time 0 or 1 periods on has one instant
+            wall = self._wall_sql(operand)
+            w = self._floor_wall(wall)[0]
+            return self._to_utc(self._wall_add(
+                w, f"CASE WHEN {w} = {wall} THEN 0 ELSE 1 END"))
         fl = self.floor_sql(operand)
         return self.shift_sql(fl, f"CASE WHEN {fl} = {operand} THEN 0 "
                                   f"ELSE 1 END")
@@ -178,14 +254,33 @@ class Granularity:
         wall = self._wall_sql(operand)
         if not p.is_calendar:
             return self._at(operand, wall, delta=f"-{k} * {p.millis}L")
+        return self._at(operand, wall, w=self._wall_add(wall, k))
+
+    def _wall_add(self, wall: str, k: str) -> str:
+        """Wall millis ``wall`` plus ``k`` periods of the local chronology:
+        add_months clamps month ends like Joda's months().add."""
+        p = self.period
+        if not p.is_calendar:
+            return f"{wall} + {k} * {p.millis}L"
         moved = f"add_months({_day_of(wall)}, CAST({k} * {p.months} AS INT))"
-        return self._at(operand, wall,
-                        w=f"{_date_ms(moved)} + pmod({wall}, {_DAY}L)")
+        return f"{_date_ms(moved)} + pmod({wall}, {_DAY}L)"
+
+    def _to_utc(self, w: str) -> str:
+        return f"to_utc_timestamp(timestamp_millis({w}), {_quote(self.tz)})"
 
     def _wall_sql(self, operand: str) -> str:
         if not self.tz:
             return f"unix_millis({operand})"
         return f"unix_millis(from_utc_timestamp({operand}, {_quote(self.tz)}))"
+
+    def _floor_wall(self, wall: str) -> tuple[str, str | None]:
+        """The grid point at or before wall millis ``wall``, and for a fixed
+        period the distance below ``wall`` that gives it."""
+        p = self.period
+        if p.is_calendar:
+            return self._month_floor_sql(wall), None
+        delta = f"pmod({_minus(wall, self._anchor())}, {p.millis}L)"
+        return f"{wall} - ({delta})", delta
 
     def _at(self, operand: str, wall: str, w: str | None = None,
             delta: str | None = None) -> str:
@@ -202,8 +297,7 @@ class Granularity:
         z = _quote(self.tz)
         c = f"timestamp_millis(unix_millis({operand}) - ({delta}))"
         return (f"CASE WHEN unix_millis(from_utc_timestamp({c}, {z})) = ({w}) "
-                f"THEN {c} ELSE to_utc_timestamp(timestamp_millis({w}), {z}) "
-                f"END")
+                f"THEN {c} ELSE {self._to_utc(w)} END")
 
     def _month_floor_sql(self, wall: str) -> str:
         """Wall millis of the calendar bucket holding wall millis ``wall``."""
@@ -296,6 +390,47 @@ class Granularity:
         p = self.period
         return _EPOCH_MONDAY if p.weeks and p.millis == _MILLIS["w"] else 0
 
+    @cached_property
+    def _utc_grid_since(self) -> float | None:
+        """For a zoned fixed period dividing a day: the first instant from
+        which every UTC offset of the zone is a whole number of periods and
+        every transition lies on the grid.  From there on the wall grid is
+        the UTC grid, so a floor needs no zone conversion.  -inf: always;
+        None: never, or no JVM to read the zone's rules from."""
+        p = self.period
+        rules = (_zone_rules(self.tz) if self.tz and not p.is_calendar
+                 and p.millis and _DAY % p.millis == 0 else None)
+        if rules is None:
+            return None
+        first, past, future = rules
+        n, a = p.millis, self._anchor()
+        since = -math.inf if first % n == 0 else None
+        for at, _, after in past:
+            if after % n:
+                since = None
+            elif since is None or (at - a) % n:
+                since = at + (a - at) % n  # the next grid instant
+        # a yearly rule recurs at one time of day, so one year shows them all
+        if any(after % n or (at - a) % n for at, _, after in future):
+            return None
+        return since
+
+    @cached_property
+    def _grid_unambiguous(self) -> bool:
+        """Whether no grid wall time ever falls in the wall span a zone
+        transition skips or repeats, so each bucket start is the one
+        instant of its wall time, the one to_utc_timestamp gives.  Grid
+        points of whole days or months share the anchor's time of day, and
+        only that is checked for them."""
+        p = self.period
+        n = _DAY if p.is_calendar or p.millis % _DAY == 0 else p.millis
+        rules = _zone_rules(self.tz) if self.tz and _DAY % n == 0 else None
+        if rules is None:
+            return False
+        a = self._anchor()
+        return not any((a - at - min(b, f)) % n < abs(f - b)
+                       for at, b, f in rules[1] + rules[2])
+
     def _grid_index(self, wall: int) -> int:
         """Index of the grid point at or before wall millis ``wall``."""
         p = self.period
@@ -360,7 +495,9 @@ class Granularity:
         if self.kind in ("all", "none") or self.period is None:
             return []
         first = self.floor_ms(start_ms)
-        if not self.tz:
+        since = self._utc_grid_since
+        if not self.tz or since is not None and first >= since:
+            # UTC, or where the wall grid is the UTC grid
             i, out = self._grid_index(first), []
             while (t := self._grid(i)) < end_ms:
                 out.append(t)

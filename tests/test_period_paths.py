@@ -8,13 +8,16 @@ run the same (period, origin, zone) grid through each path and require
 identical millis, including across DST transitions.
 """
 
+import calendar
 import datetime as dt
+import math
 from zoneinfo import ZoneInfo
 
 import pytest
 from pyspark.sql import functions as F
 
-from incubator_druid_spark.model.granularity import parse_granularity
+from incubator_druid_spark.model.granularity import (parse_granularity,
+                                                     parse_period)
 
 LA = "America/Los_Angeles"
 KTM = "Asia/Kathmandu"
@@ -144,6 +147,10 @@ INSTANTS = sorted(ms(s) for s in [
     "2024-11-03T08:30:00+00:00", "2024-11-03T09:00:00+00:00",
     "2024-11-03T09:30:00+00:00",
     "2024-07-01T07:30:00+00:00",
+    # local mean time, before the zones' first transitions
+    "1850-06-01T12:34:56+00:00",
+    # LA's 1948 spring-forward at 02:01, off the hour grid
+    "1948-03-14T10:30:00+00:00",
 ])
 
 # (period, origin, zone)
@@ -158,6 +165,9 @@ GRID = [
     ("P1D", "2012-01-02T05:00:00Z", LA),
     ("P1M", "2000-01-31T05:00:00Z", None),
     ("P3M", "2000-02-15T12:00:00Z", LA),
+    # whole-hour, half-hour and fixed offsets: a UTC floor where aligned
+    ("PT1H", None, "Europe/London"), ("PT30M", None, "Asia/Kolkata"),
+    ("PT1H", None, "Asia/Kolkata"), ("PT1H", None, "Etc/GMT-5"),
 ]
 UNITS = {"PT1H": "HOUR", "P1D": "DAY", "P1W": "WEEK", "P1M": "MONTH",
          "P3M": "QUARTER", "P1Y": "YEAR"}
@@ -247,6 +257,134 @@ def test_every_path_gives_identical_millis(spark):
                     (iso(m), iso(a), iso(b))
                     for m, a, b in zip(INSTANTS, first, got[c]) if a != b])
         assert got[f"n_{i}_floor_0"] == expected_floor[i], GRID[i]
+
+
+# ---------------------------------------------------------------------------
+# ceil and shift against Joda's arithmetic in a zone's chronology
+# ---------------------------------------------------------------------------
+
+def _offset(zone: str, t: int) -> int:
+    d = dt.datetime.fromtimestamp(t / 1000, ZoneInfo(zone))
+    return int(d.utcoffset().total_seconds() * 1000)
+
+
+def _joda_add(period: str, zone: str, t: int, n: int) -> int:
+    """t plus n periods as Joda adds them: wall time plus n days or months
+    (clamped to the month's end), mapped back with t's own offset while it
+    holds there, else the offset before the transition; sub-day periods
+    are durations."""
+    p = parse_period(period)
+    if not p.months and p.millis % 86_400_000:
+        return t + n * p.millis
+    wall = t + _offset(zone, t)
+    d = dt.datetime(1970, 1, 1) + dt.timedelta(milliseconds=wall)
+    if p.months:
+        y, m = divmod(d.year * 12 + d.month - 1 + n * p.months, 12)
+        d = d.replace(year=y, month=m + 1,
+                      day=min(d.day, calendar.monthrange(y, m + 1)[1]))
+    else:
+        d += dt.timedelta(milliseconds=n * p.millis)
+    local = int((d - dt.datetime(1970, 1, 1)).total_seconds() * 1000)
+    c = local - (wall - t)
+    if c + _offset(zone, c) == local:
+        return c
+    before = d.replace(tzinfo=ZoneInfo(zone)).utcoffset()  # fold 0
+    return local - int(before.total_seconds() * 1000)
+
+
+JODA_INSTANTS = {
+    LA: ["2024-03-10T09:30:00", "2024-03-10T10:30:00", "2024-11-03T08:30:00",
+         "2024-11-03T09:30:00", "2024-01-31T20:00:00", "2024-03-09T10:30:00"],
+    # 2018-11-04 and 2019-02-17 begin DST at and end it into midnight
+    "America/Sao_Paulo": ["2018-11-03T03:30:00", "2018-11-04T03:00:00",
+                          "2018-11-04T03:30:00", "2019-02-17T01:30:00",
+                          "2019-02-17T02:30:00", "2019-02-16T02:30:00"],
+    # 2011-12-30 does not exist in Apia
+    "Pacific/Apia": ["2011-12-29T09:30:00", "2011-12-29T10:00:00",
+                     "2011-12-30T10:30:00", "2011-12-28T10:00:00"],
+}
+
+
+@pytest.mark.parametrize("zone", sorted(JODA_INSTANTS))
+def test_ceil_and_shift_follow_the_zone_chronology(spark, zone):
+    """timestamp_ceil is the floor, or the floor plus one period; shift adds
+    periods to the wall time; both map back as Joda does across gaps,
+    repeated hours and a skipped day."""
+    instants = [ms(s + "+00:00") for s in JODA_INSTANTS[zone]]
+    frame = spark.createDataFrame([(m,) for m in instants], "ms long") \
+        .withColumn("t", F.timestamp_millis("ms"))
+    for period in ("PT1H", "P1D", "P2D", "P1W", "P1M", "P3M", "P1Y"):
+        g = parse_granularity({"type": "period", "period": period,
+                               "timeZone": zone})
+        rows = frame.orderBy("ms").select(
+            F.unix_millis(F.expr(g.ceil_sql("t"))).alias("c"),
+            F.unix_millis(F.expr(g.shift_sql("t", 1))).alias("s1"),
+            F.unix_millis(F.expr(g.shift_sql("t", -1))).alias("s_1")
+        ).collect()
+        for m, r in zip(sorted(instants), rows):
+            f = g.floor_ms(m)
+            ceil = f if f == m else _joda_add(period, zone, f, 1)
+            assert (r["c"], r["s1"], r["s_1"]) == (
+                ceil, _joda_add(period, zone, m, 1),
+                _joda_add(period, zone, m, -1)), (period, iso(m))
+
+
+# ---------------------------------------------------------------------------
+# a zone whose offsets and transitions lie on the period grid
+# ---------------------------------------------------------------------------
+
+def test_aligned_zone_floors_in_utc(spark):
+    """Where every offset of the zone is a whole number of periods and
+    every transition lies on the grid, the floor is the UTC floor: PT1H in
+    LA from the first whole hour after its 02:01 transition of 1948, in a
+    whole-hour fixed offset always; in half-hour Kolkata, off an origin's
+    half hour, for LA days and for PT7H, which does not divide a day,
+    never."""
+    def since(period, zone, origin=None):
+        spec = {"type": "period", "period": period, "timeZone": zone}
+        if origin:
+            spec["origin"] = origin
+        return parse_granularity(spec)._utc_grid_since
+
+    la = ms("1948-03-14T11:00:00+00:00")
+    assert since("PT1H", LA) == la
+    assert since("PT15M", LA) == ms("1948-03-14T10:15:00+00:00")
+    assert since("PT1H", "PST") == la
+    assert since("PT1H", "Etc/GMT-5") == -math.inf
+    assert since("PT1H", "Asia/Kolkata") is None
+    assert since("PT1H", LA, "2000-01-01T00:30:00Z") is None
+    assert since("P1D", LA) is since("PT7H", LA) is None
+    assert since("PT1H", "Nowhere/Atlantis") is None
+    g = parse_granularity({"type": "period", "period": "PT1H", "timeZone": LA})
+    assert g.floor_sql("t").startswith(
+        f"CASE WHEN unix_millis(t) >= {la}L THEN timestamp_millis("
+        "unix_millis(t) - pmod(unix_millis(t), 3600000L)) ELSE ")
+    assert "from_utc_timestamp" not in parse_granularity(
+        {"type": "period", "period": "PT1H", "timeZone": "Etc/GMT-5"}) \
+        .floor_sql("t")
+
+
+def test_unambiguous_grid_maps_wall_times_back_directly(spark):
+    """Where no grid wall time falls in a span a transition skips or
+    repeats, a bucket start is its wall time's one instant: LA days and
+    months (its switches are at 01:00-03:00), not LA hours, nor days in São
+    Paulo, whose DST began at midnight.  The floor and the ceil then read
+    the zone twice per row, and the ceil stays short text."""
+    def gran(period, zone):
+        return parse_granularity({"type": "period", "period": period,
+                                  "timeZone": zone})
+
+    for period in ("P1D", "P1W", "P1M", "P1Y"):
+        assert gran(period, LA)._grid_unambiguous, period
+    assert not gran("PT1H", LA)._grid_unambiguous
+    assert not gran("P1D", "America/Sao_Paulo")._grid_unambiguous
+    day = gran("P1D", LA)
+    for text in (day.floor_sql("t"), day.ceil_sql("t")):
+        assert text.startswith("to_utc_timestamp(timestamp_millis(")
+        # no check of a candidate instant's wall time
+        assert "unix_millis(from_utc_timestamp(timestamp_millis(" \
+            not in text
+    assert len(gran("P1M", LA).ceil_sql("t")) < 1000
 
 
 def test_macro_registers_in_the_query_session(spark, tmp_path):
