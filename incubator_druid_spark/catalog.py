@@ -150,6 +150,13 @@ class Catalog:
             reader = self.spark.read.format(spec.fmt)
             for k, v in spec.options.items():
                 reader = reader.option(k, v)
+            if token is not None:
+                # a table written by ingest or compaction: the schema it
+                # recorded spares the parquet schema job
+                from .timeline import recorded_schema
+                recorded = recorded_schema(spec.path)
+                if recorded is not None:
+                    reader = reader.schema(recorded)
             df = reader.load(spec.path)
         if spec.time_column and spec.time_column in df.columns and TIME_COLUMN not in df.columns:
             # Alias (not rename): queries may address either name; Catalyst

@@ -171,6 +171,48 @@ def _zone_rules(tz: str) -> tuple | None:
     return found
 
 
+# java.time.ZoneId.SHORT_IDS, the aliases Spark's DateTimeUtils.getZoneId
+# accepts beside region ids and offsets
+_SHORT_IDS = {
+    "ACT": "Australia/Darwin", "AET": "Australia/Sydney",
+    "AGT": "America/Argentina/Buenos_Aires", "ART": "Africa/Cairo",
+    "AST": "America/Anchorage", "BET": "America/Sao_Paulo",
+    "BST": "Asia/Dhaka", "CAT": "Africa/Harare", "CNT": "America/St_Johns",
+    "CST": "America/Chicago", "CTT": "Asia/Shanghai",
+    "EAT": "Africa/Addis_Ababa", "ECT": "Europe/Paris",
+    "IET": "America/Indiana/Indianapolis", "IST": "Asia/Kolkata",
+    "JST": "Asia/Tokyo", "MIT": "Pacific/Apia", "NET": "Asia/Yerevan",
+    "NST": "Pacific/Auckland", "PLT": "Asia/Karachi",
+    "PNT": "America/Phoenix", "PRT": "America/Puerto_Rico",
+    "PST": "America/Los_Angeles", "SST": "Pacific/Guadalcanal",
+    "VST": "Asia/Ho_Chi_Minh", "EST": "-05:00", "MST": "-07:00",
+    "HST": "-10:00"}
+# a fixed offset, bare or after UTC/GMT/UT: +5, +05:30, -0800, +05:30:15
+_FIXED_RE = re.compile(r"(?:UTC|GMT|UT)?([+-])(\d\d?)(?::?(\d\d))?(?::?(\d\d))?")
+
+
+def _tzinfo(tz: str):
+    """``tz`` as a Python tzinfo, resolved as Spark resolves it: through
+    DateTimeUtils.getZoneId when a JVM runs, else through ZoneId.SHORT_IDS
+    and a fixed-offset parse.  So a fixed offset ('+05:30') and a short id
+    ('PST') name the zone that from_utc_timestamp applies."""
+    from zoneinfo import ZoneInfo
+    jvm, zone = SparkContext._jvm, None
+    if jvm is not None:
+        try:
+            zone = jvm.org.apache.spark.sql.catalyst.util.DateTimeUtils \
+                .getZoneId(tz).normalized().getId()
+        except (Py4JJavaError, CapturedException):
+            pass  # unknown to Spark: let zoneinfo report it
+    zone = zone or _SHORT_IDS.get(tz, tz)
+    fixed = _FIXED_RE.fullmatch(zone)
+    if zone == "Z" or fixed:
+        sign, h, m, sec = fixed.groups() if fixed else ("+", 0, 0, 0)
+        return timezone((-1 if sign == "-" else 1) * timedelta(
+            hours=int(h), minutes=int(m or 0), seconds=int(sec or 0)))
+    return ZoneInfo(zone)
+
+
 def _day_of(wall: str) -> str:
     """The DATE holding local wall-clock millis ``wall``."""
     return f"date_from_unix_date(CAST(floor(({wall}) / {_DAY}) AS INT))"
@@ -354,8 +396,7 @@ class Granularity:
     # -- driver-side mirror -----------------------------------------------
     @cached_property
     def _zone(self):
-        from zoneinfo import ZoneInfo
-        return ZoneInfo(self.tz)
+        return _tzinfo(self.tz)
 
     def _wall(self, t: int) -> int:
         if not self.tz:

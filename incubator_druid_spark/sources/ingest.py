@@ -9,10 +9,18 @@ Reference pipeline being re-expressed (SURVEY §3.3): InputSource/InputFormat
 Spark-first: read with the native reader for the format, apply transforms as
 Column expressions, derive `__time` per the timestampSpec, optionally
 pre-aggregate (rollup ≡ ingest-time GROUP BY), and write Parquet partitioned by
-the segment granularity bucket.  Segments = partition directories; Druid's
-version/overshadow model maps to deterministic partition overwrite
-(`spark.sql.sources.partitionOverwriteMode=dynamic` keeps it atomic per
-partition at scale).
+the segment granularity bucket.  Segments = partition directories.  There is
+no versioned publish yet: an overwrite deletes the whole datasource directory
+and writes the new one in its place, so a query racing it can fail on vanished
+files or an empty directory (it never reads a mix of versions).
+
+An ingest does not rediscover what it knows.  A JSON input whose spec names
+every column it keeps (declared dimensions and plain numeric metrics, no
+transforms or flattening) is read with those columns as strings, not with an
+inferred schema, as Druid parses through the spec's InputRowSchema.  An input
+of one split rolls up inside its own task, with no exchange.  The sidecar
+records the schema written, so the catalog reads the table without a parquet
+schema job.
 
 Spec shape accepted (the Druid ioConfig/dataSchema fields that matter):
 {
@@ -36,21 +44,27 @@ Spec shape accepted (the Druid ioConfig/dataSchema fields that matter):
 from __future__ import annotations
 
 import os
+import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from incubator_druid_spark.catalog import Catalog, TIME_COLUMN
 from incubator_druid_spark.filters.filters import FilterContext, compile_filter
+from incubator_druid_spark.functions.lenient import lenient_cast
 from incubator_druid_spark.model.granularity import parse_granularity
-from incubator_druid_spark.timeline import BUCKET, bucket_key, write_meta
+from incubator_druid_spark.timeline import (BUCKET, bucket_key, write_meta,
+                                            written_schema)
 
 
 # ---------------------------------------------------------------------------
 # input formats / sources
 # ---------------------------------------------------------------------------
 
-def read_input(spark: SparkSession, io_config: dict) -> DataFrame:
+def read_input(spark: SparkSession, io_config: dict,
+               schema: str | None = None) -> DataFrame:
+    """The raw rows of an ioConfig; ``schema`` (DDL) replaces the JSON
+    reader's inference."""
     src = io_config.get("inputSource", {})
     fmt = io_config.get("inputFormat", {"type": "json"})
     paths = _source_paths(src)
@@ -81,13 +95,14 @@ def read_input(spark: SparkSession, io_config: dict) -> DataFrame:
     if t == "json":
         # core/.../impl/JsonInputFormat.java (+flattenSpec handled by Spark's
         # nested-field access; explicit flatten fields below)
-        df = spark.read.json(paths)
+        df = (spark.read.schema(schema) if schema else spark.read).json(paths)
         flatten = (fmt.get("flattenSpec") or {}).get("fields") or []
         for f in flatten:
-            # {"type":"path","name":...,"expr":"$.a.b"} — JsonPath subset
-            expr = f.get("expr", "")
-            dotted = expr.lstrip("$.").replace("['", ".").replace("']", "")
-            df = df.withColumn(f["name"], F.col(dotted))
+            # JSONPathFieldSpec: "root" names a top-level field, "path" and
+            # "jq" give a JsonPath/jq subset of field and index steps
+            col = (_field(f["name"]) if f.get("type") == "root"
+                   else _json_path(f.get("expr", "")))
+            df = df.withColumn(f["name"], col)
         return df
     if t == "regex":
         # core/.../impl/RegexInputFormat.java — one capture group per column
@@ -116,6 +131,34 @@ def read_input(spark: SparkSession, io_config: dict) -> DataFrame:
         from incubator_druid_spark.sources.protobuf import read_protobuf
         return read_protobuf(spark, paths, fmt)
     raise ValueError(f"unknown inputFormat type {t!r}")
+
+
+# one step of a flattenSpec path: .name, ['name'], ["name"] or [index]
+_PATH_STEP = re.compile(
+    r"""\.([^.\[\]]+)|\[\s*'([^']*)'\s*\]|\[\s*"([^"]*)"\s*\]|\[\s*(\d+)\s*\]""")
+
+
+def _field(name: str) -> Column:
+    """The top-level column ``name``, dots and all."""
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
+def _json_path(expr: str) -> Column:
+    """A flattenSpec path of field and index steps, ``$.a.b``,
+    ``$['a']['b']`` or ``$.a[0]`` (a leading ``$`` is optional)."""
+    col, pos, rest = None, 0, expr[1:] if expr.startswith("$") else expr
+    while pos < len(rest):
+        m = _PATH_STEP.match(rest, pos)
+        if m is None or col is None and m.group(4) is not None:
+            raise ValueError(f"unsupported flattenSpec path: {expr!r}")
+        *keys, index = m.groups()
+        key = next((k for k in keys if k is not None), None)
+        col = (col[int(index)] if key is None
+               else _field(key) if col is None else col.getField(key))
+        pos = m.end()
+    if col is None:
+        raise ValueError(f"unsupported flattenSpec path: {expr!r}")
+    return col
 
 
 def _source_paths(src: dict):
@@ -214,7 +257,7 @@ def apply_data_schema(df: DataFrame, data_schema: dict) -> DataFrame:
             if src is None or src not in df.columns:
                 continue
             typ = casts.get(m.get("type"))
-            col = F.col(src).cast(typ) if typ else F.col(src)
+            col = lenient_cast(F.col(src), typ) if typ else F.col(src)
             mcols.append(col.alias(mname))
         df = df.select(TIME_COLUMN, *[n for n in names if n in df.columns],
                        *[c for c in df.columns
@@ -233,11 +276,11 @@ def _apply_timestamp(df: DataFrame, ts_spec: dict) -> DataFrame:
     fmt = ts_spec.get("format", "auto")
     c = F.col(col)
     if fmt in ("millis",):
-        t = F.timestamp_millis(c.cast("long"))
+        t = F.timestamp_millis(lenient_cast(c, "long"))
     elif fmt in ("posix", "seconds"):
-        t = F.timestamp_seconds(c.cast("long"))
+        t = F.timestamp_seconds(lenient_cast(c, "long"))
     elif fmt in ("micro",):
-        t = F.timestamp_micros(c.cast("long"))
+        t = F.timestamp_micros(lenient_cast(c, "long"))
     elif fmt == "iso":
         t = c.cast("timestamp")
     elif fmt == "auto":
@@ -298,7 +341,12 @@ def ingest(spark: SparkSession, spec: dict, catalog: Catalog,
     """
     ds = spec["dataSchema"]
     name = ds["dataSource"]
-    df = read_input(spark, spec.get("ioConfig", {}))
+    df = read_input(spark, spec.get("ioConfig", {}), _json_read_schema(spec))
+    if df._jdf.queryExecution().executedPlan().execute() \
+            .getNumPartitions() == 1:
+        # an input of one split is one partition: the rollup aggregates
+        # inside the scan's task and the write follows in the same job
+        df = df.coalesce(1)
     df = apply_data_schema(df, ds)
 
     gspec = ds.get("granularitySpec") or {}
@@ -345,23 +393,64 @@ def ingest(spark: SparkSession, spec: dict, catalog: Catalog,
                       .sortWithinPartitions(BUCKET, *dims))
     writer = (out.write.mode(mode).option("maxRecordsPerFile", max_rows)
               .partitionBy(BUCKET))
-    if kind == "hashed" and pspec.get("partitionDimensions"):
+    managed = kind == "hashed" and pspec.get("partitionDimensions")
+    if managed:
         dims = pspec["partitionDimensions"]
         spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
         (writer.bucketBy(int(pspec.get("numShards", 8)), *dims)
             .sortBy(*dims)
             .option("path", path)
             .saveAsTable(name))
-        catalog.register(name, path, fmt="managed")
     else:
         writer.parquet(path)
-        catalog.register(name, path)
-    # the ingest-spec facts segmentMetadata reports and the segment
-    # granularity the layout was written with — the analogue of the
-    # reference's per-segment metadata.drd
+    # the ingest-spec facts segmentMetadata reports, the segment
+    # granularity the layout was written with and the schema written — the
+    # analogue of the reference's per-segment metadata.drd
     write_meta(path, {"rollup": bool(gspec.get("rollup")),
                       "queryGranularity": gspec.get("queryGranularity"),
                       "segmentGranularity": seg_gran,
-                      "aggregators": ds.get("metricsSpec") or []},
+                      "aggregators": ds.get("metricsSpec") or [],
+                      "schema": written_schema(out)},
                append=mode == "append")
+    catalog.register(name, path, fmt="managed" if managed else "parquet")
     return path
+
+
+# the metrics whose input goes through a lenient numeric cast, so reading
+# their field as a string stores what an inferred number does
+_CAST_METRICS = {"count", "longSum", "longMin", "longMax", "doubleSum",
+                 "doubleMin", "doubleMax", "floatSum", "floatMin", "floatMax"}
+
+
+def _json_read_schema(spec: dict) -> str | None:
+    """The read schema of a JSON input whose spec names every column it
+    keeps: the timestamp column, each dimension and each metric's
+    fieldName, all STRING.  The reader keeps a number's text, so the
+    timestamp parsing and the metrics' lenient casts see the digits an
+    inferred read gives; a dimension given by name is a string dimension
+    (Druid's StringDimensionSchema), whatever its JSON values.  None, so
+    the reader infers, for a spec with no dimensions or no metrics (it keeps
+    every input column), transforms, a flattenSpec, typed or multi-value
+    dimensions, other metrics, or a Z-order layout (numeric keys)."""
+    ds = spec["dataSchema"]
+    fmt = (spec.get("ioConfig") or {}).get("inputFormat") or {}
+    tf = ds.get("transformSpec") or {}
+    dims = (ds.get("dimensionsSpec") or {}).get("dimensions") or []
+    metrics = ds.get("metricsSpec") or []
+    pspec = (spec.get("tuningConfig") or {}).get("partitionsSpec") or {}
+    if (fmt.get("type", "json") != "json" or fmt.get("flattenSpec")
+            or tf.get("transforms") or tf.get("filter") is not None
+            or not dims or not metrics or pspec.get("type") == "zorder"
+            or any(isinstance(d, dict)
+                   and (d.get("type", "string") != "string"
+                        or "multiValueHandling" in d) for d in dims)
+            or any(m.get("type") not in _CAST_METRICS
+                   or m.get("expression") is not None
+                   or m.get("type") != "count" and not m.get("fieldName")
+                   for m in metrics)):
+        return None
+    ts = (ds.get("timestampSpec") or {}).get("column", "timestamp")
+    cols = dict.fromkeys([ts, *map(_dim_name, dims),
+                          *(m["fieldName"] for m in metrics
+                            if m.get("fieldName"))])
+    return ", ".join(f"`{c.replace('`', '``')}` STRING" for c in cols)

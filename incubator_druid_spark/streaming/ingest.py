@@ -33,7 +33,8 @@ from pyspark.sql import functions as F
 from incubator_druid_spark.catalog import Catalog, TIME_COLUMN
 from incubator_druid_spark.model.granularity import parse_granularity
 from incubator_druid_spark.sources.ingest import apply_data_schema
-from incubator_druid_spark.timeline import BUCKET, bucket_key, write_meta
+from incubator_druid_spark.timeline import (BUCKET, bucket_key, write_meta,
+                                            written_schema)
 
 
 def build_stream_source(spark: SparkSession, io_config: dict,
@@ -194,13 +195,16 @@ def compact(spark: SparkSession, streaming_path: str, table_path: str,
     # the Druid-default 5M rows (DynamicPartitionsSpec), and the within-file
     # time sort keeps parquet min/max stats tight for interval pruning.
     n = spark.sparkContext.defaultParallelism
-    (df.withColumn(BUCKET, bucket_key(parse_granularity(segment_granularity)))
-       .repartitionByRange(n, F.col(BUCKET), F.col(TIME_COLUMN))
-       .sortWithinPartitions(BUCKET, TIME_COLUMN)
-       .write.mode("overwrite").option("maxRecordsPerFile", max_rows_per_segment)
-       .partitionBy(BUCKET).parquet(table_path))
-    # the layout's granularity, and the rollup facts segmentMetadata reports
+    out = (df.withColumn(BUCKET,
+                         bucket_key(parse_granularity(segment_granularity)))
+             .repartitionByRange(n, F.col(BUCKET), F.col(TIME_COLUMN))
+             .sortWithinPartitions(BUCKET, TIME_COLUMN))
+    (out.write.mode("overwrite").option("maxRecordsPerFile", max_rows_per_segment)
+        .partitionBy(BUCKET).parquet(table_path))
+    # the layout's granularity, the rollup facts segmentMetadata reports and
+    # the schema written
     write_meta(table_path, {
         "segmentGranularity": segment_granularity,
         "rollup": bool(query_granularity and metrics) or None,
-        "queryGranularity": query_granularity, "aggregators": metrics})
+        "queryGranularity": query_granularity, "aggregators": metrics,
+        "schema": written_schema(out)})

@@ -5,9 +5,10 @@ Batch ingest and compaction write a parquet directory partitioned by
 ``__bucket``, each row's segment start (__time floored to the
 segmentGranularity) as UTC yyyy-MM-dd'T'HH whatever the session zone, so key
 order is time order; the ``_druid_meta.json`` sidecar beside it records the
-segment granularity.  A listed segment is [start, next bucket of that
-granularity): queries prune partitions by key range, and the timeline lists
-segments without reading a row.  A ``__bucket`` table with no recorded
+segment granularity and the schema written, which the catalog reads the
+table with instead of inferring it from the files.  A listed segment is
+[start, next bucket of that granularity): queries prune partitions by key
+range, and the timeline lists segments without reading a row.  A ``__bucket`` table with no recorded
 granularity is scanned like a plain table: no pruning, and its segments are
 the UTC days holding rows.
 
@@ -34,6 +35,7 @@ from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from incubator_druid_spark.catalog import TIME_COLUMN
 from incubator_druid_spark.model.granularity import Granularity, parse_granularity
@@ -54,18 +56,45 @@ def bucket_key(gran: Granularity) -> Column:
     return F.concat(day.cast("string"), F.lit("T"), F.lpad(hour, 2, "0"))
 
 
+def written_schema(df: DataFrame) -> dict:
+    """The schema Spark infers for the table ``df`` writes partitioned by
+    __bucket: the data columns made nullable, as a file read makes them,
+    then the key as the string partition discovery infers."""
+    data = [f for f in df.schema.jsonValue()["fields"] if f["name"] != BUCKET]
+    return _nullable({"type": "struct", "fields": data + [
+        {"name": BUCKET, "type": "string", "nullable": True, "metadata": {}}]})
+
+
+def _nullable(t):
+    if isinstance(t, dict):
+        return {k: True if k in ("nullable", "containsNull",
+                                 "valueContainsNull") else _nullable(v)
+                for k, v in t.items()}
+    return [_nullable(x) for x in t] if isinstance(t, list) else t
+
+
 def write_meta(path: str, meta: dict, append: bool = False) -> None:
     """Write the sidecar beside the partitions of a table just written.  An
     append of another segment granularity leaves none recorded: keys of two
-    granularities are scanned like a plain table."""
-    old = _sidecar(path) if append else None
-    if old and old.get("segmentGranularity") != meta["segmentGranularity"]:
-        meta = {**meta, "segmentGranularity": None}
+    granularities are scanned like a plain table.  An append keeps the
+    recorded schema only where it writes the same one."""
+    if append:
+        old = _sidecar(path) or {}
+        if old and old.get("segmentGranularity") != meta["segmentGranularity"]:
+            meta = {**meta, "segmentGranularity": None}
+        if old.get("schema") != meta.get("schema"):
+            meta = {**meta, "schema": None}
     try:
         with open(os.path.join(path, META_FILE), "w") as fh:
             json.dump(meta, fh)
     except OSError:
         pass  # non-local FS (s3/hdfs): the table is scanned like a plain one
+
+
+def recorded_schema(path: str) -> StructType | None:
+    """The schema the sidecar at ``path`` records for the table, or None."""
+    schema = (_sidecar(path) or {}).get("schema")
+    return StructType.fromJson(schema) if schema else None
 
 
 def read_meta(catalog, datasource) -> dict | None:

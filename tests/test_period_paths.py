@@ -467,3 +467,27 @@ def test_date_trunc_floors_in_the_sql_time_zone(spark):
     with pytest.raises(ValueError, match="cannot truncate"):
         _sql_column(spark, "DATE_TRUNC('fortnight', timestamp_millis(ms))",
                     [t])
+
+
+@pytest.mark.parametrize("alias, region", [("+05:30", "Asia/Kolkata"),
+                                           ("PST", LA)])
+def test_offset_and_short_zone_ids_zero_fill(spark, catalog, alias, region):
+    """A fixed offset and a short zone id name the zone Spark resolves them
+    to, in the zero-filled spine as in the bucketing text: a filtered PT1H
+    timeseries answers as under the region id."""
+    from incubator_druid_spark.api import native_query
+
+    def answer(zone):
+        return native_query({
+            "queryType": "timeseries", "dataSource": "events",
+            "granularity": {"type": "period", "period": "PT1H",
+                            "timeZone": zone},
+            "intervals": ["2024-01-02T00:00:00Z/2024-01-03T00:00:00Z"],
+            "filter": {"type": "selector", "dimension": "event_type",
+                       "value": "click"},
+            "aggregations": [{"type": "count", "name": "n"}]},
+            spark, catalog)
+
+    expected = answer(region)
+    assert len(expected) >= 24 and sum(r["result"]["n"] for r in expected)
+    assert answer(alias) == expected
