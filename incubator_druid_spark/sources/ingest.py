@@ -393,16 +393,17 @@ def ingest(spark: SparkSession, spec: dict, catalog: Catalog,
                       .sortWithinPartitions(BUCKET, *dims))
     writer = (out.write.mode(mode).option("maxRecordsPerFile", max_rows)
               .partitionBy(BUCKET))
-    managed = kind == "hashed" and pspec.get("partitionDimensions")
-    if managed:
+    if kind == "hashed" and pspec.get("partitionDimensions"):
         dims = pspec["partitionDimensions"]
         spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
         (writer.bucketBy(int(pspec.get("numShards", 8)), *dims)
             .sortBy(*dims)
             .option("path", path)
             .saveAsTable(name))
+        catalog.register(name, path, fmt="managed")
     else:
         writer.parquet(path)
+        catalog.register(name, path)
     # the ingest-spec facts segmentMetadata reports, the segment
     # granularity the layout was written with and the schema written — the
     # analogue of the reference's per-segment metadata.drd
@@ -412,7 +413,6 @@ def ingest(spark: SparkSession, spec: dict, catalog: Catalog,
                       "aggregators": ds.get("metricsSpec") or [],
                       "schema": written_schema(out)},
                append=mode == "append")
-    catalog.register(name, path, fmt="managed" if managed else "parquet")
     return path
 
 
