@@ -205,9 +205,11 @@ def _tzinfo(tz: str):
         except (Py4JJavaError, CapturedException):
             pass  # unknown to Spark: let zoneinfo report it
     zone = zone or _SHORT_IDS.get(tz, tz)
+    if zone == "Z":
+        return timezone.utc
     fixed = _FIXED_RE.fullmatch(zone)
-    if zone == "Z" or fixed:
-        sign, h, m, sec = fixed.groups() if fixed else ("+", 0, 0, 0)
+    if fixed:
+        sign, h, m, sec = fixed.groups()
         return timezone((-1 if sign == "-" else 1) * timedelta(
             hours=int(h), minutes=int(m or 0), seconds=int(sec or 0)))
     return ZoneInfo(zone)
