@@ -17,8 +17,9 @@ files or an empty directory (it never reads a mix of versions).
 An ingest does not rediscover what it knows.  A JSON input whose spec names
 every column it keeps (declared dimensions and plain numeric metrics, no
 transforms or flattening) is read with those columns as strings, not with an
-inferred schema, as Druid parses through the spec's InputRowSchema.  An input
-of one split rolls up inside its own task, with no exchange.  The sidecar
+inferred schema, as Druid parses through the spec's InputRowSchema; the
+write's own job checks that inference would have typed the same columns.  An
+input of one split rolls up inside its own task, with no exchange.  The sidecar
 records the schema written, so the catalog reads the table without a parquet
 schema job.
 
@@ -43,10 +44,11 @@ Spec shape accepted (the Druid ioConfig/dataSchema fields that matter):
 
 from __future__ import annotations
 
+import glob
 import os
 import re
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from incubator_druid_spark.catalog import Catalog, TIME_COLUMN
@@ -241,10 +243,6 @@ def apply_data_schema(df: DataFrame, data_schema: dict) -> DataFrame:
         # metric columns (each row is its own group) — the aggregator's
         # input value under its OUTPUT name, count → 1 per row.  Dropping
         # them would make later queries over the metric read nothing.
-        casts = {"longSum": "long", "longMin": "long", "longMax": "long",
-                 "doubleSum": "double", "doubleMin": "double",
-                 "doubleMax": "double", "floatSum": "float",
-                 "floatMin": "float", "floatMax": "float"}
         mcols = []
         for m in metrics:
             mname = m.get("name")
@@ -256,7 +254,7 @@ def apply_data_schema(df: DataFrame, data_schema: dict) -> DataFrame:
             src = m.get("fieldName")
             if src is None or src not in df.columns:
                 continue
-            typ = casts.get(m.get("type"))
+            typ = _METRIC_CASTS.get(m.get("type"))
             col = lenient_cast(F.col(src), typ) if typ else F.col(src)
             mcols.append(col.alias(mname))
         df = df.select(TIME_COLUMN, *[n for n in names if n in df.columns],
@@ -265,6 +263,14 @@ def apply_data_schema(df: DataFrame, data_schema: dict) -> DataFrame:
                          and metrics == []],
                        *mcols)
     return df
+
+
+# the metrics whose input goes through a lenient numeric cast, by the type
+# the cast gives
+_METRIC_CASTS = {"longSum": "long", "longMin": "long", "longMax": "long",
+                 "doubleSum": "double", "doubleMin": "double",
+                 "doubleMax": "double", "floatSum": "float",
+                 "floatMin": "float", "floatMax": "float"}
 
 
 def _dim_name(d) -> str:
@@ -338,16 +344,36 @@ def ingest(spark: SparkSession, spec: dict, catalog: Catalog,
       parquet file then covers a tight dimension range, so min/max row-group
       stats prune scans on that dimension the way Druid's broker prunes
       range shard specs.
+
+    A JSON input read with the spec's columns (``_json_read_schema``) is
+    checked in the write's own job: where a dimension value would have been
+    typed otherwise by inference (an array, an object or a boolean) or a
+    stored column holds no value at all, the input is ingested again with
+    an inferred read, so the table is the one inference writes.
     """
+    schema = _json_read_schema(spec)
+    if schema is not None:
+        check = Observation()
+        path = _ingest(spark, spec, catalog, base_dir, schema, check)
+        if check.get["typed_as_inferred"]:
+            return path
+    return _ingest(spark, spec, catalog, base_dir, None, None)
+
+
+def _ingest(spark: SparkSession, spec: dict, catalog: Catalog,
+            base_dir: str, schema: str | None,
+            check: Observation | None) -> str:
     ds = spec["dataSchema"]
     name = ds["dataSource"]
-    df = read_input(spark, spec.get("ioConfig", {}), _json_read_schema(spec))
-    if df._jdf.queryExecution().executedPlan().execute() \
-            .getNumPartitions() == 1:
+    df = read_input(spark, spec.get("ioConfig", {}), schema)
+    if _one_split(spark, spec.get("ioConfig", {})):
         # an input of one split is one partition: the rollup aggregates
         # inside the scan's task and the write follows in the same job
         df = df.coalesce(1)
     df = apply_data_schema(df, ds)
+    if check is not None:
+        dims = (ds.get("dimensionsSpec") or {}).get("dimensions") or []
+        df = df.observe(check, _typed_as_inferred(df, map(_dim_name, dims)))
 
     gspec = ds.get("granularitySpec") or {}
     seg_gran = gspec.get("segmentGranularity", "day")
@@ -416,10 +442,47 @@ def ingest(spark: SparkSession, spec: dict, catalog: Catalog,
     return path
 
 
-# the metrics whose input goes through a lenient numeric cast, so reading
-# their field as a string stores what an inferred number does
-_CAST_METRICS = {"count", "longSum", "longMin", "longMax", "doubleSum",
-                 "doubleMin", "doubleMax", "floatSum", "floatMin", "floatMax"}
+# the file formats Spark reads by splits of a file scan
+_FILE_SCANS = {"json", "csv", "tsv", "delimited", "regex", "parquet", "orc"}
+# suffixes of the Hadoop codecs: a compressed file is one task's whole
+_CODECS = (".gz", ".bz2", ".deflate", ".lz4", ".snappy", ".zst", ".xz",
+           ".br", ".lzo")
+
+
+def _one_split(spark: SparkSession, io_config: dict) -> bool:
+    """Whether the input is one split, from its listing alone: a single
+    local, uncompressed file of a file-scan format, no larger than the open
+    cost Spark charges a file, the least split size it cuts (or the largest
+    partition, if that is less)."""
+    fmt = (io_config.get("inputFormat") or {}).get("type", "json")
+    src = io_config.get("inputSource") or {}
+    if fmt not in _FILE_SCANS or src.get("type", "local") != "local":
+        return False
+    paths = _source_paths(src)
+    files = glob.glob(paths) if isinstance(paths, str) else list(paths)
+    if (len(files) != 1 or not os.path.isfile(files[0])
+            or files[0].lower().endswith(_CODECS)):
+        return False
+    conf = spark._jsparkSession.sessionState().conf()
+    return os.path.getsize(files[0]) <= min(conf.filesOpenCostInBytes(),
+                                            conf.filesMaxPartitionBytes())
+
+
+def _typed_as_inferred(df: DataFrame, dims) -> Column:
+    """Whether a string read stores what an inferred read stores, judged on
+    the rows written (a rollup keeps every dimension value as a key): each
+    column holds a value (inference drops a field absent from every row)
+    and no dimension value is the text of an array, an object or a boolean,
+    which inference types as such (an array of strings is a multi-value
+    dimension)."""
+    ok = F.lit(True)
+    for c in df.columns:
+        ok = ok & (F.count(_field(c)) > 0)
+    for c in map(_field, dims):
+        typed = (c.startswith("[") | c.startswith("{")
+                 | c.isin("true", "false"))
+        ok = ok & (F.count_if(typed) == 0)
+    return ok.alias("typed_as_inferred")
 
 
 def _json_read_schema(spec: dict) -> str | None:
@@ -428,10 +491,14 @@ def _json_read_schema(spec: dict) -> str | None:
     fieldName, all STRING.  The reader keeps a number's text, so the
     timestamp parsing and the metrics' lenient casts see the digits an
     inferred read gives; a dimension given by name is a string dimension
-    (Druid's StringDimensionSchema), whatever its JSON values.  None, so
+    (Druid's StringDimensionSchema), so a JSON number under it is stored as
+    its text (``ingest`` reads again, inferring, where an array, an object
+    or a boolean turns up, or a column holds no value).  None, so
     the reader infers, for a spec with no dimensions or no metrics (it keeps
     every input column), transforms, a flattenSpec, typed or multi-value
-    dimensions, other metrics, or a Z-order layout (numeric keys)."""
+    dimensions, other metrics, a Z-order layout (numeric keys) or an append
+    (a read typed otherwise than inference is ingested again, which an
+    append cannot undo)."""
     ds = spec["dataSchema"]
     fmt = (spec.get("ioConfig") or {}).get("inputFormat") or {}
     tf = ds.get("transformSpec") or {}
@@ -441,10 +508,11 @@ def _json_read_schema(spec: dict) -> str | None:
     if (fmt.get("type", "json") != "json" or fmt.get("flattenSpec")
             or tf.get("transforms") or tf.get("filter") is not None
             or not dims or not metrics or pspec.get("type") == "zorder"
+            or (spec.get("ioConfig") or {}).get("appendToExisting")
             or any(isinstance(d, dict)
                    and (d.get("type", "string") != "string"
                         or "multiValueHandling" in d) for d in dims)
-            or any(m.get("type") not in _CAST_METRICS
+            or any(m.get("type") not in {"count", *_METRIC_CASTS}
                    or m.get("expression") is not None
                    or m.get("type") != "count" and not m.get("fieldName")
                    for m in metrics)):

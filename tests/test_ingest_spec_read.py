@@ -11,7 +11,9 @@ from pyspark.sql.types import StructType
 
 from conftest import rows
 from incubator_druid_spark.catalog import Catalog
-from incubator_druid_spark.sources.ingest import (_json_read_schema, ingest,
+from incubator_druid_spark import api
+from incubator_druid_spark.sources.ingest import (_json_read_schema,
+                                                  _one_split, ingest,
                                                   read_input)
 from incubator_druid_spark.streaming.ingest import compact
 from incubator_druid_spark.timeline import read_meta
@@ -212,6 +214,93 @@ def test_numeric_value_under_a_plain_dimension_is_a_string(spark, tmp_path):
     assert rows(table, "site", "cnt") == [("12.5", 1), ("5", 1)]
 
 
+_TAGS = [{"ts": "2024-01-01T00:00:00Z", "tags": ["a", "b"], "n": 1},
+         {"ts": "2024-01-01T00:10:00Z", "tags": ["b"], "n": 2},
+         {"ts": "2024-01-01T00:20:00Z", "tags": ["a", "b"], "n": 4}]
+
+
+def test_array_dimension_stays_multi_value(spark, tmp_path):
+    """A JSON array under a plain dimension name is stored as the
+    array<string> inference gave, so a selector filter and MV_CONTAINS match
+    an element (the values an inferred read answers)."""
+    src = _write(tmp_path / "in.json", _TAGS)
+    cat = Catalog(spark)
+    ingest(spark, _spec("mv", [src], dims=("tags",), metrics=_METRICS[:2]),
+           cat, str(tmp_path / "seg"))
+    assert dict(cat.table("mv").dtypes)["tags"] == "array<string>"
+    q = {"queryType": "timeseries", "dataSource": "mv", "granularity": "all",
+         "intervals": ["2024-01-01/2024-01-02"],
+         "filter": {"type": "selector", "dimension": "tags", "value": "a"},
+         "aggregations": [{"type": "longSum", "name": "n", "fieldName": "n"}]}
+    assert api.native_query(q, spark, cat)[0]["result"] == {"n": 5}
+    assert api.sql_query({"query": "SELECT SUM(n) AS s FROM mv "
+                                   "WHERE MV_CONTAINS(tags, 'a')"},
+                         spark, cat) == [{"s": 5}]
+
+
+_T0 = "2024-01-01T00:00:00Z"
+
+
+@pytest.mark.parametrize("lines, dims, rollup, expected", [
+    ([{"ts": _T0, "tags": ["a", "b"], "n": 1}, {"ts": _T0, "tags": "a", "n": 2}],
+     ("tags",), True, [("tags", "string", ['["a", "b"]', "a"])]),
+    ([{"ts": _T0, "tags": True, "n": 1}],
+     ("tags",), True, [("tags", "boolean", [True])]),
+    ([{"ts": _T0, "tags": {"k": 1}, "n": 1}],
+     ("tags",), True, [("tags", "struct<k:bigint>", [(1,)])]),
+    ([{"ts": _T0, "tags": "a", "n": 1}],
+     ("tags", "gone"), True, [("tags", "string", ["a"]), ("gone", None, [])]),
+    ([{"ts": _T0, "tags": "a"}],
+     ("tags",), False, [("tags", "string", ["a"]), ("n", None, [])]),
+    ([{"ts": _T0, "tags": "a", "n": True}],
+     ("tags",), True, [("n", "bigint", [1])]),
+], ids=["mixed_array", "boolean", "object", "absent_dimension",
+        "absent_metric_field", "boolean_metric_field"])
+def test_values_inference_types_otherwise_are_read_again(
+        spark, tmp_path, lines, dims, rollup, expected):
+    """Where a string read would store otherwise than inference (an array
+    beside scalars keeps its JSON text either way, a boolean, an object, a
+    declared column absent from every row, a boolean metric input), the
+    table is the inferred read's: these types and values are the ones an
+    inferred read stores."""
+    src = _write(tmp_path / "in.json", lines)
+    cat = Catalog(spark)
+    ingest(spark, _spec("t", [src], dims=dims, metrics=_METRICS[:2],
+                        rollup=rollup), cat, str(tmp_path / "seg"))
+    table = cat.table("t")
+    types = dict(table.dtypes)
+    for col, typ, values in expected:
+        assert types.get(col) == typ
+        if typ is not None:
+            assert sorted(rows(table, col), key=str) == \
+                [(v,) for v in values]
+    assert table.schema == spark.read.parquet(
+        str(tmp_path / "seg" / "t")).schema
+
+
+def test_one_split_is_known_from_the_listing(spark, tmp_path):
+    """Only one local, uncompressed file no larger than a file's open cost
+    (4 MB by default) is one split; a gzip file, a larger file and two files
+    keep their read's partitioning."""
+    small = _write(tmp_path / "small.json", _ROWS)
+    (tmp_path / "small.json.gz").write_bytes(b"")
+    with open(tmp_path / "large.json", "wb") as fh:
+        fh.truncate(5 << 20)
+
+    def one(source, fmt="json"):
+        return _one_split(spark, {"inputSource": source,
+                                  "inputFormat": {"type": fmt}})
+    assert one({"type": "local", "files": [small]})
+    assert one({"type": "local", "baseDir": str(tmp_path),
+                "filter": "small.json"})
+    assert not one({"type": "local", "files": [small + ".gz"]})
+    assert not one({"type": "local", "files": [str(tmp_path / "large.json")]})
+    assert not one({"type": "local", "files": [small, small]})
+    assert not one({"type": "local", "baseDir": str(tmp_path),
+                    "filter": "*.json"})
+    assert not one({"type": "local", "files": [small]}, fmt="protobuf")
+
+
 @pytest.mark.parametrize("section, change, reads_schema", [
     ("dataSchema", {}, True),
     ("dataSchema", {"metricsSpec": []}, False),
@@ -231,6 +320,7 @@ def test_numeric_value_under_a_plain_dimension_is_a_string(spark, tmp_path):
         {"type": "longSum", "name": "s", "expression": "n * 2"}]}, False),
     ("tuningConfig", {"partitionsSpec": {
         "type": "zorder", "partitionDimensions": ["n"]}}, False),
+    ("ioConfig", {"appendToExisting": True}, False),
 ])
 def test_which_specs_read_with_their_columns(section, change, reads_schema):
     """Only a spec naming every column it keeps, all read through string
