@@ -3,8 +3,16 @@
 Druid's equivalent is the segment-metadata-driven ``DruidSchema``
 (reference: sql/src/main/java/org/apache/druid/sql/calcite/schema/DruidSchema.java)
 plus the coordinator's datasource registry.  Here a datasource is simply a
-Parquet/Delta path (optionally time-partitioned) registered under a name; the
-schema comes from the files.
+Parquet/Delta path (optionally time-partitioned) registered under a name.
+
+``Catalog.table`` is the one resolver of a datasource version: it reads the
+``_druid_meta.json`` sidecar with the frame, reads a table that ingest or
+compaction wrote with the schema recorded there (other tables with the
+schema of their files), and reuses both while the spec and the path's
+staleness token hold.  Native queries, the SQL temp views
+(``sql.functions.register_views``), ``Catalog.schema`` and the sidecar
+lookups (``Catalog.meta``) all read that version, so they never disagree
+about which files a datasource holds.
 
 Every datasource exposes a canonical ``__time`` timestamp column (Druid's
 mandatory long-millis timestamp — reference:
@@ -49,45 +57,42 @@ class DatasourceSpec:
     options: dict[str, str] = field(default_factory=dict)
 
 
+@dataclass(frozen=True)
+class _Version:
+    """One resolved datasource version: its frame and the sidecar read with
+    it.  ``token`` is None where the version is not reused: a managed table
+    (spark.table must re-bind after a saveAsTable overwrite) or a path the
+    local file system cannot stat."""
+    spec: DatasourceSpec
+    token: tuple | None
+    frame: DataFrame
+    meta: dict | None
+
+
 class Catalog:
     """Registry of named datasources, resolved lazily to DataFrames."""
-
-    _SERIAL = iter(range(1, 1 << 62))
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self._specs: dict[str, DatasourceSpec] = {}
         self._lookups: dict[str, dict[str, str]] = {}
-        # identity + mutation counter so per-session caches (temp-view
-        # registration, schema lookups) can detect "same catalog, unchanged"
-        self._serial = next(Catalog._SERIAL)
-        self._version = 0
-        self._schema_cache: dict[str, object] = {}
-        # resolved-DataFrame cache: a DataFrame is an immutable plan handle,
-        # but resolving one costs a ~90 ms reader/footer JVM roundtrip —
-        # register_views + the SQL rewriters' schema scans touch every
-        # table, so an uncached catalog pays ~2 s on the first druid_sql.
-        # Managed (session-catalog) tables stay uncached: spark.table must
-        # re-bind after a saveAsTable overwrite.
-        self._df_cache: dict[str, DataFrame] = {}
-
-    def version(self) -> tuple[int, int]:
-        """(identity, mutation-count) — changes whenever datasources do."""
-        src = getattr(self, "_parent", None) or self
-        return (self._serial, src._version)
+        # name -> the version table() resolved last.  Resolving a frame
+        # costs a ~90 ms reader/footer JVM roundtrip, so a version is reused
+        # while its (spec, path token) holds: a re-registration or a rewrite
+        # of the files changes the key, and nothing needs invalidating.
+        self._versions: dict[str, _Version] = {}
 
     def for_session(self, spark: SparkSession) -> "Catalog":
         """A read view of this catalog bound to ANOTHER SparkSession —
         same datasource specs and lookups (shared by reference, so later
-        registrations on the parent are visible), but session-local
-        DataFrame/schema caches since DataFrames bind to their session.
-        Used by the SQL layer to execute the Druid dialect in a non-ANSI
-        session clone while the host session stays untouched.
+        registrations on the parent are visible), but its own resolved
+        frames, since DataFrames bind to their session.  Used by the SQL
+        layer to execute the Druid dialect in a non-ANSI session clone
+        while the host session stays untouched.
 
         Memoized per target session (on the parent): druid_sql calls this
-        once per query, and a fresh view object per call would start with
-        cold DataFrame/schema caches — re-resolving every table's reader
-        footer (~90 ms each) on every query."""
+        once per query, and a fresh view object per call would re-resolve
+        every table's reader footer (~90 ms each) on every query."""
         parent = getattr(self, "_parent", None) or self
         cache = getattr(parent, "_session_views", None)
         if cache is None:
@@ -98,30 +103,14 @@ class Catalog:
             view = Catalog(spark)
             view._specs = self._specs
             view._lookups = self._lookups
-            view._serial = self._serial
             view._parent = parent
             cache[spark] = view
         return view
-
-    def _invalidate(self, name: str) -> None:
-        """Drop per-session caches for a (re-)registered datasource — on
-        this catalog, its parent, and every memoized session view (they
-        share _specs by reference, so their DataFrame/schema caches must
-        not outlive the spec they were resolved from)."""
-        parent = getattr(self, "_parent", None) or self
-        parent._version += 1
-        peers = [self, parent]
-        peers.extend(getattr(parent, "_session_views",
-                             {}).values())
-        for cat in peers:
-            cat._schema_cache.pop(name, None)
-            cat._df_cache.pop(name, None)
 
     # -- datasources -------------------------------------------------------
     def register(self, name: str, path: str, fmt: str = "parquet",
                  time_column: str | None = None, **options: str) -> None:
         self._specs[name] = DatasourceSpec(name, path, fmt, time_column, options)
-        self._invalidate(name)
 
     def register_dir(self, sf_dir: str) -> "Catalog":
         """Register every ``<table>.parquet`` under a testdata dir."""
@@ -132,17 +121,28 @@ class Catalog:
         return self
 
     def table(self, name: str) -> DataFrame:
+        """The frame of the datasource's current version: the one resolver
+        that the native translator, the SQL views and the schema and
+        sidecar lookups all read."""
         if name not in self._specs:
             raise KeyError(f"unknown datasource: {name!r} (registered: {sorted(self._specs)})")
         spec = self._specs[name]
+        token = None if spec.fmt == "managed" else self._path_token(spec.path)
+        held = self._versions.get(name)
+        if token is not None and held is not None \
+                and held.spec == spec and held.token == token:
+            return held.frame
+        from .timeline import read_sidecar
+        meta = read_sidecar(spec.path)
+        held = self._versions[name] = _Version(
+            spec, token, self._load(spec, token, meta), meta)
+        return held.frame
+
+    def _load(self, spec: DatasourceSpec, token, meta: dict | None) -> DataFrame:
         if spec.fmt == "managed":
             # a session-catalog table (saveAsTable) at spec.path: bucketed
             # layouts keep their bucketing metadata only through spark.table
-            return self.spark.table(name)
-        token = self._path_token(spec.path)
-        cached = self._df_cache.get(name)
-        if cached is not None and token is not None and cached[0] == token:
-            return cached[1]
+            return self.spark.table(spec.name)
         if str(spec.options.get("schemaEvolution", "")).lower() in (
                 "1", "true", "yes"):
             df = self._read_evolving(spec)
@@ -150,13 +150,11 @@ class Catalog:
             reader = self.spark.read.format(spec.fmt)
             for k, v in spec.options.items():
                 reader = reader.option(k, v)
-            if token is not None:
+            if token is not None and (meta or {}).get("schema"):
                 # a table written by ingest or compaction: the schema it
                 # recorded spares the parquet schema job
-                from .timeline import recorded_schema
-                recorded = recorded_schema(spec.path)
-                if recorded is not None:
-                    reader = reader.schema(recorded)
+                from pyspark.sql.types import StructType
+                reader = reader.schema(StructType.fromJson(meta["schema"]))
             df = reader.load(spec.path)
         if spec.time_column and spec.time_column in df.columns and TIME_COLUMN not in df.columns:
             # Alias (not rename): queries may address either name; Catalyst
@@ -175,7 +173,6 @@ class Catalog:
             from .timeline import one_row_group
             if one_row_group(df):
                 df = df.coalesce(1)
-            self._df_cache[name] = (token, df)
         return df
 
     def _read_evolving(self, spec: "DatasourceSpec") -> DataFrame:
@@ -261,10 +258,10 @@ class Catalog:
     def _path_token(path: str):
         """Cheap staleness token for a local source path: a resolved
         DataFrame pins its file listing, so a rewrite of the same path must
-        invalidate the cache.  Spark refreshes the top-level ``_SUCCESS``
+        change the token.  Spark refreshes the top-level ``_SUCCESS``
         marker on every write job (including dynamic partition overwrite,
         whose leaf-dir changes leave the root mtime alone), and appends/
-        deletes touch the root mtime; non-local URIs skip caching."""
+        deletes touch the root mtime; a non-local URI has no token."""
         try:
             st = os.stat(path)
         except OSError:
@@ -293,13 +290,17 @@ class Catalog:
         return (st.st_mtime_ns, success, n_children, child_mtime)
 
     def schema(self, name: str):
-        """Cached schema of a datasource — metadata-only callers (SQL
-        rewriters scanning for MVD columns) must not pay a reader-resolution
-        JVM roundtrip per query.  Invalidated on (re-)register."""
-        s = self._schema_cache.get(name)
-        if s is None:
-            s = self._schema_cache[name] = self.table(name).schema
-        return s
+        """The schema of the frame ``table(name)`` resolves."""
+        return self.table(name).schema
+
+    def meta(self, frame: DataFrame) -> dict | None:
+        """The ``_druid_meta.json`` sidecar read with ``frame``, if frame is
+        a datasource version this catalog resolved last; else None (a
+        frame derived from one, or a join's, has none)."""
+        for held in self._versions.values():
+            if held.frame is frame:
+                return held.meta
+        return None
 
     def __contains__(self, name: str) -> bool:
         return name in self._specs

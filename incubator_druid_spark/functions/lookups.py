@@ -25,7 +25,6 @@ reach 10^5-10^7 keys — LookupExtractor.java is a node-resident map):
 from __future__ import annotations
 
 import itertools
-import os
 import threading
 
 from pyspark.sql import Column, DataFrame
@@ -35,8 +34,7 @@ _LOOKUPS: dict[str, dict[str, str]] = {}
 
 #: above this many keys, lookup application compiles to a broadcast
 #: left-join instead of a literal CreateMap
-LOOKUP_JOIN_THRESHOLD = int(
-    os.environ.get("SPARK_GRAFT_LOOKUP_JOIN_THRESHOLD", "10000"))
+LOOKUP_JOIN_THRESHOLD = 10000
 
 # pending deferred joins, scoped per THREAD so concurrent translate() calls
 # can't cross-contaminate (one thread's clear/flush must not touch another

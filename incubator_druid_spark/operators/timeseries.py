@@ -35,6 +35,7 @@ from incubator_druid_spark.model.granularity import parse_granularity
 from incubator_druid_spark.model.intervals import parse_intervals
 from incubator_druid_spark.operators.aggregations import (compile_aggregations,
                                                           compile_post_aggregations)
+from incubator_druid_spark.plans.datasource import resolve_datasource
 from incubator_druid_spark.plans.translator import prepare_frame
 from incubator_druid_spark.session import local_frame
 from incubator_druid_spark.timeline import (DAY_MS, segment_granularity,
@@ -47,7 +48,8 @@ def run(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
     keyed = analyze_keyed_aods(query)
     if keyed is None:
         query = rewrite_sketch_query(query)
-    df = prepare_frame(query, spark, catalog)
+    src = resolve_datasource(query["dataSource"], spark, catalog)
+    df = prepare_frame(query, spark, catalog, src)
     gran = parse_granularity(query.get("granularity", "all"))
     # within the spine cap: a granular result has at most that many rows,
     # and zero-fill can enumerate its buckets in Python
@@ -89,7 +91,7 @@ def run(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
             df, [F.expr(gran.floor_sql(TIME_COLUMN)).alias(TIME_COLUMN)],
             aggs, folds)
         if bounded:
-            out = _zero_fill(out, query, gran, spark, catalog)
+            out = _zero_fill(out, query, gran, spark, catalog, src)
 
     # TimeseriesQuery.CTX_TIMESTAMP_RESULT_FIELD — materialize the bucket
     # timestamp as a LONG millis result column (post-aggs may reference it;
@@ -131,14 +133,13 @@ def _sorted(out: DataFrame, query: dict, bounded: bool) -> DataFrame:
 
 
 def _zero_fill(out: DataFrame, query: dict, gran, spark: SparkSession,
-               catalog) -> DataFrame:
+               catalog, src: DataFrame) -> DataFrame:
     context = query.get("context") or {}
     if context.get("skipEmptyBuckets"):
         return out
     p = gran.period
     if query.get("filter") is None and (p.is_calendar or p.millis >= DAY_MS) \
-            and utc_day_segments(segment_granularity(catalog,
-                                                     query["dataSource"])):
+            and utc_day_segments(segment_granularity(catalog, src)):
         # no dim filter, and every segment lies in a UTC day holding rows:
         # every covered day-or-coarser bucket is already present
         return out
@@ -147,10 +148,8 @@ def _zero_fill(out: DataFrame, query: dict, gran, spark: SparkSession,
     # months, not 600; testTimeseriesQueryZeroFilling: all hours of a day
     # segment up to maxTime), whatever the filter matches
     # (testTimeseriesWithNonExistentFilter).
-    from incubator_druid_spark.plans.datasource import resolve_datasource
     ivs = parse_intervals(query.get("intervals"))
-    keep = timeline(resolve_datasource(query["dataSource"], spark, catalog),
-                    ivs).buckets(gran, ivs)
+    keep = timeline(src, ivs).buckets(gran, ivs)
     spine = local_frame(spark, [(m,) for m in keep],
                         f"{TIME_COLUMN} timestamp")
     # the spine is one partition: over a one-partition source the join

@@ -50,13 +50,16 @@ def _legacy_null_frame(df: DataFrame) -> DataFrame:
     return df.select(*cols)
 
 
-def prepare_frame(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
-    """dataSource → virtualColumns → intervals → filter, shared by all types."""
-    df = resolve_datasource(query["dataSource"], spark, catalog)
+def prepare_frame(query: dict, spark: SparkSession, catalog: Catalog,
+                  src: DataFrame | None = None) -> DataFrame:
+    """dataSource → virtualColumns → intervals → filter, shared by all
+    types; ``src`` is the resolved dataSource frame, if the caller holds it."""
+    df = src if src is not None else resolve_datasource(query["dataSource"],
+                                                        spark, catalog)
     ivs = parse_intervals(query.get("intervals"))
     # an ingested table's recorded segments prune its partitions, unless a
     # virtual column replaces the __time they were bucketed by
-    seg = segment_granularity(catalog, query["dataSource"]) if ivs and all(
+    seg = segment_granularity(catalog, df) if ivs and all(
         vc.get("name") != TIME_COLUMN
         for vc in query.get("virtualColumns") or []) else None
 

@@ -112,15 +112,9 @@ _FUNCTIONS: list[str] = [
        RETURNS BOOLEAN RETURN instr(h, n) > 0""",
     """CREATE OR REPLACE TEMPORARY FUNCTION ICONTAINS_STRING(h STRING, n STRING)
        RETURNS BOOLEAN RETURN instr(lower(h), lower(n)) > 0""",
-    """CREATE OR REPLACE TEMPORARY FUNCTION REGEXP_LIKE(s STRING, p STRING)
-       RETURNS BOOLEAN RETURN s RLIKE p""",
     # -- math / misc
     """CREATE OR REPLACE TEMPORARY FUNCTION SAFE_DIVIDE(a DOUBLE, b DOUBLE)
        RETURNS DOUBLE RETURN CASE WHEN b = 0 THEN NULL ELSE a / b END""",
-    # DivOperatorConversion → Function.java Div: Java long division,
-    # truncation toward zero (floor is wrong for negative quotients)
-    """CREATE OR REPLACE TEMPORARY FUNCTION DIV(a BIGINT, b BIGINT)
-       RETURNS BIGINT RETURN a div b""",
     """CREATE OR REPLACE TEMPORARY FUNCTION BITWISE_AND(a BIGINT, b BIGINT)
        RETURNS BIGINT RETURN a & b""",
     """CREATE OR REPLACE TEMPORARY FUNCTION BITWISE_OR(a BIGINT, b BIGINT)
@@ -187,11 +181,12 @@ _FUNCTIONS: list[str] = [
 
 import weakref
 
-# per-SparkSession registration caches: temp functions and temp views are
+# per-SparkSession registration state: temp functions and temp views are
 # session-scoped and re-registering ~50 of them per druid_sql call costs
 # ~0.7 s of py4j roundtrips — a 30-50% overhead on short queries.
 _FN_STATE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-_VIEW_STATE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+# session -> {datasource name: the frame its temp view holds}
+_VIEW_FRAMES: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 # name → CREATE statement; the ~45 CREATEs cost ~2.4 s of py4j roundtrips
 # together (Spark resolves each body at CREATE), so registration is lazy:
@@ -205,8 +200,9 @@ _FN_BY_NAME: dict[str, str] = {
 def register_druid_sql(spark: SparkSession, sql: str | None = None) -> None:
     """Register the Druid-specific SQL function names that ``sql``
     references (every name when ``sql`` is None) — idempotent, cached per
-    session.  Names that Spark already ships as builtins with compatible
-    semantics (REGEXP_LIKE, DIV, …) are skipped — the builtin wins.  The
+    session.  Druid names that Spark ships as builtins with the same
+    semantics (REGEXP_LIKE, DIV) have no body here; a name the session
+    already binds to a non-SQL function keeps that binding.  The
     LOOKUP function body inlines the registered lookup maps, so it
     re-registers whenever the lookup registry changes."""
     from pyspark.errors.exceptions.captured import AnalysisException
@@ -359,19 +355,23 @@ def _register_lookup_fn(spark: SparkSession) -> None:
                   RETURNS STRING RETURN {body}""")
 
 
-def register_views(catalog: Catalog) -> None:
-    """Expose every catalog datasource as a temp view for spark.sql.
-    Cached per (session, catalog identity, catalog mutation count): the hot
-    path — repeated queries against one unchanged catalog — skips the
-    per-table reader resolution entirely.  Switching between catalogs on
-    one session re-registers (views share the session namespace)."""
-    key = catalog.version() if hasattr(catalog, "version") else None
-    if key is not None and _VIEW_STATE.get(catalog.spark) == key:
-        return
-    for name in catalog.names():
-        catalog.table(name).createOrReplaceTempView(name)
-    if key is not None:
-        _VIEW_STATE[catalog.spark] = key
+def register_views(catalog: Catalog, names: list[str] | None = None) -> None:
+    """Expose catalog datasources (``names``, else every one) as temp views
+    of the catalog's session.  A view is replaced only when
+    ``Catalog.table`` resolves a different frame than the one it holds, so
+    the views go stale exactly when the catalog's frames do: a repeated
+    query over unchanged tables registers nothing, and a re-registration or
+    a rewrite of the files replaces the view on the next query that reads
+    it.  A table the catalog does not reuse (managed, or on a non-local
+    path) resolves a new frame each time, so its view is replaced on each
+    such query.  Switching catalogs on one session replaces the views too:
+    their frames differ."""
+    held = _VIEW_FRAMES.setdefault(catalog.spark, {})
+    for name in catalog.names() if names is None else names:
+        df = catalog.table(name)
+        if held.get(name) is not df:
+            df.createOrReplaceTempView(name)
+            held[name] = df
 
 
 def _druid_type(dt) -> str:
@@ -1241,47 +1241,6 @@ def _rewrite_date_trunc(sql: str) -> str:
     return _rewrite_calls(sql, "DATE_TRUNC", repl)
 
 
-_ARRAY_COLS_CACHE: dict[int, frozenset] = {}
-
-
-def _catalog_array_cols(catalog, sql: str | None = None) -> frozenset:
-    """Array-typed column names for the tables ``sql`` references (all
-    tables when sql is None) — lets the string-level ARRAY_CONTAINS/
-    ARRAY_OVERLAP rewrites dispatch non-literal second arguments by TYPE
-    like Druid's runtime does.  Scoping to referenced tables keeps a
-    scalar column in the queried table from picking up array rewrites
-    because an UNRELATED table has an array column of the same name.
-    The per-table scan is memoized per catalog instance (schemas are
-    immutable once registered)."""
-    if catalog is None:
-        return frozenset()
-    key = id(catalog)
-    cached = _ARRAY_COLS_CACHE.get(key)
-    names = catalog.names()
-    if cached is not None and cached[0] == names:
-        per_table = cached[1]
-    else:
-        from pyspark.sql import types as _T
-        per_table = {}
-        for t in names:
-            try:
-                per_table[t] = frozenset(
-                    f.name for f in catalog.schema(t).fields
-                    if isinstance(f.dataType, _T.ArrayType))
-            except Exception:  # pragma: no cover — unreadable source
-                per_table[t] = frozenset()
-        _ARRAY_COLS_CACHE[key] = (names, per_table)
-    if sql is not None:
-        _nonlit = []
-        _outside_literals(sql, lambda s: (_nonlit.append(s), s)[1])
-        nonlit_sql = " ".join(_nonlit)
-        return frozenset().union(*(
-            cols for t, cols in per_table.items()
-            if re.search(rf"(?i)\b{re.escape(t)}\b", nonlit_sql)),
-            frozenset())
-    return frozenset().union(*per_table.values(), frozenset())
-
-
 _NON_ANSI_CLONES: "weakref.WeakKeyDictionary" = None
 
 
@@ -1324,18 +1283,19 @@ def _view_identity(spark: SparkSession, name: str) -> int:
 
 
 def _referenced_views(names: list[str], sql: str | None) -> list[str]:
-    """The host temp views a query COULD reference: names appearing as a
-    word in the SQL's non-literal text (case-insensitive — the catalog
-    stores temp-view names lowercased).  Overmatching (a view name used
-    as a column alias) only costs an extra identity read; a table cannot
-    be referenced without its name appearing, so nothing is missed.
-    sql=None (defensive callers) checks everything."""
+    """The views or datasources among ``names`` a query COULD reference:
+    names appearing as a word in the SQL's non-literal text
+    (case-insensitive, as Spark resolves temp views).  Overmatching (a
+    view name used as a column alias) only costs an extra check; a table
+    cannot be referenced without its name appearing, so nothing is
+    missed.  sql=None (defensive callers) checks everything."""
     if sql is None or not names:
         return list(names)
     segs: list[str] = []
     _outside_literals(sql, lambda s: (segs.append(s), s)[1])
-    text = " ".join(segs).lower()
-    return [n for n in names if re.search(rf"\b{re.escape(n)}\b", text)]
+    text = " ".join(segs)
+    return [n for n in names
+            if re.search(rf"(?i)\b{re.escape(n)}\b", text)]
 
 
 # Spellings of the zero-offset zone Spark/JVM hosts commonly carry — a
@@ -1449,8 +1409,9 @@ def druid_sql(spark: SparkSession, sql: str, catalog: Catalog | None = None,
         if catalog is not None:
             catalog = catalog.for_session(spark)
     sql = _apply_current_timestamp(sql)
+    tables = [] if catalog is None else _referenced_views(catalog.names(), sql)
     if catalog is not None:
-        register_views(catalog)
+        register_views(catalog, tables)
         if re.search(r"(?i)\bINFORMATION_SCHEMA\s*\.|\bsys\s*\.", sql):
             register_metadata_views(spark, catalog)
     def _dotted_names(seg: str) -> str:
@@ -1560,7 +1521,25 @@ def druid_sql(spark: SparkSession, sql: str, catalog: Catalog | None = None,
     sql = _rewrite_date_trunc(sql)
     sql = _rewrite_time_tz(sql)
     sql = _rewrite_regexp_extract(sql)
-    sql = _rewrite_array_functions(sql, _catalog_array_cols(catalog, sql))
+    # the referenced tables' column types, read once per query from the
+    # schemas of the frames their views hold: array columns dispatch the
+    # non-literal ARRAY_CONTAINS/ARRAY_OVERLAP arguments by type, as Druid's
+    # runtime does; string arrays are MVDs; binaries are sketch state.  Only
+    # referenced tables: a scalar column in table A sharing a name with an
+    # MVD column in unreferenced table B must not pick up array rewrites.
+    array_cols, mvd_cols, bin_cols, ts_cols = set(), set(), set(), {"__time"}
+    from pyspark.sql import types as _T
+    for _t in tables:
+        for _f in catalog.schema(_t).fields:
+            if isinstance(_f.dataType, _T.ArrayType):
+                array_cols.add(_f.name)
+                if isinstance(_f.dataType.elementType, _T.StringType):
+                    mvd_cols.add(_f.name)
+            elif isinstance(_f.dataType, _T.BinaryType):
+                bin_cols.add(_f.name)
+            elif isinstance(_f.dataType, _T.TimestampType):
+                ts_cols.add(_f.name)
+    sql = _rewrite_array_functions(sql, frozenset(array_cols))
 
     # MVD-aware COUNT(DISTINCT col): Calcite exposes an MVD as VARCHAR and
     # plans a cardinality agg over its VALUES (CalciteQueryTest
@@ -1568,33 +1547,7 @@ def druid_sql(spark: SparkSession, sql: str, catalog: Catalog | None = None,
     # bare Spark count-distinct over the array column would count distinct
     # ARRAYS.  collect_set bounds state by distinct arrays, then
     # flatten+distinct counts the value universe; null elements drop.
-    ts_cols: set[str] = {"__time"}
     if catalog is not None:
-        from pyspark.sql import types as _T
-        mvd_cols: set[str] = set()
-        # Only tables the query references: a scalar string column in
-        # table A sharing a name with an MVD column in unreferenced table
-        # B must not pick up array rewrites.
-        _nonlit = []
-        _outside_literals(sql, lambda s: (_nonlit.append(s), s)[1])
-        _nonlit_sql = " ".join(_nonlit)
-        bin_cols: set[str] = set()
-        for _t in catalog.names():
-            if not re.search(rf"(?i)\b{re.escape(_t)}\b", _nonlit_sql):
-                continue
-            try:
-                for _f in catalog.schema(_t).fields:
-                    if (isinstance(_f.dataType, _T.ArrayType)
-                            and isinstance(_f.dataType.elementType,
-                                           _T.StringType)):
-                        mvd_cols.add(_f.name)
-                    elif isinstance(_f.dataType, _T.BinaryType):
-                        bin_cols.add(_f.name)
-                    elif isinstance(_f.dataType, _T.TimestampType):
-                        ts_cols.add(_f.name)
-            except Exception:  # pragma: no cover - unreadable table
-                pass
-
         def _mvd_filter_form(s, fname):
             """COUNT(DISTINCT <mvd>) FILTER (WHERE p) — the plain rewrite
             replaces the call with a non-aggregate expression that a

@@ -5,8 +5,9 @@ Batch ingest and compaction write a parquet directory partitioned by
 ``__bucket``, each row's segment start (__time floored to the
 segmentGranularity) as UTC yyyy-MM-dd'T'HH whatever the session zone, so key
 order is time order; the ``_druid_meta.json`` sidecar beside it records the
-segment granularity and the schema written, which the catalog reads the
-table with instead of inferring it from the files.  A listed segment is
+segment granularity and the schema written.  The catalog reads it once per
+datasource version, with the frame, and reads the table with the recorded
+schema instead of inferring it from the files.  A listed segment is
 [start, next bucket of that granularity): queries prune partitions by key
 range, and the timeline lists segments without reading a row.  A ``__bucket`` table with no recorded
 granularity is scanned like a plain table: no pruning, and its segments are
@@ -35,7 +36,6 @@ from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from incubator_druid_spark.catalog import TIME_COLUMN
 from incubator_druid_spark.model.granularity import Granularity, parse_granularity
@@ -79,7 +79,7 @@ def write_meta(path: str, meta: dict, append: bool = False) -> None:
     granularities are scanned like a plain table.  An append keeps the
     recorded schema only where it writes the same one."""
     if append:
-        old = _sidecar(path) or {}
+        old = read_sidecar(path) or {}
         if old and old.get("segmentGranularity") != meta["segmentGranularity"]:
             meta = {**meta, "segmentGranularity": None}
         if old.get("schema") != meta.get("schema"):
@@ -91,27 +91,16 @@ def write_meta(path: str, meta: dict, append: bool = False) -> None:
         pass  # non-local FS (s3/hdfs): the table is scanned like a plain one
 
 
-def recorded_schema(path: str) -> StructType | None:
-    """The schema the sidecar at ``path`` records for the table, or None."""
-    schema = (_sidecar(path) or {}).get("schema")
-    return StructType.fromJson(schema) if schema else None
-
-
 def read_meta(catalog, datasource) -> dict | None:
-    """The sidecar of a table datasource, or None."""
+    """The sidecar of a table datasource's current version, or None."""
     name = _table(datasource)
-    path = name in catalog and catalog._specs[name].path
-    return _sidecar(path) if path else None
+    return catalog.meta(catalog.table(name)) if name in catalog else None
 
 
-def segment_granularity(catalog, datasource) -> Granularity | None:
-    """The recorded segment granularity of a table datasource in this
-    layout, else None.  A table without the partition column in the
-    catalog's cached schema costs no file access."""
-    name = _table(datasource)
-    if name in catalog and BUCKET in catalog.schema(name).fieldNames():
-        return _granularity(read_meta(catalog, name))
-    return None
+def segment_granularity(catalog, src: DataFrame) -> Granularity | None:
+    """The recorded segment granularity of a datasource frame the catalog
+    resolved, if its table has this layout, else None."""
+    return _granularity(catalog.meta(src)) if BUCKET in src.columns else None
 
 
 def utc_day_segments(seg: Granularity | None) -> bool:
@@ -148,7 +137,8 @@ def _table(datasource) -> str | None:
     return datasource if isinstance(datasource, str) else None
 
 
-def _sidecar(path: str) -> dict | None:
+def read_sidecar(path: str) -> dict | None:
+    """The sidecar file beside the partitions at ``path``, or None."""
     try:
         with open(os.path.join(path, META_FILE)) as fh:
             return json.load(fh)
@@ -280,7 +270,7 @@ def _listed_timeline(src: DataFrame, files: list[str]) -> Timeline | None:
         roots.add(_local(m.group(1)))
         starts.add(int(t.replace(tzinfo=_UTC).timestamp() * 1000))
     root = roots.pop() if len(roots) == 1 else None
-    seg = root and _granularity(_sidecar(root))
+    seg = root and _granularity(read_sidecar(root))
     extent = seg and _footer_time_extent(files)
     return extent and Timeline(
         tuple(_segment(seg, s) for s in sorted(starts)), extent)

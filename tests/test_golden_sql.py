@@ -494,6 +494,16 @@ def test_strpos_textcat_human_strings(spark, foo_catalog):
     assert r["cat"] == "10.1!" and r["numish"] is True
 
 
+def test_div_truncates_toward_zero(spark, foo_catalog):
+    """DIV is Java long division (Function.java Div): a negative quotient
+    truncates toward zero, where a floor would give -4."""
+    r = q(spark, foo_catalog, """
+        SELECT DIV(-7, 2) AS a, DIV(7, -2) AS b, DIV(7, 2) AS c,
+               DIV(cnt * -7, 2) AS d
+        FROM foo WHERE dim1 = '10.1'""").first()
+    assert (r["a"], r["b"], r["c"], r["d"]) == (-3, -3, 3, -3)
+
+
 # ---------------------------------------------------------------------------
 # numfoo — typed numeric dimensions with nulls (CalciteTests.java:492-566);
 # SQL-compatible null mode: null is absent from aggregates and never equal
