@@ -433,79 +433,47 @@ def _millis_to_wall(millis: int) -> str:
 
 def _bind_parameters(sql: str, params: list) -> str:
     """Positional '?' binding (SqlParameter / SqlQuery.getParameterList) —
-    quote- and comment-aware so a '?' inside a string literal is data, not a
-    placeholder; string values have embedded quotes doubled."""
-    out: list[str] = []
+    a '?' binds only in code, so one inside a string literal, a quoted
+    identifier or a comment is left alone; string values have embedded
+    quotes doubled."""
+    from incubator_druid_spark.sql.functions import _code_sub
+
     it = iter(params)
-    bound = 0  # index of the next '?' (for the unbound-parameter message)
-    i, n = 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "'":  # string literal ('' is the escape)
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(sql[i:j + 1]); i = j + 1
-        elif c == '"':  # quoted identifier
-            j = sql.find('"', i + 1)
-            j = n - 1 if j < 0 else j
-            out.append(sql[i:j + 1]); i = j + 1
-        elif c == "-" and sql.startswith("--", i):  # line comment
-            j = sql.find("\n", i)
-            j = n if j < 0 else j
-            out.append(sql[i:j]); i = j
-        elif c == "/" and sql.startswith("/*", i):  # block comment
-            j = sql.find("*/", i + 2)
-            j = n if j < 0 else j + 2
-            out.append(sql[i:j]); i = j
-        elif c == "?":
-            try:
-                p = next(it)
-            except StopIteration:
-                # DruidPlanner's unbound-dynamic-param message
-                # (SqlParameterizerShuttle leaves the param in place and
-                # validation fails with this text)
-                raise ValueError(f"Parameter: [?{bound}] is not bound")
-            bound += 1
-            v = p.get("value") if isinstance(p, dict) else p
-            ptype = (p.get("type") or "").upper() if isinstance(p, dict) \
-                else ""
-            if v is None:
-                out.append("NULL")
-            elif ptype == "TIMESTAMP":
-                # SqlParameterizerShuttle.java:61-66 — a Long is epoch
-                # millis rendered as the UTC wall clock; a string is used
-                # verbatim as the TIMESTAMP literal body
-                if isinstance(v, bool):
-                    raise ValueError("invalid TIMESTAMP parameter")
-                if isinstance(v, (int, float)):
-                    out.append("TIMESTAMP '%s'" % _millis_to_wall(int(v)))
-                else:
-                    out.append("TIMESTAMP '%s'" % str(v).replace("'", "''"))
-            elif ptype == "DATE":
-                if isinstance(v, (int, float)) and not isinstance(v, bool):
-                    out.append("DATE '%s'" % _millis_to_wall(int(v))[:10])
-                else:
-                    out.append("DATE '%s'" % str(v).replace("'", "''"))
-            elif isinstance(v, bool):
-                out.append("TRUE" if v else "FALSE")
-            elif isinstance(v, str):
-                # Spark's parser interprets backslash escapes inside string
-                # literals, so a trailing '\' would escape the closing quote —
-                # double backslashes as well as quotes
-                out.append("'" + v.replace("\\", "\\\\").replace("'", "''")
-                           + "'")
-            else:
-                out.append(str(v))
-            i += 1
-        else:
-            out.append(c); i += 1
-    return "".join(out)
+
+    def bind(_m) -> str:
+        try:
+            p = next(it)
+        except StopIteration:
+            # DruidPlanner's unbound-dynamic-param message
+            # (SqlParameterizerShuttle leaves the param in place and
+            # validation fails with this text)
+            raise ValueError(f"Parameter: [?{len(params)}] is not bound")
+        v = p.get("value") if isinstance(p, dict) else p
+        ptype = (p.get("type") or "").upper() if isinstance(p, dict) else ""
+        if v is None:
+            return "NULL"
+        if ptype == "TIMESTAMP":
+            # SqlParameterizerShuttle.java:61-66 — a Long is epoch
+            # millis rendered as the UTC wall clock; a string is used
+            # verbatim as the TIMESTAMP literal body
+            if isinstance(v, bool):
+                raise ValueError("invalid TIMESTAMP parameter")
+            if isinstance(v, (int, float)):
+                return "TIMESTAMP '%s'" % _millis_to_wall(int(v))
+            return "TIMESTAMP '%s'" % str(v).replace("'", "''")
+        if ptype == "DATE":
+            if isinstance(v, (int, float)) and not isinstance(v, bool):
+                return "DATE '%s'" % _millis_to_wall(int(v))[:10]
+            return "DATE '%s'" % str(v).replace("'", "''")
+        if isinstance(v, bool):
+            return "TRUE" if v else "FALSE"
+        if isinstance(v, str):
+            # Spark's parser interprets backslash escapes inside string
+            # literals, so a trailing '\' would escape the closing quote —
+            # double backslashes as well as quotes
+            return "'" + v.replace("\\", "\\\\").replace("'", "''") + "'"
+        return str(v)
+    return _code_sub(sql, r"\?", bind)
 
 
 def _objects(rows, names, header):

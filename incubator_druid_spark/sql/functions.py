@@ -20,10 +20,18 @@ literal ISO period, the origin and the zone (the query's sqlTimeZone by
 default) are inlined as literals.  A NON-literal period (a period read from
 a column) picks among the common periods at run time and raises via
 raise_error on any other — never a silent NULL.
+
+Every text rewrite reads the query through one scanner.  ``_tokens`` splits
+it into code, string literals, quoted identifiers and comments;
+``_code_sub`` runs a regex on the matches that begin in code, and the call
+walker ``_rewrite_calls`` finds ``NAME(`` in code and splits its arguments
+at depth-1 commas over the same tokens.  The '?' binder of the SQL endpoint
+(api.py) is a ``_code_sub`` too.
 """
 
 from __future__ import annotations
 
+import bisect
 import functools
 import re
 import threading
@@ -501,9 +509,49 @@ def _register_metadata_views_inner(spark: SparkSession,
         .createOrReplaceTempView("sys_tasks")
 
 
-# (the canonical _literal_spans definition lives below, after
-# _apply_current_timestamp — a duplicate that used to sit here shadowed it
-# with drifted unterminated-literal clamping)
+# The one scanner of the dialect's text.  Every rewrite reads the text it
+# is handed through _tokens: a string literal ('' escapes), a quoted
+# identifier ("…" Calcite's, `…` Spark's) or a comment (-- or /* */) is one
+# token that no rewrite looks inside, and one left open runs to the end.
+_TOKEN = re.compile(r"""
+    (?P<lit>'[^']*(?:''[^']*)*'?)
+  | (?P<ident>"[^"]*(?:""[^"]*)*"?|`[^`]*(?:``[^`]*)*`?)
+  | (?P<comment>--[^\n]*|/\*.*?(?:\*/|\Z))
+""", re.S | re.X)
+
+
+def _tokens(sql: str) -> list[tuple[int, int, str]]:
+    """``sql`` as consecutive (start, end, kind) runs; kind is "code",
+    "lit", "ident" or "comment"."""
+    out, pos = [], 0
+    for m in _TOKEN.finditer(sql):
+        if m.start() > pos:
+            out.append((pos, m.start(), "code"))
+        out.append((m.start(), m.end(), m.lastgroup))
+        pos = m.end()
+    if pos < len(sql):
+        out.append((pos, len(sql), "code"))
+    return out
+
+
+def _token_index(toks, pos: int) -> int:
+    """The index of the token holding ``pos``."""
+    return bisect.bisect_right(toks, pos, key=lambda t: t[0]) - 1
+
+
+def _starts_code(toks, pos: int) -> bool:
+    """May a rewrite match begin at ``pos``: in code, or at the opening
+    quote of a literal or identifier (a pattern may embed one), never
+    inside either or inside a comment."""
+    start, _, kind = toks[_token_index(toks, pos)]
+    return kind == "code" or (kind != "comment" and start == pos)
+
+
+def _names_text(sql: str) -> str:
+    """The code and quoted identifiers of ``sql``: the text a table, view
+    or lookup name can appear in."""
+    return " ".join(sql[s:e] for s, e, kind in _tokens(sql)
+                    if kind in ("code", "ident"))
 
 
 # Nearest-preceding-keyword context classes for boolean matcher rewrites:
@@ -515,58 +563,127 @@ _CTX_KW = re.compile(r"(?i)\b(WHERE|HAVING|WHEN|THEN|ELSE|SELECT|AND|OR|NOT"
 _EXPR_KW = {"SELECT", "THEN", "ELSE", ",", "BY", "FROM", "RETURNING"}
 
 
-def _matcher_sub(sql: str, pattern: str, repl, *, filter_ctx_only: bool = False):
-    """re.sub whose matches must START outside string literals (patterns here
-    embed a quoted literal, so plain _outside_literals segmenting can't be
-    used).  With filter_ctx_only, additionally skip matches whose nearest
-    preceding keyword puts them in an expression (projection) context."""
-    spans = _literal_spans(sql)
+def _code_sub(sql: str, pattern: str, repl, *,
+              filter_ctx_only: bool = False) -> str:
+    """re.sub over the matches of ``pattern`` that begin where
+    ``_starts_code`` allows; a match is free to span a literal (the
+    patterns of the matcher rewrites embed one).  With filter_ctx_only,
+    additionally skip matches whose nearest preceding keyword puts them in
+    an expression (projection) context."""
+    toks = None
 
-    def in_literal(pos, strict=False):
-        # strict: a match may legitimately START at a literal's opening
-        # quote (the reversed 'lit' <> id form); only positions past the
-        # quote are "inside".
-        return any((s < pos if strict else s <= pos) and pos < e
-                   for s, e in spans)
-
-    out = sql
-    for m in reversed(list(re.finditer(pattern, sql))):
-        if in_literal(m.start(), strict=True):
-            continue
+    def sub(m):
+        nonlocal toks
+        toks = toks or _tokens(sql)
+        if not _starts_code(toks, m.start()):
+            return m.group(0)
         if filter_ctx_only:
             kw = None
             for km in _CTX_KW.finditer(sql, 0, m.start()):
-                if not in_literal(km.start()):
+                if _starts_code(toks, km.start()):
                     kw = km.group(0).upper()
             if kw in _EXPR_KW:
-                continue
-        rep = repl(m) if callable(repl) else m.expand(repl)
-        out = out[:m.start()] + rep + out[m.end():]
-    return out
+                return m.group(0)
+        return repl(m) if callable(repl) else m.expand(repl)
+    return re.sub(pattern, sub, sql)
 
 
-def _outside_literals(sql: str, fn):
-    """Apply ``fn`` to the segments of ``sql`` outside single-quoted string
-    literals ('' escapes) — regex-based name rewrites must never touch data."""
-    out, i, n = [], 0, len(sql)
-    seg_start = 0
-    while i < n:
-        if sql[i] == "'":
-            out.append(fn(sql[seg_start:i]))
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(sql[i:j + 1])
-            i = seg_start = j + 1
+_PUNCT = re.compile(r"[(\[\]),]")
+
+
+def _split_args(sql: str, toks, i: int) -> tuple[list[str], int] | None:
+    """The arguments of the bracket opened just before ``i``, split at its
+    depth-1 commas, and the index just past its closing bracket; None when
+    the text ends first.  Brackets and commas count in code only; a comment
+    inside an argument reads as one space."""
+    depth, args, piece = 1, [], []
+    for s, e, kind in toks[_token_index(toks, i):]:
+        s = max(s, i)
+        if kind != "code":
+            piece.append(" " if kind == "comment" else sql[s:e])
+            continue
+        for m in _PUNCT.finditer(sql, s, e):
+            c = m.group()
+            if c in "([":
+                depth += 1
+            elif c in ")]" and depth > 1:
+                depth -= 1
+            elif c in ")]" or depth == 1:
+                piece.append(sql[s:m.start()])
+                arg = "".join(piece).strip()
+                if c == "," or arg or args:
+                    args.append(arg)
+                if c != ",":
+                    return args, m.end()
+                piece, s = [], m.end()
+        piece.append(sql[s:e])
+    return None
+
+
+_FILTER = re.compile(r"(?is)\s*FILTER\s*\(\s*WHERE\b")
+
+
+def _rewrite_calls(sql: str, name: str, repl, *, bracket: str = "(",
+                   with_filter: bool = False) -> str:
+    """The call walker: rewrite every call ``name(...)`` that begins in
+    code via ``repl(args) -> str | None`` (None leaves the call untouched);
+    ``bracket="["`` walks ``name[...]`` instead.  Nested same-name calls
+    inside the arguments are rewritten first; replacement text is not
+    re-scanned; an unterminated call and everything after it pass through
+    verbatim.  With ``with_filter`` an aggregate's trailing ``FILTER (WHERE
+    p)`` is read too: ``repl(args, p)`` gets p (None without the clause),
+    and a non-None result replaces the clause with the call."""
+    pat = re.compile(rf"(?i)\b{name}\s*\{bracket}")
+    if not pat.search(sql):
+        return sql
+    close = "]" if bracket == "[" else ")"
+    toks = _tokens(sql)
+    out, pos = [], 0
+    for m in pat.finditer(sql):
+        if m.start() < pos or not _starts_code(toks, m.start()):
+            continue
+        got = _split_args(sql, toks, m.end())
+        if got is None:
+            break  # never invent a closing bracket the source lacks
+        args, end = got
+        # nested calls first, so an outer call left alone (repl → None)
+        # does not shadow a rewritable inner one: CAST(CAST('10.1' AS
+        # INTEGER) AS VARCHAR) needs only the inner truncating cast
+        args = [_rewrite_calls(a, name, repl, bracket=bracket,
+                               with_filter=with_filter) for a in args]
+        if with_filter:
+            fm = _FILTER.match(sql, end)
+            clause = fm and _split_args(sql, toks, fm.end())
+            pred = ", ".join(clause[0]) if clause else None
+            rep = repl(args, pred)
+            if rep is not None and clause:
+                end = clause[1]
         else:
-            i += 1
-    out.append(fn(sql[seg_start:]))
+            rep = repl(args)
+        out.append(sql[pos:m.start()])
+        out.append(m.group(0) + ", ".join(args) + close if rep is None
+                   else rep)
+        pos = end
+    out.append(sql[pos:])
     return "".join(out)
+
+
+def _split_keyword(text: str, kw: str) -> tuple[str, str] | None:
+    """``text`` split around its first keyword ``kw`` in code outside
+    brackets — FLOOR(x TO unit), POSITION(a IN b FROM c) — else None."""
+    pat = re.compile(rf"(?i)[(\[]|[)\]]|\b{kw}\b")
+    depth = 0
+    for s, e, kind in _tokens(text):
+        if kind != "code":
+            continue
+        for m in pat.finditer(text, s, e):
+            if m.group() in "([":
+                depth += 1
+            elif m.group() in ")]":
+                depth -= 1
+            elif not depth:
+                return text[:m.start()].strip(), text[m.end():].strip()
+    return None
 
 
 def _rewrite_aggregate_names(sql: str) -> str:
@@ -707,11 +824,8 @@ def _apply_current_timestamp(sql: str) -> str:
     if ts.microsecond:  # keep milliseconds (reference localNow has millis)
         ts_lit += ".%03d" % (ts.microsecond // 1000)
     d_lit = ts.strftime("%Y-%m-%d")
-    sql = _outside_literals(sql, lambda seg: re.sub(
-        r"(?i)\bCURRENT_TIMESTAMP\b", f"TIMESTAMP '{ts_lit}'", seg))
-    sql = _outside_literals(sql, lambda seg: re.sub(
-        r"(?i)\bCURRENT_DATE\b", f"DATE '{d_lit}'", seg))
-    return sql
+    sql = _code_sub(sql, r"(?i)\bCURRENT_TIMESTAMP\b", f"TIMESTAMP '{ts_lit}'")
+    return _code_sub(sql, r"(?i)\bCURRENT_DATE\b", f"DATE '{d_lit}'")
 
 
 def register_sql_view(name: str, sql: str) -> None:
@@ -724,159 +838,18 @@ def drop_sql_view(name: str) -> None:
     _SQL_VIEWS.pop(name, None)
 
 
-def _literal_spans(sql: str) -> list[tuple[int, int]]:
-    """[start, end) spans of single-quoted string literals ('' escapes)
-    AND of -- / /* */ comments: an apostrophe inside a comment must not
-    open a phantom literal that swallows real SQL from the rewrites, and
-    comment contents themselves are not rewritable text."""
-    spans, i, n = [], 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            spans.append((i, j + 1))
-            i = j + 1
-        elif ch == "-" and sql[i:i + 2] == "--":
-            j = sql.find("\n", i)
-            j = n if j < 0 else j
-            spans.append((i, j))
-            i = j
-        elif ch == "/" and sql[i:i + 2] == "/*":
-            j = sql.find("*/", i + 2)
-            j = n if j < 0 else j + 2
-            spans.append((i, j))
-            i = j
-        else:
-            i += 1
-    return spans
-
-
-def _in_spans(pos: int, spans) -> bool:
-    return any(a <= pos < b for a, b in spans)
-
-
-def _rewrite_calls(sql: str, name: str, repl) -> str:
-    """Rewrite every call of ``name(...)`` in ``sql`` via ``repl(args) ->
-    str | None`` (None leaves the call untouched).  Argument splitting is
-    paren- and quote-aware so nested calls and string literals pass through;
-    matches that START inside a string literal are data, not calls, and are
-    left alone; replacement text is not re-scanned."""
-    import re
-    pat = re.compile(rf"(?i)\b{name}\s*\(")
-    spans = _literal_spans(sql)
-    out, pos = [], 0
-    while True:
-        m = pat.search(sql, pos)
-        if not m:
-            out.append(sql[pos:])
-            return "".join(out)
-        if _in_spans(m.start(), spans):
-            out.append(sql[pos:m.end()])
-            pos = m.end()
-            continue
-        i, depth, inq = m.end(), 1, False
-        args, cur = [], []
-        while i < len(sql) and depth:
-            c = sql[i]
-            if inq:
-                cur.append(c)
-                if c == "'":
-                    inq = False
-            elif c == "'":
-                inq = True
-                cur.append(c)
-            elif c == "(":
-                depth += 1
-                cur.append(c)
-            elif c == ")":
-                depth -= 1
-                if depth:
-                    cur.append(c)
-            elif c == "," and depth == 1:
-                args.append("".join(cur).strip())
-                cur = []
-            else:
-                cur.append(c)
-            i += 1
-        if depth:
-            # unterminated call (scan hit end-of-string before the closing
-            # paren) — emit the original slice verbatim rather than invent a
-            # ')' that was never in the source
-            out.append(sql[pos:i])
-            pos = i
-            continue
-        tail = "".join(cur).strip()
-        if tail or args:
-            args.append(tail)
-        # rewrite nested same-name calls inside the extracted args FIRST, so
-        # an unmatched outer call (repl → None) doesn't shadow a rewritable
-        # inner one — e.g. CAST(CAST('10.1' AS INTEGER) AS VARCHAR), where
-        # only the inner cast needs the Druid truncating-cast rewrite
-        args = [_rewrite_calls(a, name, repl) for a in args]
-        rep = repl(args)
-        out.append(sql[pos:m.start()])
-        if rep is not None:
-            out.append(rep)
-        else:
-            # reconstruct from the (possibly arg-rewritten) pieces instead of
-            # emitting the original text verbatim
-            out.append(sql[m.start():m.end()] + ", ".join(args) + ")")
-        pos = i
-
-
 def _rewrite_array_literals(sql: str) -> str:
     """Calcite's ``ARRAY[...]`` constructor → Spark ``array(...)``
-    (ArrayConstructorOperatorConversion.java).  Quote- and nesting-aware;
-    nested ``ARRAY[ARRAY[..]]`` recurses."""
-    import re
-    pat = re.compile(r"(?i)\bARRAY\s*\[")
-    spans = _literal_spans(sql)
-    out, i, n = [], 0, len(sql)
-    while i < n:
-        m = pat.search(sql, i)
-        if not m:
-            out.append(sql[i:])
-            break
-        if _in_spans(m.start(), spans):
-            out.append(sql[i:m.end()])
-            i = m.end()
-            continue
-        out.append(sql[i:m.start()])
-        out.append("array(")
-        j, depth, inq = m.end(), 1, False
-        seg_start = j
-        while j < n and depth:
-            c = sql[j]
-            if inq:
-                if c == "'":
-                    inq = False
-            elif c == "'":
-                inq = True
-            elif c == "[":
-                depth += 1
-            elif c == "]":
-                depth -= 1
-            j += 1
-        inner = _rewrite_array_literals(sql[seg_start:j - 1])
-        # Druid's array constructor makes DOUBLE elements from decimal
-        # literals (ExprEval — there is no DECIMAL type); Spark would infer
-        # DECIMAL(p,s), which then refuses to mix with double columns
-        # (ARRAY_APPEND(ARRAY[1.2,2.2], d1)).  Cast in place, outside
-        # string literals.
-        inner = _outside_literals(inner, lambda seg: re.sub(
-            r"(?<![\w.])(\d+\.\d+(?:[eE][+-]?\d+)?)(?![\w.])",
-            r"CAST(\1 AS DOUBLE)", seg))
-        out.append(inner)
-        out.append(")")
-        i = j
-    return "".join(out)
+    (ArrayConstructorOperatorConversion.java); nested ``ARRAY[ARRAY[..]]``
+    too.  Druid's array constructor makes DOUBLE elements from decimal
+    literals (ExprEval — there is no DECIMAL type); Spark would infer
+    DECIMAL(p,s), which then refuses to mix with double columns
+    (ARRAY_APPEND(ARRAY[1.2,2.2], d1)), so those are cast in place."""
+    def repl(args):
+        return "array(" + ", ".join(
+            _code_sub(a, r"(?<![\w.])(\d+\.\d+(?:[eE][+-]?\d+)?)(?![\w.])",
+                      r"CAST(\1 AS DOUBLE)") for a in args) + ")"
+    return _rewrite_calls(sql, "ARRAY", repl, bracket="[")
 
 
 def _rewrite_array_agg(sql: str) -> str:
@@ -889,77 +862,24 @@ def _rewrite_array_agg(sql: str) -> str:
 
     The maxBytes argument (a sizing hint for Druid's buffer aggregator)
     is dropped — Spark grows aggregation buffers dynamically."""
-    import re
-    pat = re.compile(r"(?i)\bARRAY_AGG\s*\(")
-    spans = _literal_spans(sql)
-    out, pos, n = [], 0, len(sql)
-    while True:
-        m = pat.search(sql, pos)
-        if not m:
-            out.append(sql[pos:])
-            return "".join(out)
-        if _in_spans(m.start(), spans):
-            out.append(sql[pos:m.end()])
-            pos = m.end()
-            continue
-        out.append(sql[pos:m.start()])
-        i, depth, inq = m.end(), 1, False
-        args, cur = [], []
-        while i < n and depth:
-            c = sql[i]
-            if inq:
-                cur.append(c)
-                if c == "'":
-                    inq = False
-            elif c == "'":
-                inq = True
-                cur.append(c)
-            elif c == "(":
-                depth += 1
-                cur.append(c)
-            elif c == ")":
-                depth -= 1
-                if depth:
-                    cur.append(c)
-            elif c == "," and depth == 1:
-                args.append("".join(cur).strip())
-                cur = []
-            else:
-                cur.append(c)
-            i += 1
-        tail = "".join(cur).strip()
-        if tail or args:
-            args.append(tail)
-        expr = args[0] if args else ""
-        distinct = ""
+    def repl(args, pred):
+        if not args:
+            return None
+        distinct, expr = "", args[0]
         dm = re.match(r"(?is)^DISTINCT\s+(.*)$", expr)
         if dm:
             distinct, expr = "DISTINCT ", dm.group(1)
-        filt = ""
-        fm = re.match(r"(?is)\s*FILTER\s*\(", sql[i:])
-        if fm:
-            j, d2, q2 = i + fm.end(), 1, False
-            while j < n and d2:
-                c = sql[j]
-                if q2:
-                    if c == "'":
-                        q2 = False
-                elif c == "'":
-                    q2 = True
-                elif c == "(":
-                    d2 += 1
-                elif c == ")":
-                    d2 -= 1
-                j += 1
-            filt = " " + sql[i:j].strip()
-            i = j
         # zero aggregated rows → NULL like the reference (Spark's array_agg
         # yields an empty array there); the duplicated aggregate is
         # deduplicated by the planner's common-aggregate elimination
         agg = (f"transform(array_agg({distinct}named_struct('__v', {expr}))"
-               f"{filt}, __s -> __s.__v)")
-        out.append(f"CASE WHEN size({agg}) > 0 THEN {agg} ELSE NULL END")
-        pos = i
+               f"{_filter_clause(pred)}, __s -> __s.__v)")
+        return f"CASE WHEN size({agg}) > 0 THEN {agg} ELSE NULL END"
+    return _rewrite_calls(sql, "ARRAY_AGG", repl, with_filter=True)
+
+
+def _filter_clause(pred: str | None) -> str:
+    return "" if pred is None else f" FILTER (WHERE {pred})"
 
 
 def _is_array_text(arg: str, array_cols: frozenset = frozenset()) -> bool:
@@ -996,6 +916,30 @@ def _rewrite_array_functions(sql: str,
     """
     sql = _rewrite_array_literals(sql)
     sql = _rewrite_array_agg(sql)
+
+    # the type dispatch reads each argument while it still carries its
+    # Druid name: ARRAY_SLICE(...) is an array, its rewrite slice(...) is
+    # not recognisable as one
+    def contains_repl(a):
+        if len(a) != 2:
+            return None
+        arr, v = a
+        if _is_array_text(v, array_cols):
+            return f"forall({v}, __x -> array_contains({arr}, __x))"
+        return f"array_contains({arr}, {v})"
+    sql = _rewrite_calls(sql, "ARRAY_CONTAINS", contains_repl)
+    # MV_CONTAINS / MV_OVERLAP accept scalar OR array second arguments in
+    # Druid — same dispatch as the ARRAY_ forms
+    sql = _rewrite_calls(sql, "MV_CONTAINS", contains_repl)
+
+    def overlap_repl(a):
+        if len(a) != 2:
+            return None
+        arr, v = a
+        rhs = v if _is_array_text(v, array_cols) else f"array({v})"
+        return f"arrays_overlap({arr}, {rhs})"
+    sql = _rewrite_calls(sql, "ARRAY_OVERLAP", overlap_repl)
+    sql = _rewrite_calls(sql, "MV_OVERLAP", overlap_repl)
 
     def only(nargs, fmt):
         def repl(a):
@@ -1039,26 +983,6 @@ def _rewrite_array_functions(sql: str,
     # can't express it, so route through the same rewrite
     sql = _rewrite_calls(sql, "MV_SLICE", slice_repl)
 
-    def contains_repl(a):
-        if len(a) != 2:
-            return None
-        arr, v = a
-        if _is_array_text(v, array_cols):
-            return f"forall({v}, __x -> array_contains({arr}, __x))"
-        return f"array_contains({arr}, {v})"
-    sql = _rewrite_calls(sql, "ARRAY_CONTAINS", contains_repl)
-    # MV_CONTAINS / MV_OVERLAP accept scalar OR array second arguments in
-    # Druid — same dispatch as the ARRAY_ forms
-    sql = _rewrite_calls(sql, "MV_CONTAINS", contains_repl)
-
-    def overlap_repl(a):
-        if len(a) != 2:
-            return None
-        arr, v = a
-        rhs = v if _is_array_text(v, array_cols) else f"array({v})"
-        return f"arrays_overlap({arr}, {rhs})"
-    sql = _rewrite_calls(sql, "ARRAY_OVERLAP", overlap_repl)
-    sql = _rewrite_calls(sql, "MV_OVERLAP", overlap_repl)
     return sql
 
 
@@ -1125,8 +1049,7 @@ def _rewrite_time_buckets(sql: str, tz: str | None, origin_ms) -> str:
 
     names = ("TIME_SHIFT", "TIME_CEIL", "TIME_FLOOR")
     # Calcite-quoted calls arrive backtick-quoted from the identifier rewrite
-    sql = _outside_literals(sql, lambda seg: re.sub(
-        rf"(?i)`({'|'.join(names)})`(?=\s*\()", r"\1", seg))
+    sql = _code_sub(sql, rf"(?i)`({'|'.join(names)})`(?=\s*\()", r"\1")
     # a call nested in another name's operand is rewritten in each copy of
     # that operand, so an origin is evaluated once per text
     origin_ms = functools.cache(origin_ms)
@@ -1192,28 +1115,22 @@ _UNIT_PERIOD = {"SECOND": "PT1S", "MINUTE": "PT1M", "HOUR": "PT1H",
 def _rewrite_floor_ceil_to(sql: str) -> str:
     """FLOOR/CEIL(ts TO unit) → TIME_FLOOR/TIME_CEIL(ts, period), which
     the time-bucket rewrite then turns into the same text."""
-    import re
-    # operand may carry one nesting level: FLOOR(CAST(x AS TIMESTAMP) TO DAY)
-    operand = r"((?:[^()]|\([^()]*\))+?)"
-
     def to_call(fname):
-        def repl(m):
-            period = _UNIT_PERIOD.get(m.group(2).upper())
+        def repl(args):
+            parts = _split_keyword(args[0], "TO") if len(args) == 1 else None
+            if parts is None or not re.fullmatch(r"\w+", parts[1]):
+                return None
+            period = _UNIT_PERIOD.get(parts[1].upper())
             if period is None:
                 # TimeUnits.java maps only SECOND..YEAR; an unknown unit
                 # must raise like the reference's plan error
-                raise ValueError(f"{fname} … TO {m.group(2)}: unknown time "
+                raise ValueError(f"{fname} … TO {parts[1]}: unknown time "
                                  "unit")
-            return f"TIME_{fname}({m.group(1)}, '{period}')"
+            return f"TIME_{fname}({parts[0]}, '{period}')"
         return repl
 
-    # guard by match START position: a FLOOR( inside a string literal is
-    # data; an operand that merely CONTAINS a literal still rewrites
     for fname in ("FLOOR", "CEIL"):
-        spans = _literal_spans(sql)
-        sql = re.sub(rf"(?i)\b{fname}\s*\(\s*{operand}\s+TO\s+(\w+)\s*\)",
-                     lambda m, f=to_call(fname): m.group(0)
-                     if _in_spans(m.start(), spans) else f(m), sql)
+        sql = _rewrite_calls(sql, fname, to_call(fname))
     return sql
 
 
@@ -1284,16 +1201,14 @@ def _view_identity(spark: SparkSession, name: str) -> int:
 
 def _referenced_views(names: list[str], sql: str | None) -> list[str]:
     """The views or datasources among ``names`` a query COULD reference:
-    names appearing as a word in the SQL's non-literal text
+    names appearing as a word in the SQL's code or quoted identifiers
     (case-insensitive, as Spark resolves temp views).  Overmatching (a
     view name used as a column alias) only costs an extra check; a table
     cannot be referenced without its name appearing, so nothing is
     missed.  sql=None (defensive callers) checks everything."""
     if sql is None or not names:
         return list(names)
-    segs: list[str] = []
-    _outside_literals(sql, lambda s: (segs.append(s), s)[1])
-    text = " ".join(segs)
+    text = _names_text(sql)
     return [n for n in names
             if re.search(rf"(?i)\b{re.escape(n)}\b", text)]
 
@@ -1367,6 +1282,20 @@ def _exec_session(spark: SparkSession, tz: str,
     return clone
 
 
+def _backticked(ident: str) -> str:
+    """A Calcite "quoted" identifier ("" escapes) as a Spark `quoted` one;
+    one left open stays as it is."""
+    if len(ident) < 2 or ident[-1] != '"':
+        return ident
+    return "`" + ident[1:-1].replace('""', '"').replace("`", "``") + "`"
+
+
+# words after `lookup.<name>` / `view.<name>` that are not a table alias
+_ALIAS_STOP = {"on", "where", "group", "order", "limit", "union",
+               "intersect", "except", "inner", "left", "right", "full",
+               "cross", "join", "having", "natural", "using"}
+
+
 def druid_sql(spark: SparkSession, sql: str, catalog: Catalog | None = None,
               tz: str | None = None):
     """One-call Druid-flavored SQL entry: functions + views + execute.
@@ -1414,64 +1343,21 @@ def druid_sql(spark: SparkSession, sql: str, catalog: Catalog | None = None,
         register_views(catalog, tables)
         if re.search(r"(?i)\bINFORMATION_SCHEMA\s*\.|\bsys\s*\.", sql):
             register_metadata_views(spark, catalog)
-    def _dotted_names(seg: str) -> str:
-        seg = re.sub(r"(?i)\bINFORMATION_SCHEMA\s*\.\s*",
-                     "information_schema_", seg)
-        seg = re.sub(r"(?i)\bsys\s*\.\s*(segments|servers|tasks)",
-                     r"sys_\1", seg)
-        # Calcite exposes an unaliased `lookup.<name>` under its last name
-        # component (`lookyloo.k` resolves) — inject `AS <name>` unless the
-        # query supplies its own alias right after the table reference.
-        _kw = {"on", "where", "group", "order", "limit", "union", "intersect",
-               "except", "inner", "left", "right", "full", "cross", "join",
-               "having", "natural", "using"}
-
-        def _lookup_repl(m):
-            name = m.group(1)
-            nxt = re.match(r"\s*(\w+)", seg[m.end():])
-            if nxt and nxt.group(1).lower() not in _kw:
-                return f"lookup_{name}"  # AS or a user alias follows
-            return f"lookup_{name} AS {name}"
-
-        seg = re.sub(r"(?i)\blookup\s*\.\s*(\w+)", _lookup_repl, seg)
-
-        def _view_repl(m):
-            name = m.group(1)
-            nxt = re.match(r"\s*(\w+)", seg[m.end():])
-            if nxt and nxt.group(1).lower() not in _kw:
-                return f"view_{name}"
-            return f"view_{name} AS {name}"
-
-        seg = re.sub(r"(?i)\bview\s*\.\s*(\w+)", _view_repl, seg)
-        # `druid` is the default datasource schema (DruidSchema) — strip the
-        # qualifier so `druid.foo` resolves to the registered view `foo`.
-        return re.sub(r"(?i)\bdruid\s*\.\s*(\w+)", r"\1", seg)
-
     # Calcite identifier quoting (sql/.../planner/DruidPlanner — Calcite's
     # default DOUBLE_QUOTE quoting, "" escapes): convert to Spark backticks.
-    # Runs outside single-quoted string literals only, so a literal like
-    # 'say "hi"' stays data.
-    def _quoted_idents(seg: str) -> str:
-        return re.sub(
-            r'"((?:[^"]|"")*)"',
-            lambda m: "`" + m.group(1).replace('""', '"').replace("`", "``")
-            + "`",
-            seg)
-
-    sql = _outside_literals(sql, _quoted_idents)
+    sql = "".join(
+        _backticked(sql[s:e]) if kind == "ident" and sql[s] == '"'
+        else sql[s:e] for s, e, kind in _tokens(sql))
     # lookup schema (sql/.../schema/LookupSchema.java): every registered
     # lookup is a two-column (k, v) STRING table named lookup.<name> —
     # registered here as a broadcast-size temp view, dotted name rewritten.
-    # All dotted-name rewrites run OUTSIDE string literals only.
-    outside_segments: list[str] = []
-    _outside_literals(sql, lambda s: (outside_segments.append(s), s)[1])
+    names_text = _names_text(sql)
     # lookups that can actually be an EARLIEST/LATEST target — those read as
     # a FROM datasource, not join-side references (whose star-expansion
     # schema must stay the two-column (k, v) contract)
     _from_lookups = set(re.findall(r"(?i)\bFROM\s+lookup\s*\.\s*(\w+)",
-                                   " ".join(outside_segments)))
-    for lk in set(re.findall(r"(?i)\blookup\s*\.\s*(\w+)",
-                             " ".join(outside_segments))):
+                                   names_text))
+    for lk in set(re.findall(r"(?i)\blookup\s*\.\s*(\w+)", names_text)):
         from incubator_druid_spark.functions.lookups import (_lookup_frame,
                                                              get_lookup,
                                                              is_df_lookup)
@@ -1492,8 +1378,7 @@ def druid_sql(spark: SparkSession, sql: str, catalog: Catalog | None = None,
             continue
         mapping = get_lookup(lk)  # KeyError on unknown lookup = clear error
         if lk in _from_lookups and re.search(
-                r"(?i)\b(?:EARLIEST|LATEST)(?:_BY)?\s*\(",
-                " ".join(outside_segments)):
+                r"(?i)\b(?:EARLIEST|LATEST)(?:_BY)?\s*\(", names_text):
             # EARLIEST/LATEST read __time, which a lookup table lacks; the
             # reference's lookup segments read the missing column as a
             # constant, so first/last degrade to map ITERATION order
@@ -1511,12 +1396,28 @@ def druid_sql(spark: SparkSession, sql: str, catalog: Catalog | None = None,
     # a registered SQL macro exposed as table view.<name>; planned here
     # through the same druid_sql pipeline (views can reference lookups,
     # druid.<table>, even other views) and registered as a temp view
-    for vw in set(re.findall(r"(?i)\bview\s*\.\s*(\w+)",
-                             " ".join(outside_segments))):
+    for vw in set(re.findall(r"(?i)\bview\s*\.\s*(\w+)", names_text)):
         vsql = _SQL_VIEWS[vw]  # KeyError on unknown view = clear error
         druid_sql(spark, vsql, catalog, tz) \
             .createOrReplaceTempView(f"view_{vw}")
-    sql = _outside_literals(sql, _dotted_names)
+    sql = _code_sub(sql, r"(?i)\bINFORMATION_SCHEMA\s*\.\s*",
+                    "information_schema_")
+    sql = _code_sub(sql, r"(?i)\bsys\s*\.\s*(segments|servers|tasks)",
+                    r"sys_\1")
+
+    # Calcite exposes an unaliased `lookup.<name>` (or `view.<name>`) under
+    # its last name component (`lookyloo.k` resolves) — inject `AS <name>`
+    # unless the query supplies its own alias right after the reference.
+    def _schema_repl(m):
+        table = f"{m.group(1).lower()}_{m.group(2)}"
+        nxt = re.match(r"\s*(\w+)", m.string[m.end():])
+        if nxt and nxt.group(1).lower() not in _ALIAS_STOP:
+            return table  # AS or a user alias follows
+        return f"{table} AS {m.group(2)}"
+    sql = _code_sub(sql, r"(?i)\b(lookup|view)\s*\.\s*(\w+)", _schema_repl)
+    # `druid` is the default datasource schema (DruidSchema) — strip the
+    # qualifier so `druid.foo` resolves to the registered view `foo`.
+    sql = _code_sub(sql, r"(?i)\bdruid\s*\.\s*(\w+)", r"\1")
     sql = _rewrite_floor_ceil_to(sql)
     sql = _rewrite_date_trunc(sql)
     sql = _rewrite_time_tz(sql)
@@ -1546,50 +1447,16 @@ def druid_sql(spark: SparkSession, sql: str, catalog: Catalog | None = None,
     # testExactCountDistinct expects 3 for dim2's {'a','','abc'}), while a
     # bare Spark count-distinct over the array column would count distinct
     # ARRAYS.  collect_set bounds state by distinct arrays, then
-    # flatten+distinct counts the value universe; null elements drop.
+    # flatten+distinct counts the value universe; null elements drop.  The
+    # result is not an aggregate a trailing FILTER (WHERE p) can attach to,
+    # so p folds into the collect_set (non-matching rows add no arrays).
     if catalog is not None:
-        def _mvd_filter_form(s, fname):
-            """COUNT(DISTINCT <mvd>) FILTER (WHERE p) — the plain rewrite
-            replaces the call with a non-aggregate expression that a
-            trailing FILTER clause can't attach to; fold the predicate
-            into the collect_set instead (non-matching rows contribute no
-            arrays)."""
-            pat = re.compile(
-                rf"(?is)\b{fname}\s*\(\s*(?:DISTINCT\s+)?([A-Za-z_]\w*)"
-                rf"\s*\)\s*FILTER\s*\(\s*WHERE\b")
-            out, pos = [], 0
-            spans0 = _literal_spans(s)
-            while True:
-                m0 = pat.search(s, pos)
-                if m0 is None:
-                    out.append(s[pos:])
-                    break
-                if _in_spans(m0.start(), spans0) \
-                        or m0.group(1) not in mvd_cols:
-                    out.append(s[pos:m0.end()])
-                    pos = m0.end()
-                    continue
-                depth, j = 1, m0.end()
-                while j < len(s) and depth:
-                    if s[j] == "(" and not _in_spans(j, spans0):
-                        depth += 1
-                    elif s[j] == ")" and not _in_spans(j, spans0):
-                        depth -= 1
-                    j += 1
-                pred = s[m0.end():j - 1]
-                c = m0.group(1)
-                out.append(s[pos:m0.start()])
-                out.append(
-                    f"CAST(size(filter(array_distinct(flatten(collect_set("
-                    f"CASE WHEN ({pred}) THEN {c} END))), "
-                    f"x -> x IS NOT NULL)) AS BIGINT)")
-                pos = j
-            return "".join(out)
+        def _mvd_values(c, pred):
+            v = c if pred is None else f"CASE WHEN ({pred}) THEN {c} END"
+            return (f"CAST(size(filter(array_distinct(flatten("
+                    f"collect_set({v}))), x -> x IS NOT NULL)) AS BIGINT)")
 
-        sql = _mvd_filter_form(sql, "COUNT")
-        sql = _mvd_filter_form(sql, "APPROX_COUNT_DISTINCT")
-
-        def _cd_mvd_repl(a):
+        def _cd_mvd_repl(a, pred):
             if len(a) != 1:
                 return None
             m = re.match(r"(?is)^\s*DISTINCT\s+([A-Za-z_]\w*)\s*$", a[0])
@@ -1604,18 +1471,17 @@ def druid_sql(spark: SparkSession, sql: str, catalog: Catalog | None = None,
                     f"APPROX_COUNT_DISTINCT({m.group(1)}) to merge the "
                     "stored sketch state")
             if m and m.group(1) in mvd_cols:
-                c = m.group(1)
-                return (f"CAST(size(filter(array_distinct(flatten("
-                        f"collect_set({c}))), x -> x IS NOT NULL)) AS BIGINT)")
+                return _mvd_values(m.group(1), pred)
             # COUNT(<mvd>): Druid counts rows with at least one value — []
             # and null both read as "no values" (testCountNullableColumn,
             # testFilteredAggregations expect 4 / 3 in sql mode), while
             # Spark's COUNT(array) would count [] as a non-null array.
             m2 = re.match(r"(?is)^\s*([A-Za-z_]\w*)\s*$", a[0])
             if m2 and m2.group(1) in mvd_cols:
-                return f"COUNT(CASE WHEN size({m2.group(1)}) > 0 THEN 1 END)"
+                return (f"COUNT(CASE WHEN size({m2.group(1)}) > 0 THEN 1 END)"
+                        f"{_filter_clause(pred)}")
             return None
-        sql = _rewrite_calls(sql, "COUNT", _cd_mvd_repl)
+        sql = _rewrite_calls(sql, "COUNT", _cd_mvd_repl, with_filter=True)
 
         # APPROX_COUNT_DISTINCT(<mvd>) — the cardinality aggregator counts
         # the VALUE universe of the multi-value dimension, not distinct
@@ -1623,15 +1489,13 @@ def druid_sql(spark: SparkSession, sql: str, catalog: Catalog | None = None,
         # dim2's {a, '', abc}); computed exact like the COUNT(DISTINCT)
         # rewrite above.  Runs before the generic aggregate-name rewrite,
         # which keeps scalar inputs on approx_count_distinct.
-        def _acd_mvd_repl(a):
+        def _acd_mvd_repl(a, pred):
             if len(a) != 1:
                 return None
             m = re.match(r"(?is)^\s*(?:DISTINCT\s+)?([A-Za-z_]\w*)\s*$",
                          a[0])
             if m and m.group(1) in mvd_cols:
-                c = m.group(1)
-                return (f"CAST(size(filter(array_distinct(flatten("
-                        f"collect_set({c}))), x -> x IS NOT NULL)) AS BIGINT)")
+                return _mvd_values(m.group(1), pred)
             if m and m.group(1) in bin_cols:
                 # COMPLEX hyperUnique column (rollup-stored HLL state):
                 # union the stored sketches like the native hyperUnique
@@ -1639,9 +1503,11 @@ def druid_sql(spark: SparkSession, sql: str, catalog: Catalog | None = None,
                 # allowDifferentLgConfigK=true, matching the native binary
                 # path — segments may be written with mixed lgK settings
                 return ("CAST(round(hll_sketch_estimate("
-                        f"hll_union_agg({m.group(1)}, true))) AS BIGINT)")
+                        f"hll_union_agg({m.group(1)}, true)"
+                        f"{_filter_clause(pred)})) AS BIGINT)")
             return None
-        sql = _rewrite_calls(sql, "APPROX_COUNT_DISTINCT", _acd_mvd_repl)
+        sql = _rewrite_calls(sql, "APPROX_COUNT_DISTINCT", _acd_mvd_repl,
+                             with_filter=True)
 
         # Scalar =/<> comparisons over an MVD: Calcite types the column
         # VARCHAR and the native selector ANY-matches elements; <> is the
@@ -1664,7 +1530,7 @@ def druid_sql(spark: SparkSession, sql: str, catalog: Catalog | None = None,
         # out-of-bounds under ANSI — rewrite to the null-safe `get()`,
         # whose semantics equal non-ANSI `[i]` in BOTH session modes.
         for _c in mvd_cols:
-            sql = _matcher_sub(
+            sql = _code_sub(
                 sql,
                 rf"(?P<col>\b(?:\w+\.)?{_c})\s*\[\s*(?P<idx>\d+)\s*\]",
                 lambda m: f"get({m.group('col')}, {m.group('idx')})")
@@ -1678,13 +1544,13 @@ def druid_sql(spark: SparkSession, sql: str, catalog: Catalog | None = None,
         mvd_cols = {c for c in mvd_cols
                     if not re.search(rf"(?is)\bAS\s+{c}\b", sql)}
         for _c in mvd_cols:
-            sql = _matcher_sub(
+            sql = _code_sub(
                 sql,
                 rf"(?P<col>\b(?:\w+\.)?{_c})\s*(?P<op>=|<>|!=)\s*"
                 rf"(?P<lit>'(?:[^']|'')*'|"
                 rf"(?<![\w.])-?\d+(?:\.\d+)?(?![\w.]))",
                 _mvd_cmp_repl)
-            sql = _matcher_sub(
+            sql = _code_sub(
                 sql,
                 rf"(?P<lit>'(?:[^']|'')*'|"
                 rf"(?<![\w.])-?\d+(?:\.\d+)?(?![\w.]))\s*"
@@ -1757,19 +1623,19 @@ def druid_sql(spark: SparkSession, sql: str, catalog: Catalog | None = None,
                 out_p.append(c)
                 i += 1
         return f"LIKE '{''.join(out_p)}' ESCAPE '{esc}'"
-    sql = re.sub(r"(?is)\bLIKE\s+'((?:[^']|'')*)'\s+ESCAPE\s+'(.)'",
-                 _like_escape_fix, sql)
+    sql = _code_sub(sql, r"(?is)\bLIKE\s+'((?:[^']|'')*)'\s+ESCAPE\s+'(.)'",
+                    _like_escape_fix)
 
     # POSITION(needle IN haystack FROM start) — Spark's parser accepts only
     # the 2-operand IN form; the FROM variant maps to the 3-arg function
     # (PositionOperatorConversion.java)
-    sql = re.sub(
-        r"(?is)\bPOSITION\s*\(\s*((?:[^()']|'(?:[^']|'')*'|\([^()]*\))+?)"
-        r"\s+IN\s+((?:[^()']|'(?:[^']|'')*'|\([^()]*\))+?)"
-        r"\s+FROM\s+((?:[^()']|'(?:[^']|'')*'|\([^()]*\))+?)\s*\)",
-        lambda m: (m.group(0) if _in_spans(m.start(), _literal_spans(sql))
-                   else f"position({m.group(1)}, {m.group(2)}, {m.group(3)})"),
-        sql)
+    def _position_repl(a):
+        needle = _split_keyword(a[0], "IN") if len(a) == 1 else None
+        rest = needle and _split_keyword(needle[1], "FROM")
+        if not rest:
+            return None
+        return f"position({needle[0]}, {rest[0]}, {rest[1]})"
+    sql = _rewrite_calls(sql, "POSITION", _position_repl)
 
     # LTRIM/RTRIM(expr, chars) (LTrimOperatorConversion — the Postgres
     # argument order) vs Spark's 2-arg (trimStr, str): swap
@@ -1835,41 +1701,32 @@ def druid_sql(spark: SparkSession, sql: str, catalog: Catalog | None = None,
     #   GROUP BY ()                        → global aggregate (drop clause)
     #   ESCAPE '\'                         → backslash needs doubling in
     #                                        Spark string literals
-    sql = _outside_literals(sql, lambda seg: re.sub(
-        r"(?i)\bAS\s+VARCHAR\s*\)", "AS STRING)", seg))
-    sql = _outside_literals(sql, lambda seg: re.sub(
-        r"(?i)\bGROUP\s+BY\s*\(\s*\)", "", seg))
+    sql = _code_sub(sql, r"(?i)\bAS\s+VARCHAR\s*\)", "AS STRING)")
+    sql = _code_sub(sql, r"(?i)\bGROUP\s+BY\s*\(\s*\)", "")
     # GROUP BY <string literal> — Druid plans this as a granularity-ALL
     # timeseries, which emits its single bucket even when no rows match
     # (testGroupByWithFilterMatchingNothingWithGroupByLiteral expects one
     # (0, null) row); Spark's literal grouping yields zero groups on empty
     # input.  Dropping the clause turns it into the same global aggregate.
     # Integer "literals" are ordinals in this dialect — never touched.
-    # (the pattern itself spans a string literal, so _outside_literals can't
-    # host it — instead require the MATCH START to sit outside literal spans,
-    # protecting literals whose contents happen to contain "GROUP BY '...'")
-    _gb_spans = _literal_spans(sql)
-    sql = re.sub(r"(?i)\bGROUP\s+BY\s+'(?:[^']|'')*'(?=\s*(?:HAVING|ORDER"
-                 r"|LIMIT|OFFSET|UNION|INTERSECT|EXCEPT|\)|$))",
-                 lambda m: m.group(0) if _in_spans(m.start(), _gb_spans)
-                 else "", sql)
-    sql = sql.replace(r"ESCAPE '\'", r"ESCAPE '\\'")
+    sql = _code_sub(sql, r"(?i)\bGROUP\s+BY\s+'(?:[^']|'')*'(?=\s*(?:HAVING"
+                    r"|ORDER|LIMIT|OFFSET|UNION|INTERSECT|EXCEPT|\)|$))", "")
+    sql = _code_sub(sql, r"ESCAPE '\\'", r"ESCAPE '\\\\'")
     # STRING_FORMAT is variadic (StringFormatOperatorConversion.java) — SQL
     # UDFs have fixed arity, so map the name to Spark's format_string
-    sql = _outside_literals(sql, lambda seg: re.sub(
-        r"(?i)\bSTRING_FORMAT\s*\(", "format_string(", seg))
+    sql = _code_sub(sql, r"(?i)\bSTRING_FORMAT\s*\(", "format_string(")
     # Druid FILTERS are two-valued matchers even from SQL: `x <> 'z'` plans
     # as not(selector(x, 'z')) which MATCHES null values
     # (testCountStarOnView counts the substring-null row under
     # dim1_firstchar <> 'z').  Rewrite identifier-vs-string-literal
     # inequality into its matcher form; expression contexts where Druid's
     # own != would yield null are not identifier-vs-literal shapes.
-    sql = _matcher_sub(
+    sql = _code_sub(
         sql,
         r"(?P<id>\b[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)?)\s*(?:<>|!=)\s*"
         r"(?P<lit>'(?:[^']|'')*')",
         r"(NOT coalesce(\g<id> = \g<lit>, false))", filter_ctx_only=True)
-    sql = _matcher_sub(
+    sql = _code_sub(
         sql,
         r"(?P<lit>'(?:[^']|'')*')\s*(?:<>|!=)\s*"
         r"(?P<id>\b[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)?)\b",

@@ -1082,17 +1082,3 @@ def test_nested_integer_cast(spark, foo_catalog):
                CAST('10.1' AS INTEGER) AS i
     """).first()
     assert (r["v"], r["p"], r["i"]) == ("10", 2, 10)
-
-
-def test_rewrite_calls_unterminated_passthrough():
-    """An unbalanced call (end-of-string before the closing paren) passes
-    through VERBATIM — the rewriter must not invent a ')' that was never in
-    the source, nor normalize the argument whitespace of the broken call."""
-    from incubator_druid_spark.sql.functions import _rewrite_calls
-
-    src = "SELECT STRPOS(x,  'a'"          # unterminated, odd spacing
-    assert _rewrite_calls(src, "strpos", lambda a: None) == src
-    # a terminated call BEFORE the broken one still rewrites
-    src2 = "STRPOS(a, b) + STRPOS(c"
-    out = _rewrite_calls(src2, "strpos", lambda a: f"instr({', '.join(a)})")
-    assert out == "instr(a, b) + STRPOS(c"
